@@ -742,22 +742,23 @@ def run_benchmarks(
     return out
 
 
-def compact_summary(out: dict) -> dict:
-    """A SECOND, small trailing record (r12, verdict #5): the full JSON
-    line overflows the driver's 2,000-char tail capture, leaving
-    ``parsed: null`` even on a clean run.  This line carries the
-    headline value plus per-group totals and is pinned < 1,500 chars by
-    test, so ANY tail capture ends with parseable numbers.
+# the compact line's size limit, below a 2,000-char tail capture
+COMPACT_LINE_CAP = 1500
 
-    r17 measurement fix: the driver parses the LAST JSON line, and this
-    record carried NO per-key ``queries`` dict — so PERF_r16 recorded
-    ``n_common: 0`` / empty ``scaling.per_query`` and the driver's
-    low-core-count scaling comparison had nothing to chew on.  The
-    compact line now carries ``queries`` = the headline per-key walls
-    plus the analytics per-key walls (additions only — the headline
-    names/methodology are unchanged; the full line keeps them under
-    their original groups too).  Measured size with the real board:
-    ~1,180 chars, still under both caps."""
+
+def compact_summary(out: dict) -> dict:
+    """A second, small trailing record: the full JSON line overflows a
+    2,000-char tail capture, and a reader that parses the last JSON
+    line must still get numbers.  It carries the headline value, the
+    per-group totals and ``queries``: the per-key walls of the headline
+    keys plus the analytics keys (the two groups must not share a key,
+    or one wall would silently replace the other).
+
+    The serialized record stays under ``COMPACT_LINE_CAP`` chars: if a
+    larger board pushes it over, per-key entries are dropped in
+    reverse name order (the same keys whatever the timings) and their
+    number is recorded as ``queries_dropped``.  Measured size with the
+    real 19-key board (12 headline + 7 analytics keys): ~960 chars."""
 
     def total(group) -> float | None:
         if not isinstance(group, dict) or "error" in group:
@@ -772,14 +773,17 @@ def compact_summary(out: dict) -> dict:
             k: v for k, v in group.items() if isinstance(v, (int, float))
         }
 
+    heads, anas = numeric(out.get("queries")), numeric(out.get("analytics"))
+    shared = sorted(set(heads) & set(anas))
+    if shared:
+        raise ValueError(f"keys in both queries and analytics: {shared}")
     c: dict = {
         "compact": True,
         "metric": out.get("metric"),
         "value": out.get("value"),
         "unit": out.get("unit"),
         "sf": out.get("sf"),
-        "queries": {**numeric(out.get("queries")),
-                    **numeric(out.get("analytics"))},
+        "queries": {**heads, **anas},
         "groups": {
             "queries_total": total(out.get("queries")),
             "analytics_total": total(out.get("analytics")),
@@ -811,6 +815,10 @@ def compact_summary(out: dict) -> dict:
         c["groups"]["sf1_probe_keys"] = len(probe.get("keys", probe))
     if out.get("fatal"):
         c["fatal"] = out["fatal"][:200]
+    drop = sorted(c["queries"], reverse=True)
+    while drop and len(json.dumps(c)) >= COMPACT_LINE_CAP:
+        del c["queries"][drop.pop(0)]
+        c["queries_dropped"] = c.get("queries_dropped", 0) + 1
     return c
 
 

@@ -211,6 +211,9 @@ class QueryCompiler:
         # Inline mode: scan-level predicates compile variant access
         # inline (one use, pre-join) instead of via shared helpers.
         self._inline = False
+        # "alias.column" -> an earlier column a pattern join equates it
+        # to (``_add_hop``); the paging order skips such redundant keys.
+        self._same: dict[str, str] = {}
 
     # ------------------------------------------------------------------
     # shared variant helper columns
@@ -286,17 +289,28 @@ class QueryCompiler:
             # (source_id, relationship_id) — a true primary key; sorting
             # on relationship_id alone would make tied rows
             # interchangeable and let the boundary-dup skip drop or
-            # double-serve rows across pages.
+            # double-serve rows across pages.  A key a join equates to
+            # an earlier key (a hop's near endpoint = the previous
+            # twin's key) adds no order and is skipped.
+            seen: set[str] = set()
             for b in env.values():
-                if b.kind == "twin":
-                    # a virtual (join-eliminated) binding's key_col is
-                    # the adjacent edge's endpoint — same VALUES as the
-                    # twin's dt_id, so the page order is unchanged
-                    keys.append(F.col(f"{b.df_alias}.{b.key_col}"))
-                else:
-                    keys.append(F.col(f"{b.df_alias}.source_id"))
-                    keys.append(F.col(f"{b.df_alias}.relationship_id"))
-            df = df.orderBy(*keys)
+                # a virtual (join-eliminated) binding's key_col is the
+                # adjacent edge's endpoint — same VALUES as the twin's
+                # dt_id, so the page order is unchanged
+                names = (
+                    [f"{b.df_alias}.{b.key_col}"]
+                    if b.kind == "twin"
+                    else [f"{b.df_alias}.source_id", f"{b.df_alias}.relationship_id"]
+                )
+                for name in names:
+                    same = self._same.get(name, name)
+                    if same not in seen:
+                        seen.add(same)
+                        keys.append(F.col(name))
+            # a paging client sorts each page itself (a top-N over the
+            # __pk columns); only TOP needs the order inside the plan
+            if query.top is not None:
+                df = df.orderBy(*keys)
         # Paging exposes the sort keys as hidden ``__pk{i}`` columns so
         # the client can issue KEYSET continuations (filter > last-key
         # instead of re-executing an O(offset) slice); the client strips
@@ -581,6 +595,7 @@ class QueryCompiler:
                 rel_df,
                 F.col(f"{e.df_alias}.{near}") == lcol,
             )
+            self._equate(f"{e.df_alias}.{near}", f"{left.df_alias}.{left.key_col}")
         if existing_right is not None:
             # pattern chain revisits an alias: (a)-[..]->(b),(b)-[..]->(c)
             rcol = F.col(
@@ -593,6 +608,10 @@ class QueryCompiler:
                 )
             else:
                 df = df.filter(F.col(f"{e.df_alias}.{far}") == rcol)
+                self._equate(
+                    f"{e.df_alias}.{far}",
+                    f"{existing_right.df_alias}.{existing_right.key_col}",
+                )
             return df, existing_right
         if far is None:
             # undirected: no single far column to anchor on — always
@@ -636,7 +655,13 @@ class QueryCompiler:
             self._scan(frame, t),
             F.col(f"{e.df_alias}.{far}") == F.col(f"{t.df_alias}.dt_id"),
         )
+        self._equate(f"{t.df_alias}.dt_id", f"{e.df_alias}.{far}")
         return df, t
+
+    def _equate(self, col: str, earlier: str) -> None:
+        """Record that an inner equi-join makes ``col`` equal to the
+        already-bound column ``earlier`` on every result row."""
+        self._same[col] = self._same.get(earlier, earlier)
 
     # ------------------------------------------------------------------
     # expression compilation

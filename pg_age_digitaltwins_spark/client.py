@@ -13,7 +13,9 @@ from __future__ import annotations
 import base64
 import json
 import re
+import threading
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Any
 
@@ -81,12 +83,12 @@ def _jsonable(v):
 
 
 def _cypher_paging_order(df: DataFrame):
-    """Impose a deterministic total order on an un-ORDERed Cypher
-    result for paging: typed (orderable) output columns sort natively —
-    and first, so ties rarely reach the expensive ones — while complex
-    columns (variant/array/struct) sort through a string rendering
-    added as hidden ``__ks{i}`` columns.  Returns (ordered df, the sort
-    column names) so the pager can keyset on exactly the same order."""
+    """A deterministic total order for paging an un-ORDERed Cypher
+    result: typed (orderable) output columns sort natively — and first,
+    so ties rarely reach the expensive ones — while complex columns
+    (variant/array/struct) sort through a string rendering added as
+    hidden ``__ks{i}`` columns.  Returns (df with those columns, the
+    sort column names); the pager sorts each page on exactly them."""
     from pyspark.sql import functions as F, types as T
 
     native_types = (
@@ -100,32 +102,30 @@ def _cypher_paging_order(df: DataFrame):
     for i, c in enumerate(complex_):
         df = df.withColumn(f"__ks{i}", F.col(c).cast("string"))
         sort_cols.append(f"__ks{i}")
-    return df.orderBy(*sort_cols), sort_cols
+    return df, sort_cols
 
 
 def _keyset_ge(cols: list, vals: list):
     """Lexicographic ``(cols) >= (vals)`` under Spark's default
     ascending-nulls-first order (``a > lit(v)`` is null-safe false for
-    null ``a``, which is exactly nulls-first semantics)."""
+    null ``a``, which is exactly nulls-first semantics), in the nested
+    O(k) form ``c0 > v0 OR (c0 = v0 AND (c1 > v1 OR ...))``.  A
+    leading ``c0 >= v0`` conjunct (implied by the rest) is a plain
+    column-vs-literal bound that cached-batch and file min/max
+    statistics can prune on."""
     from pyspark.sql import functions as F
 
-    def gt(c, v):
-        return c.isNotNull() if v is None else c > F.lit(v)
-
-    def eq(c, v):
-        return c.isNull() if v is None else c == F.lit(v)
-
-    or_terms = []
-    prefix_eq = None
-    for c, v in zip(cols, vals):
-        term = gt(c, v) if prefix_eq is None else prefix_eq & gt(c, v)
-        or_terms.append(term)
-        prefix_eq = eq(c, v) if prefix_eq is None else prefix_eq & eq(c, v)
-    or_terms.append(prefix_eq)
-    pred = or_terms[0]
-    for t in or_terms[1:]:
-        pred = pred | t
-    return pred
+    pred = None
+    for c, v in reversed(list(zip(cols, vals))):
+        if v is None:
+            gt, eq = c.isNotNull(), c.isNull()
+        else:
+            lit = F.lit(v)
+            gt, eq = c > lit, c == lit
+        pred = gt | (eq if pred is None else eq & pred)
+    if vals[0] is None:  # every value is >= null under nulls-first
+        return pred
+    return (cols[0] >= F.lit(vals[0])) & pred
 
 
 def _token_encode_val(v):
@@ -183,14 +183,37 @@ def compute_query_charge(
     return charge
 
 
+# Cache caps.  A plan is a small lazy object; a paged result is a
+# persisted copy of a whole query answer, so only the few queries a
+# session is paging through at once keep one.  The cap counts entries,
+# not bytes: a paged full scan keeps the whole scan (memory, spilling
+# to disk).
+_PLAN_CACHE_CAP = 64
+_RESULT_CACHE_CAP = 8
+
+
+@dataclass
+class _PagedResult:
+    """A paged query's answer, persisted with its paging keys."""
+
+    store: GraphStore  # the snapshot it was computed from
+    df: DataFrame  # persisted; unordered unless offset-paged
+    sort_cols: list[str]  # keyset columns; empty → offset paging
+
+
 class DigitalTwinsSparkClient:
     def __init__(self, store: GraphStore, graph_name: str = "digitaltwins"):
         self.store = store
         self.changes = ChangeLog(graph_name)
         self.telemetry_events: list[dict[str, Any]] = []
         self._registry: ModelRegistry | None = None
+        # Both caches are least-recently-used first and hold entries of
+        # the current store only.
         # (query, order_for_paging) -> (store-at-compile-time, plan)
-        self._plan_cache: dict[tuple, tuple] = {}
+        self._plan_cache: OrderedDict[tuple, tuple] = OrderedDict()
+        # query text -> its paged result
+        self._result_cache: OrderedDict[str, _PagedResult] = OrderedDict()
+        self._cache_lock = threading.Lock()
 
     # ------------------------------------------------------------------
     # query (read path, SURVEY §3.1)
@@ -215,27 +238,40 @@ class DigitalTwinsSparkClient:
         Dialect detection mirrors the reference (``Query.cs:44-55``):
         contains SELECT and no RETURN → ADT QL; otherwise raw Cypher.
 
-        Compiled plans are cached per (store snapshot, query text):
-        DataFrames are immutable, so re-executing a cached plan is
-        safe, and keyset pagination — which recompiles the same query
-        once per page — stops paying parse+compile per page.  The
-        cache entry pins the store object it compiled against and is
-        valid only while that exact store is current (mutations swap
-        ``self.store``, naturally invalidating), which also makes an
-        ``id()``-reuse collision impossible."""
+        Compiled plans are cached per (store snapshot, query text),
+        so a query asked again — every page of a paged query — skips
+        parse and compile.  DataFrames are immutable, so re-executing
+        a cached plan is safe.  An entry pins the store object it
+        compiled against and is valid only while that exact store is
+        current, which also makes an ``id()``-reuse collision
+        impossible.  Every store swap (each mutation, commit,
+        checkpoint, job and ``DELETE``) drops the entries of the old
+        store.  At most ``_PLAN_CACHE_CAP`` plans are kept; the least
+        recently used one is evicted first.  The plan is lazy: this
+        call runs no Spark job."""
+        return self._plan(query, order_for_paging, self.store)
+
+    def _plan(self, query: str, order_for_paging: bool, store: GraphStore) -> DataFrame:
+        """``query_df`` against ``store``, the snapshot the caller read
+        once for its whole request."""
         key = (query, order_for_paging)
-        hit = self._plan_cache.get(key)
-        if hit is not None and hit[0] is self.store:
-            return hit[1]
+        with self._cache_lock:
+            hit = self._plan_cache.get(key)
+            if hit is not None and hit[0] is store:
+                self._plan_cache.move_to_end(key)
+                return hit[1]
         if self.detect_dialect(query) == "adt":
-            df = QueryCompiler(self.store).compile(parse(query), order_for_paging)
+            df = QueryCompiler(store).compile(parse(query), order_for_paging)
         else:
             from pg_age_digitaltwins_spark.cypher import compile_cypher
 
-            df = compile_cypher(self.store, query)
-        if len(self._plan_cache) >= 64:
-            self._plan_cache.pop(next(iter(self._plan_cache)))
-        self._plan_cache[key] = (self.store, df)
+            df = compile_cypher(store, query)
+        with self._cache_lock:
+            if self.store is store:  # not swapped while compiling
+                self._plan_cache[key] = (store, df)
+                self._plan_cache.move_to_end(key)
+                while len(self._plan_cache) > _PLAN_CACHE_CAP:
+                    self._plan_cache.popitem(last=False)
         return df
 
     @staticmethod
@@ -267,28 +303,59 @@ class DigitalTwinsSparkClient:
         max_items_per_page: int | None = None,
         continuation_token: str | None = None,
     ) -> QueryPage:
-        """Paged execution with continuation tokens.
+        """Run a query; with ``max_items_per_page``, return one page and
+        a continuation token for the next.
 
         Tokens embed the query like the reference
         (``Models/ContinuationToken.cs:9-16``) but are KEYSET tokens
         wherever the engine controls the page order: base64
         ``{"_ks": [last sort-key values], "_kd": <boundary-dup skip>,
         "_q": <query>}`` — the next page filters ``sort_key >= _ks``
-        and skips ``_kd`` boundary duplicates, so page N costs the same
-        as page 1 (offset re-execution is O(pages²) at scale).  The ADT
-        path keysets on the compiler's hidden ``__pk*`` primary-key
-        columns; un-ORDERed Cypher keysets on a deterministic order over
-        the output columns (typed columns natively, complex columns via
-        a string rendering — only those get cast).  Only explicit
-        Cypher ORDER BY falls back to offset tokens
-        (``{"_tr": <row offset>}``): its sort keys are arbitrary
-        expressions that need not appear in the projection."""
+        and skips ``_kd`` boundary duplicates.  The ADT path keysets on
+        the compiler's hidden ``__pk*`` primary-key columns; un-ORDERed
+        Cypher keysets on a deterministic order over the output columns
+        (typed columns natively, complex columns via a string rendering
+        — only those get cast).  Only explicit Cypher ORDER BY falls
+        back to offset tokens (``{"_tr": <row offset>}``): its sort keys
+        are arbitrary expressions that need not appear in the
+        projection.
+
+        Paged results are cached per (store snapshot, query text):
+
+        * A request WITH a continuation token for a query that has no
+          entry builds one: it persists the query's answer with its
+          paging keys, and its own page read (a top-N, which reads
+          every partition) fills the cache in the same single run of
+          the query.  That page costs somewhat more than an uncached
+          one (the whole answer is cached before the keyset filter
+          applies).  A reader that stops after the first page, an
+          unpaged query and a point query pay nothing extra.
+        * Every later page of that query, first page or continuation,
+          READS the entry: the keyset filter plus a top-N over the
+          cached rows — one Spark job, no re-run of the query's joins
+          or broadcast builds.  Offset pages (Cypher ORDER BY) read the
+          entry's sorted partitions in order.  A request without a
+          token and without an entry runs the query itself.
+        * The gain therefore depends on a query being paged more than
+          once per snapshot (page 3 onward, or a second walk); a store
+          swapped before every continuation pays one build per page.
+        * Entries are released (unpersisted) when the store is swapped
+          — every mutation, commit, checkpoint, job and ``DELETE`` —
+          and, least recently used first, when more than
+          ``_RESULT_CACHE_CAP`` queries hold one.  Pages therefore
+          read the current snapshot, as keyset tokens always did: a
+          page after a write runs against the new store.  A page read
+          racing a release recomputes its rows from the lineage the
+          persisted frame keeps."""
         tok: dict[str, Any] = {}
         if continuation_token:
             tok = json.loads(base64.b64decode(continuation_token))
             query = tok["_q"]
         paging = max_items_per_page is not None
-        df = self.query_df(query, order_for_paging=paging)
+        # one read of the current store serves the whole request, so
+        # the plan and the paged result it feeds are of one snapshot
+        store = self.store
+        df = self._plan(query, paging, store)
         cartesians = getattr(df, "_pgage_cartesians", 0)
         if not paging:
             rows = _shape_rows(
@@ -298,17 +365,54 @@ class DigitalTwinsSparkClient:
                 rows, None, compute_query_charge(rows, query, cartesians)
             )
 
-        sort_cols: list[str] = []
-        if self.detect_dialect(query) == "cypher":
-            if not re.search(r"\bORDER\s+BY\b", query, re.IGNORECASE):
-                df, sort_cols = _cypher_paging_order(df)
-        else:
-            sort_cols = [c for c in df.columns if c.startswith("__pk")]
+        df, sort_cols = self._paged_result(query, df, store, build=bool(tok))
         if not sort_cols:
             return self._offset_page(df, query, max_items_per_page, tok, cartesians)
         return self._keyset_page(
             df, query, max_items_per_page, tok, sort_cols, cartesians
         )
+
+    def _paged_result(
+        self, query: str, plan: DataFrame, store: GraphStore, build: bool
+    ) -> tuple[DataFrame, list[str]]:
+        """The frame a page of ``query`` reads and its keyset sort
+        columns (empty → offset paging): the cached entry of ``store``
+        when one exists, else ``plan`` (compiled against ``store``),
+        which ``build`` persists as a new entry.  The entry is kept
+        only while ``store`` is current."""
+        with self._cache_lock:
+            hit = self._result_cache.get(query)
+            if hit is not None and hit.store is store:
+                self._result_cache.move_to_end(query)
+                return hit.df, hit.sort_cols
+        if self.detect_dialect(query) == "adt":
+            df, sort_cols = plan, [c for c in plan.columns if c.startswith("__pk")]
+        elif re.search(r"\bORDER\s+BY\b", query, re.IGNORECASE):
+            df, sort_cols = plan, []
+        else:
+            df, sort_cols = _cypher_paging_order(plan)
+        if not build:
+            return df, sort_cols
+        # persist, not localCheckpoint: the frame keeps its lineage, so
+        # a read that races the release recomputes instead of failing.
+        # No job here: this request's page read fills the cache (a
+        # keyset page is a top-N, which reads every partition).
+        df = df.persist()
+        entry = _PagedResult(store, df, sort_cols)
+        with self._cache_lock:
+            old = self._result_cache.pop(query, None)
+            # an entry of this store is a concurrent build of the same
+            # cached plan: replacing it releases nothing
+            released = [] if old is None or old.store is store else [old]
+            if self.store is store:
+                self._result_cache[query] = entry
+                while len(self._result_cache) > _RESULT_CACHE_CAP:
+                    released.append(self._result_cache.popitem(last=False)[1])
+            else:  # swapped while building: serve this page, keep nothing
+                released.append(entry)
+        for e in released:
+            e.df.unpersist()
+        return df, sort_cols
 
     def _offset_page(
         self, df: DataFrame, query: str, n: int, tok: dict[str, Any],
@@ -334,15 +438,23 @@ class DigitalTwinsSparkClient:
 
         boundary = tok.get("_ks")
         skip = int(tok.get("_kd", 0))
+        vals = None
+        page_df = df
         if boundary is not None:
+            if len(boundary) != len(sort_cols):
+                # a token from a build with other paging keys: zipping
+                # would misalign the values and serve a wrong page
+                raise ValueError(
+                    "continuation token does not match this query's paging "
+                    f"keys ({len(boundary)} values, {len(sort_cols)} keys); "
+                    "restart from the first page"
+                )
             vals = [_token_decode_val(v) for v in boundary]
-            page_df = df.filter(
-                _keyset_ge([F.col(c) for c in sort_cols], vals)
-            ).offset(skip)
-        else:
-            vals = None
-            page_df = df
-        page = page_df.limit(n + 1).collect()
+            page_df = df.filter(_keyset_ge([F.col(c) for c in sort_cols], vals))
+        # the page order comes from here: neither the keyset plan nor
+        # its cached entry is sorted.  A top-N is one Spark job
+        # whatever the partition layout.
+        page = page_df.orderBy(*sort_cols).offset(skip).limit(n + 1).collect()
         served = page[:n]
         token = None
         if len(page) > n and served:
@@ -394,7 +506,19 @@ class DigitalTwinsSparkClient:
         return self._registry
 
     def _swap(self, store: GraphStore) -> None:
-        self.store = store
+        """Make ``store`` current; drop the cached plans and release the
+        paged results of every other store."""
+        with self._cache_lock:
+            self.store = store
+            self._plan_cache = OrderedDict(
+                (k, v) for k, v in self._plan_cache.items() if v[0] is store
+            )
+            released = [e for e in self._result_cache.values() if e.store is not store]
+            self._result_cache = OrderedDict(
+                (k, e) for k, e in self._result_cache.items() if e.store is store
+            )
+        for e in released:
+            e.df.unpersist()
 
     def checkpoint(self, path: str | None = None, compact: bool = False) -> None:
         """Storage maintenance (SURVEY §7 hard-#5: update-heavy OLTP on

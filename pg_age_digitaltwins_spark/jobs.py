@@ -997,7 +997,7 @@ def delete_job(client: DigitalTwinsSparkClient) -> dict[str, int]:
         "twins": store.twins.count(),
         "models": store.models.count(),
     }
-    client.store = GraphStore.empty(store.spark)
+    client._swap(GraphStore.empty(store.spark))
     client._registry = None
     return counts
 

@@ -145,6 +145,31 @@ def test_compact_summary_small_and_complete(spark):
     assert c["calib"] == out["calibration"]
 
 
+def test_compact_summary_length_guard_and_disjoint_groups():
+    """The compact line stays under its cap on a board too large for
+    it by dropping per-key walls in reverse name order (the same keys
+    on every run), and refuses to merge groups that share a key."""
+    heads = {f"headline_key_{i:03d}": 1.0 + i for i in range(60)}
+    anas = {f"analytics_key_{i:03d}": 2.0 + i for i in range(60)}
+    out = {"metric": "headline_total_wall", "value": 1.0, "unit": "sec",
+           "sf": "x", "queries": heads, "analytics": anas}
+    c = bench.compact_summary(out)
+    assert len(json.dumps(c)) < bench.COMPACT_LINE_CAP
+    kept = sorted(c["queries"])
+    assert kept and c["queries_dropped"] == 120 - len(kept)
+    assert kept == sorted({**heads, **anas})[: len(kept)]
+    # the totals still cover every key
+    assert c["groups"]["queries_total"] == round(sum(heads.values()), 3)
+    # a board that fits drops nothing
+    small = bench.compact_summary({**out, "queries": {"a": 1.0},
+                                   "analytics": {"b": 2.0}})
+    assert small["queries"] == {"a": 1.0, "b": 2.0}
+    assert "queries_dropped" not in small
+    with pytest.raises(ValueError, match="k_shared"):
+        bench.compact_summary({**out, "queries": {"k_shared": 1.0},
+                               "analytics": {"k_shared": 2.0}})
+
+
 def test_isolated_first_pass_recorded_and_counts_toward_min(spark):
     """r12 (verdict #2): the slowest key runs once BEFORE the analytics
     group; its wall lands in analytics_isolated_first and participates

@@ -1571,8 +1571,13 @@ def test_comment_string_and_length_cap():
 
 def test_query_plan_cache_hits_and_invalidates(spark):
     """Same query + same store snapshot → the SAME compiled plan
-    object; any mutation swaps the store and invalidates."""
-    from pg_age_digitaltwins_spark.client import DigitalTwinsSparkClient
+    object; any mutation swaps the store and drops every plan of the
+    old store.  Eviction is least-recently-used: a plan hit between a
+    stream of one-off point queries stays cached."""
+    from pg_age_digitaltwins_spark.client import (
+        _PLAN_CACHE_CAP,
+        DigitalTwinsSparkClient,
+    )
     from pg_age_digitaltwins_spark.store.graph_store import GraphStore
 
     models = [{"@id": "dtmi:pc:T;1", "@type": "Interface",
@@ -1596,10 +1601,22 @@ def test_query_plan_cache_hits_and_invalidates(spark):
     # a write replaces the store → recompile against the new snapshot
     client.create_or_replace_digital_twin(
         "t1", {"$dtId": "t1", "$metadata": {"$model": "dtmi:pc:T;1"}, "x": 2})
+    assert not client._plan_cache  # stale plans pin the old store
     df3 = client.query_df(q)
     assert df3 is not df1
     [r] = client.query(q).rows
     assert r["count"] == 2
+
+    hot = client.query_df(q)
+    point = "SELECT T FROM DIGITALTWINS T WHERE T.$dtId = 't{}'"
+    for i in range(_PLAN_CACHE_CAP - 1):
+        client.query_df(point.format(i))
+    assert client.query_df(q) is hot  # hit: now most recently used
+    client.query_df(point.format("x"))  # over the cap: evicts point 0
+    assert len(client._plan_cache) == _PLAN_CACHE_CAP
+    assert client.query_df(q) is hot
+    assert (point.format(0), False) not in client._plan_cache
+    assert all(v[0] is client.store for v in client._plan_cache.values())
 
 
 def test_validate_model_limit_extensions_batch16():
