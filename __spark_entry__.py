@@ -594,7 +594,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(s, d)
         return connected_components(
             st.twins, st.relationships,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     def _pr(s, d):
@@ -603,7 +603,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(s, d)
         return pagerank(
             st.twins, st.relationships, iters=5,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     def _scc(s, d):
@@ -614,7 +614,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(s, d)
         return strongly_connected_components(
             st.twins, st.relationships,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     # Iterative whole-graph programs — oracled as unrolled-iteration
@@ -633,7 +633,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         st = _store(s, d)
         return louvain_communities(
-            st.twins, st.relationships, endpoint_ids=st.vertex_ids
+            st.twins, st.relationships, universe=st.universe
         )
 
     q["graph_louvain"] = _louvain
@@ -652,7 +652,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(s, d)
         comm = connected_components(
             st.twins, st.relationships,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         ).select("dt_id", F.col("component").alias("community"))
         # legacy projection: the r16 kernel also emits exact BIGINT
         # two_m/q_num (checked by the weighted twin below)
@@ -693,7 +693,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         rels = st.relationships.select("source_id", "target_id", w)
         comm = connected_components(
             st.twins, st.relationships,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         ).select("dt_id", F.col("component").alias("community"))
         return modularity(rels, comm, weight_col="__w")
 
@@ -721,7 +721,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
         rels = st.relationships.select("source_id", "target_id", w)
         return louvain_communities(
-            st.twins, rels, weight_col="__w", endpoint_ids=st.vertex_ids
+            st.twins, rels, weight_col="__w",
+            universe=st.universe.without_layout(),
         )
 
     q["graph_louvain_weighted"] = _louvain_weighted
@@ -738,7 +739,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         st = _store(s, d)
         return personalized_pagerank(
-            st.twins, st.relationships, ["cust-0", "cust-1"], iters=5
+            st.twins, st.relationships, ["cust-0", "cust-1"], iters=5,
+            universe=st.universe,
         ).filter(F.col("rank") > 0)
 
     q["graph_personalized_pagerank"] = _ppr
@@ -785,7 +787,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(s, d)
         return node_similarity_jaccard(
             st.relationships, "contains", top_k=20,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     # r8: GDS-style neighbor-set Jaccard (orders similar by shared parts)
@@ -799,7 +801,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(s, d)
         return node_similarity_jaccard(
             st.relationships, "contains", top_k=50, max_target_degree=25,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     # r10: the hub-guarded variant (GDS upperDegreeCutoff parity) —
@@ -874,7 +876,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("dt_id")
         return betweenness_centrality_sampled(
             st.relationships, sources, max_depth=3,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     # r10: Brandes betweenness sampled to the 5 region pivots,
@@ -889,7 +891,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
         st = _store(s, d)
-        return eigenvector_centrality(st.twins, st.relationships, iters=5)
+        return eigenvector_centrality(
+            st.twins, st.relationships, iters=5, universe=st.universe
+        )
 
     # r10: max-normalized power iteration (completing the GDS
     # centrality suite: degree/closeness/harmonic/betweenness/
@@ -920,21 +924,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sources = st.twins.filter(
             F.col("dt_id").startswith("region-")
         ).select("dt_id")
-        # r16 (guide §2.3): with the store's persisted long-id layout,
-        # encode the weighted edge frame ONCE (two joins over |E|,
-        # before doubling) and run every Bellman-Ford round on 8-byte
-        # longs — the operator is id-dtype-agnostic (min/left-anti/
-        # union on named columns), distances are pure weight sums, so
-        # results decode bit-identical.  Pivots outside the endpoint
-        # universe have no edges: the string path reports them at
-        # dist 0, so the union below keeps them.
-        vm = st.vertex_ids
-        if vm is not None:
-            from pg_age_digitaltwins_spark.operators.graph_analytics import (
-                _bc_vid_gate,
-            )
-
-            bc = _bc_vid_gate(vm)
+        # with the store's long-id layout, encode the weighted edge
+        # frame once and run every Bellman-Ford round on longs (the
+        # operator keys on column names; distances are weight sums, so
+        # results decode identically).  Pivots outside the endpoint
+        # universe have no edges and stay at dist 0 via the union below.
+        u = st.universe
+        layout = u.layout()
+        if layout is not None:
+            vm, bc = layout[0], u.bc
             sv = vm.select(
                 F.col("dt_id").alias("source_id"), F.col("vid").alias("__sv")
             )
@@ -969,7 +967,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
         )
         out = weighted_shortest_paths(sym, sources, iters=4)
-        if vm is not None:
+        if layout is not None:
             dec = vm.select(
                 F.col("vid").alias("dt_id"), F.col("dt_id").alias("__id_s")
             )
@@ -1008,7 +1006,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("dt_id")
         return random_walks(st.relationships, starts, steps=4,
                             walks_per_node=2,
-                            vid_edges=st.edges_vid, vid_map=st.vertex_ids)
+                            universe=st.universe)
 
     # r11: deterministic DeepWalk corpus — md5-ranked neighbor picks,
     # value-checked against an unrolled SQL walk (the determinism IS
@@ -1033,7 +1031,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("dt_id")
         walks = random_walks(st.relationships, starts, steps=4,
                              walks_per_node=2,
-                             vid_edges=st.edges_vid, vid_map=st.vertex_ids)
+                             universe=st.universe)
         return walk_skipgram_pairs(walks, window=2)
 
     # r11: the word2vec input built FROM the walk corpus — one
@@ -1081,7 +1079,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ).select("dt_id")
         walks = random_walks(st.relationships, starts, steps=4,
                              walks_per_node=2,
-                             vid_edges=st.edges_vid, vid_map=st.vertex_ids)
+                             universe=st.universe)
         return walk_skipgram_pairs(walks, window=2)
 
     def _node_embeddings(s, d):
@@ -1176,7 +1174,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         st = _store(spark, sf_dir)
         return ga.triangle_count(
-            st.relationships, vid_edges=st.edges_vid, vid_map=st.vertex_ids
+            st.relationships, universe=st.universe
         )
 
     def _ktruss(spark, sf_dir):
@@ -1224,7 +1222,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         st = _store(spark, sf_dir)
         return ga.local_clustering(
-            st.relationships, vid_edges=st.edges_vid, vid_map=st.vertex_ids
+            st.relationships, universe=st.universe
         )
 
     q["graph_local_clustering"] = _local_clustering
@@ -1240,8 +1238,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _clustering(spark, sf_dir):
         from pg_age_digitaltwins_spark.operators import graph_analytics as ga
 
+        st = _store(spark, sf_dir)
         return ga.global_clustering_coefficient(
-            _store(spark, sf_dir).relationships
+            st.relationships, universe=st.universe
         )
 
     q["graph_clustering_coefficient"] = _clustering
@@ -1260,7 +1259,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(spark, sf_dir)
         return ga.link_prediction(
             st.relationships, k=50, max_wedge_degree=100,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     q["graph_link_prediction"] = _link_pred
@@ -1270,7 +1269,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         # r12: Newman degree assortativity — BIGINT moments, one float
         # at the end
-        return ga.degree_assortativity(_store(spark, sf_dir).relationships)
+        st = _store(spark, sf_dir)
+        return ga.degree_assortativity(st.relationships, universe=st.universe)
 
     q["graph_assortativity"] = _assortativity
 
@@ -1283,7 +1283,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         st = _store(spark, sf_dir)
         return ga.topological_levels(
             st.twins, st.relationships, iters=8,
-            vid_edges=st.edges_vid, vid_map=st.vertex_ids,
+            universe=st.universe,
         )
 
     q["graph_topological_levels"] = _topo_levels
@@ -1295,7 +1295,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # eigenvector_centrality, so the fixed-iteration values
         # cross-check against the unrolled CTE
         st = _store(spark, sf_dir)
-        return ga.hits(st.twins, st.relationships, iters=5)
+        return ga.hits(st.twins, st.relationships, iters=5, universe=st.universe)
 
     q["graph_hits"] = _hits
 

@@ -691,15 +691,14 @@ class CypherCompiler:
         # relTypes-filtered frame for typed-subgraph analytics (and,
         # for _WEIGHTED_PROCS, the weight-projected frame + column)
         relationships = rels if rels is not None else store.relationships
-        # store-persisted long-id layout for the wedge family (r16
-        # optimization) — only valid when the procedure runs on the
-        # UNPROJECTED store edge set (a relTypes filter or weight
-        # projection changes the frame; the operators then fall back to
-        # the per-query encode)
-        vid_kw = (
-            {"vid_edges": store.edges_vid, "vid_map": store.vertex_ids}
+        # the snapshot's vertex universe (|V| counted once per store);
+        # its long-id layout encodes the UNPROJECTED store edge set
+        # only, so a relTypes filter or weight projection runs without
+        # it (the kernels then encode per query)
+        universe = (
+            store.universe
             if rels is None and weight_col is None
-            else {"vid_edges": None, "vid_map": None}
+            else store.universe.without_layout()
         )
 
         def _degree():
@@ -742,7 +741,7 @@ class CypherCompiler:
                 lambda iters, damping: ga.pagerank(
                     store.twins, relationships,
                     iters=iters, damping=damping, weight_col=weight_col,
-                    **vid_kw,
+                    universe=universe,
                 ),
             ),
             # seed-teleport proximity (related-entities primitive)
@@ -753,13 +752,14 @@ class CypherCompiler:
                 lambda seeds, iters, damping: ga.personalized_pagerank(
                     store.twins, relationships, seeds,
                     iters=iters, damping=damping, weight_col=weight_col,
+                    universe=universe,
                 ),
             ),
             "graph.connectedcomponents": (
                 [],
                 {"node": "dt_id", "component": "component"},
                 lambda: ga.connected_components(
-                    store.twins, relationships, **vid_kw
+                    store.twins, relationships, universe=universe
                 ),
             ),
             "graph.degree": (
@@ -772,7 +772,7 @@ class CypherCompiler:
             "graph.trianglecount": (
                 [],
                 {"triangles": "n_triangles"},
-                lambda: ga.triangle_count(relationships, **vid_kw),
+                lambda: ga.triangle_count(relationships, universe=universe),
             ),
             # per-node local clustering coefficient (exact integer
             # triangles/wedges; coefficient in floor-div micro units)
@@ -780,7 +780,7 @@ class CypherCompiler:
                 [],
                 {"node": "dt_id", "triangles": "triangles",
                  "wedges": "wedges", "lcc_micro": "lcc_micro"},
-                lambda: ga.local_clustering(relationships, **vid_kw),
+                lambda: ga.local_clustering(relationships, universe=universe),
             ),
             # sampled harmonic centrality from a seed set (exact
             # integer 12/d weighting; maxDepth <= 12 per the operator)
@@ -800,7 +800,7 @@ class CypherCompiler:
                 [],
                 {"node": "dt_id", "component": "scc"},
                 lambda: ga.strongly_connected_components(
-                    store.twins, relationships, **vid_kw
+                    store.twins, relationships, universe=universe
                 ),
             ),
             "graph.labelpropagation": (
@@ -821,26 +821,30 @@ class CypherCompiler:
                 [("iters", "int", 8)],
                 {"node": "dt_id", "level": "level"},
                 lambda iters: ga.topological_levels(
-                    store.twins, relationships, iters=iters, **vid_kw
+                    store.twins, relationships, iters=iters, universe=universe
                 ),
             ),
             "graph.assortativity": (
                 [],
                 {"n_edges": "n_edges", "assortativity": "assortativity"},
-                lambda: ga.degree_assortativity(relationships),
+                lambda: ga.degree_assortativity(
+                    relationships, universe=universe
+                ),
             ),
             "graph.hits": (
                 [("iters", "int", 5)],
                 {"node": "dt_id", "authority": "authority", "hub": "hub"},
                 lambda iters: ga.hits(
-                    store.twins, relationships, iters=iters
+                    store.twins, relationships, iters=iters,
+                    universe=universe,
                 ),
             ),
             "graph.eigenvector": (
                 [("iters", "int", 5)],
                 {"node": "dt_id", "score": "score"},
                 lambda iters: ga.eigenvector_centrality(
-                    store.twins, relationships, iters=iters
+                    store.twins, relationships, iters=iters,
+                    universe=universe,
                 ),
             ),
             "graph.closeness": (
@@ -862,7 +866,7 @@ class CypherCompiler:
                     store.twins.filter(F.col("dt_id").isin(list(seeds)))
                     .select("dt_id"),
                     max_depth=max_depth,
-                    **vid_kw,
+                    universe=universe,
                 ),
             ),
             "graph.distancedistribution": (
@@ -881,14 +885,7 @@ class CypherCompiler:
                 lambda rpl, lv: ga.louvain_communities(
                     store.twins, relationships,
                     rounds_per_level=rpl, levels=lv,
-                    weight_col=weight_col,
-                    # endpoint-universe hint only valid on the
-                    # UNPROJECTED store edge set (same rule as vid_kw)
-                    endpoint_ids=(
-                        store.vertex_ids
-                        if rels is None and weight_col is None
-                        else None
-                    ),
+                    weight_col=weight_col, universe=universe,
                 ),
             ),
             "graph.clusteringcoefficient": (
@@ -896,7 +893,7 @@ class CypherCompiler:
                 {"n_triangles": "n_triangles", "n_triads": "n_triads",
                  "coefficient": "clustering_coefficient"},
                 lambda: ga.global_clustering_coefficient(
-                    relationships
+                    relationships, universe=universe
                 ),
             ),
             "graph.kcore": (
@@ -915,7 +912,7 @@ class CypherCompiler:
                  "union_size": "union_size", "similarity": "jaccard"},
                 lambda top_k, cutoff: ga.node_similarity_jaccard(
                     relationships, top_k=top_k, max_target_degree=cutoff,
-                    **vid_kw,
+                    universe=universe,
                 ),
             ),
             # r15: hop-bounded (weighted) shortest distances from a
@@ -950,7 +947,7 @@ class CypherCompiler:
                  "pref_attach": "pref_attach"},
                 lambda top_k, cap: ga.link_prediction(
                     relationships, k=top_k, max_wedge_degree=cap,
-                    **vid_kw,
+                    universe=universe,
                 ),
             ),
             # ---- r16: the LLM-data-pipeline library through the CALL

@@ -1,55 +1,160 @@
-"""Whole-graph analytics over the twins graph: connected components and
-PageRank as iterative DataFrame programs.
+"""Whole-graph analytics over the twins graph as iterative DataFrame
+programs (Pregel supersteps: messages = a join, combiner = a partial
+aggregation), so they run anywhere Spark runs.
 
-SURVEY §7 reserves GraphX/GraphFrames for whole-graph work; neither
-ships in this container, and for bounded-iteration algorithms the
-DataFrame join+agg form IS the Pregel superstep (messages = the join,
-combiner = the partial agg), so these run anywhere Spark runs:
+Contract shared by every kernel:
 
-* one shuffle per iteration, keyed by vertex id — co-partitioned with
-  the edge table when both are bucketed by id at ingest;
-* ``localCheckpoint`` after every superstep truncates the lineage —
-  without it the plan doubles each iteration and the 10th superstep
-  replays the first nine (on a cluster with a checkpoint dir,
-  ``df.checkpoint()`` gives the same cut with HDFS durability);
-* convergence checks are actions — batched (every iteration here, the
-  tables are vertex-sized) and cheap (``take(1)`` on a changed-rows
-  anti-filter).
+* **Vertex universe.**  A kernel takes ``universe=`` — the
+  :class:`VertexUniverse` of the store snapshot it runs on
+  (``GraphStore.universe``, one per snapshot).  It carries |V|
+  (counted once, on first use), the store's persisted long-id layout
+  when the snapshot has one, and the only broadcast gate.  A kernel
+  called without one builds one from the frames it was given; one
+  passed in must be that of the ``twins`` passed with it (PageRank
+  takes its |V| as n).  Callers
+  running a kernel on a PROJECTED edge frame (relTypes filter, weight
+  column) pass ``universe.without_layout()``: the layout encodes the
+  unprojected edges only.
+* **Gate rule.**  Vertex-sized frames (id maps, per-vertex state,
+  degree and label dims) are broadcast iff |V| ≤
+  :data:`BROADCAST_VERTEX_LIMIT`; above it every join on them is a
+  co-partitioned shuffle join.  |V| bounds every vertex-sized frame a
+  kernel builds, so the one count decides them all.
+* **Checkpoint cadence.**  Loop-invariant edge frames are hoisted once,
+  partitioned on the superstep's aggregation key (:func:`_keyed_ckpt`).
+  Per-superstep state is a ``localCheckpoint``, so lineage never
+  compounds: power iterations cut eagerly every second step (one job
+  runs two supersteps), label loops eagerly every step followed by a
+  ``take(1)`` convergence probe over the materialized rows.
+* **Long-id space.**  With the layout, kernels run their joins and
+  aggregations on order-preserving, injective 8-byte vertex ids (every
+  ``min``/``<``/tie-break decides as on the dt_id strings) and decode
+  once at the end, so results are identical to the string path.
 
-Reference parity note: the reference has no whole-graph analytics —
-this is a beyond-reference extension in the same family as the
-training-data operators.
+The reference has no whole-graph analytics; this module is a
+beyond-reference extension.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import copy
+from functools import reduce
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, functions as F
+
+# The largest |V| whose vertex-sized frames are broadcast: ~30 B per
+# vertex row, so ~60 MB at the limit.
+BROADCAST_VERTEX_LIMIT = 2_000_000
+
+# Spark job tag carried by the universe's own jobs (the |V| count and
+# the layout integrity check), so a trace can tell them from a kernel's.
+UNIVERSE_JOB_TAG = "graph-vertex-universe"
+
+
+def _tagged_count(df: DataFrame) -> int:
+    sc = df.sparkSession.sparkContext
+    sc.addJobTag(UNIVERSE_JOB_TAG)
+    try:
+        return df.count()
+    finally:
+        sc.removeJobTag(UNIVERSE_JOB_TAG)
+
+
+class VertexUniverse:
+    """The vertex set of one graph snapshot, and the one place a kernel
+    decides whether vertex-sized frames broadcast.
+
+    * ``n`` — |V|: the twin count, or, built from an edge frame alone,
+      its distinct endpoint count; counted on first use, then cached.
+    * ``bc(df)`` — the gate: ``F.broadcast(df)`` iff ``n`` ≤
+      :data:`BROADCAST_VERTEX_LIMIT` (read at call time).
+    * ``layout()`` — the ``(vertex_ids, edges_vid)`` tables of
+      ``GraphStore.save_bucketed``, or None.  ``vertex_ids`` is (dt_id,
+      vid), vid order == dt_id order, over the edge-endpoint universe;
+      ``edges_vid`` is the relationships as (source_vid, target_vid,
+      name).  Kernels rely on every ``edges_vid`` endpoint having a
+      ``vertex_ids`` row; the first call checks that with one left-anti
+      count, cached next to ``n``, and raises ``ValueError`` if not.
+
+    Every commit makes a new ``GraphStore`` and so a fresh universe; a
+    relationship mutation drops the layout with the tables it encodes.
+    ``without_layout()`` shares the cached facts."""
+
+    def __init__(
+        self,
+        twins: DataFrame | None = None,
+        relationships: DataFrame | None = None,
+        vertex_ids: DataFrame | None = None,
+        edges_vid: DataFrame | None = None,
+    ):
+        if twins is None and relationships is None:
+            raise ValueError("a vertex universe needs twins or relationships")
+        self.twins = twins
+        self.relationships = relationships
+        self._layout = (
+            (vertex_ids, edges_vid)
+            if vertex_ids is not None and edges_vid is not None
+            else None
+        )
+        self._facts: dict = {}
+
+    def without_layout(self) -> "VertexUniverse":
+        view = copy.copy(self)  # shallow: shares the cached facts
+        view._layout = None
+        return view
+
+    @property
+    def n(self) -> int:
+        if "n" not in self._facts:
+            if self.twins is not None:
+                vs = self.twins.select("dt_id")
+            else:
+                e = self.relationships
+                vs = (
+                    e.select(F.col("source_id").alias("dt_id"))
+                    .union(e.select(F.col("target_id").alias("dt_id")))
+                    .distinct()
+                )
+            self._facts["n"] = _tagged_count(vs)
+        return self._facts["n"]
+
+    @property
+    def broadcasts(self) -> bool:
+        return self.n <= BROADCAST_VERTEX_LIMIT
+
+    def bc(self, df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if self.broadcasts else df
+
+    def layout(self) -> tuple[DataFrame, DataFrame] | None:
+        if self._layout is None:
+            return None
+        vertex_ids, edges_vid = self._layout
+        if "dangling" not in self._facts:
+            ends = edges_vid.select(F.col("source_vid").alias("vid")).union(
+                edges_vid.select(F.col("target_vid").alias("vid"))
+            )
+            self._facts["dangling"] = _tagged_count(
+                ends.join(self.bc(vertex_ids.select("vid")), "vid", "left_anti")
+            )
+        if self._facts["dangling"]:
+            raise ValueError(
+                "vertex layout breaks endpoint referential integrity: "
+                f"{self._facts['dangling']} edges_vid endpoint(s) have no "
+                "vertex_ids row; rebuild the layout with "
+                "GraphStore.save_bucketed"
+            )
+        return self._layout
 
 
 def _keyed_ckpt(df: DataFrame, sort_cols: list | None = None) -> DataFrame:
-    """Eager ``localCheckpoint`` that PRESERVES the frame's output
-    partitioning (and ordering, when ``sort_cols`` is given) in the
-    checkpointed ``LogicalRDD``.
-
-    r16 (optimization round, measured): under AQE the physical plan is
-    an ``AdaptiveSparkPlanExec`` whose ``outputPartitioning`` is
-    ``UnknownPartitioning`` at checkpoint-creation time, so EVERY
-    ``repartition(key).localCheckpoint()`` loop-invariant hoist in this
-    module silently lost its partitioning metadata — the data was laid
-    out right, but the planner re-inserted a full exchange for every
-    downstream groupBy/join on the key (verified: ``groupBy(key)`` over
-    such a checkpoint plans ``Exchange hashpartitioning(key)``; the
-    Louvain round carried TWO candidate-set-sized exchanges it was
-    designed not to have).  Compiling the checkpoint with AQE off
-    yields a non-adaptive plan whose ``HashPartitioning`` (and sort
-    order) the LogicalRDD records; downstream queries — themselves
-    still AQE — then satisfy ClusteredDistribution on the key (or any
-    superset) with zero exchange.  The toggle only affects THIS
-    materialization job (the conf is read per-query at compile time)
-    and is restored in ``finally``; the hoisted frames here are
-    one-shot builds whose partition count is the explicit
-    ``defaultParallelism`` repartition target, so losing AQE's
-    coalescing for the build job changes nothing."""
+    """Eager ``localCheckpoint`` that keeps the frame's output
+    partitioning (and ordering, with ``sort_cols``) visible to later
+    plans.  Under AQE a checkpoint records ``UnknownPartitioning``, so
+    every downstream groupBy/join on the key would re-exchange a frame
+    that is already laid out; compiling this one materialization with
+    AQE off records the ``HashPartitioning`` instead.  The toggle is
+    read at compile time and restored at once."""
     spark = df.sparkSession
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
@@ -61,43 +166,12 @@ def _keyed_ckpt(df: DataFrame, sort_cols: list | None = None) -> DataFrame:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
-def _bc_vid_gate(vid_map: DataFrame, limit: int = 2_000_000):
-    """The standard vertex-broadcast gate (r14 verdict discipline) for
-    the persisted-layout decode/encode joins: the (dt_id, vid) map is
-    ~30 MB at 2M vertices — broadcasting it beats a two-sided
-    sort-merge shuffle of map + vertex-sized results, but ONLY below
-    the gate (above it, state outgrows executors and the joins must
-    stay distributed).  The count is a parquet-footer scan of the
-    persisted table — sub-second."""
-    return (
-        (lambda df: F.broadcast(df))
-        if vid_map.count() <= limit
-        else (lambda df: df)
-    )
-
-
 def _vid_map_for(ids: DataFrame) -> DataFrame:
-    """Order-preserving long vertex ids for the wedge/pair family (r16
-    optimization round, guide §2.3 — narrower shuffle types).
-
-    ``ids``: a one-column (dt_id) frame (duplicates fine).  Returns the
-    distinct universe as (dt_id, vid) where vid ORDER == dt_id ORDER:
-    ``monotonically_increasing_id`` over an ``orderBy``'d frame is
-    order-preserving (range shuffle keeps partition index order, ids
-    rise within partitions) — the same distributed encoding Louvain
-    uses, so every ``<``/least/greatest/min-tie-break/ORDER BY on vids
-    decides exactly as it would on the dt_id strings, and decoded
-    results are bit-identical.  EAGER checkpoint for the same reason as
-    Louvain's vid_map: mono_id over orderBy is deterministic per
-    EXECUTION, so the pin keeps every consumer (encode joins + decode)
-    on one id assignment even across task retries.
-
-    Why it pays: the wedge family's dominant exchanges carry 2-3 vertex
-    ids per row; ~8-byte longs vs ~15-25-byte strings cut the shuffled
-    bytes 2-3× and make every hash/compare in the join+aggregate
-    pipeline a long op (PageRank/Louvain measured ~25% per-iteration
-    from the same move; the wedge ops are pure join+agg so the share
-    is larger)."""
+    """(dt_id, vid) over the distinct ``ids`` with vid order == dt_id
+    order: ``monotonically_increasing_id`` over an ``orderBy``'d frame
+    (the range shuffle keeps partition order, ids rise within
+    partitions).  Eager, because the assignment is deterministic per
+    execution only and every encode/decode must see the same one."""
     return (
         ids.distinct()
         .orderBy("dt_id")
@@ -106,73 +180,84 @@ def _vid_map_for(ids: DataFrame) -> DataFrame:
     )
 
 
-def _und_pairs_vid(
-    relationships: DataFrame,
-    broadcast_vertex_limit: int,
-    vid_edges: DataFrame | None,
-    vid_map: DataFrame | None,
-):
-    """(und, bc, vid_map) — the deduped undirected (a < b) pair frame in
-    LONG id space for the wedge family, plus the broadcast gate and the
-    (dt_id, vid) decode map.
+def _edge_vids(edges_vid: DataFrame) -> DataFrame:
+    return edges_vid.select(
+        F.col("source_vid").alias("source_id"),
+        F.col("target_vid").alias("target_id"),
+    )
 
-    With the store's pre-encoded layout (``vid_edges``/``vid_map`` from
-    ``GraphStore.save_bucketed`` — vid ORDER == dt_id ORDER over the
-    edge-endpoint universe) the per-query encode disappears entirely:
-    no endpoint-universe distinct, no orderBy sample pass, no eager
-    checkpoint, no vertex-sized encode joins (measured ~6 s/query at
-    sf1).  least/greatest/distinct on vids decide identically to the
-    string path because the persisted map is order-preserving and
-    injective.  Without it (ad-hoc frames, mutated stores) the r16
-    per-query order-preserving encode runs unchanged."""
-    if vid_edges is not None and vid_map is not None:
+
+def _decode(
+    u: VertexUniverse, df: DataFrame, vertex_ids: DataFrame, *cols: str
+) -> DataFrame:
+    """Map each long-id column of ``df`` back to its dt_id string."""
+    out = df.columns
+    for c in cols:
+        dec = vertex_ids.select(F.col("vid").alias(c), F.col("dt_id").alias("__s"))
+        df = df.join(u.bc(dec), c).drop(c).withColumnRenamed("__s", c)
+    return df.select(*out)
+
+
+def _isolated(
+    u: VertexUniverse, twins: DataFrame, vertex_ids: DataFrame
+) -> DataFrame:
+    """Twins outside the edge-endpoint universe (no edges at all)."""
+    return twins.select("dt_id").join(
+        u.bc(vertex_ids.select("dt_id")), "dt_id", "left_anti"
+    )
+
+
+def _und_pairs_vid(
+    relationships: DataFrame, u: VertexUniverse
+) -> tuple[DataFrame, DataFrame]:
+    """(und, vid_map): the deduplicated undirected (a < b) pairs in
+    order-preserving long id space for the wedge family, and the
+    (dt_id, vid) map that decodes them.  Reads the layout when the
+    universe has one; otherwise encodes the endpoints per query."""
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
         und = (
-            vid_edges.select("source_vid", "target_vid")
-            .filter(F.col("source_vid") != F.col("target_vid"))
+            _edge_vids(edges_vid)
+            .filter(F.col("source_id") != F.col("target_id"))
             .select(
-                F.least("source_vid", "target_vid").alias("a"),
-                F.greatest("source_vid", "target_vid").alias("b"),
+                F.least("source_id", "target_id").alias("a"),
+                F.greatest("source_id", "target_id").alias("b"),
             )
             .distinct()
             .localCheckpoint(eager=False)
         )
-        bc = (
-            (lambda df: F.broadcast(df))
-            if vid_map.count() <= broadcast_vertex_limit
-            else (lambda df: df)
-        )
-        return und, bc, vid_map
-    e = relationships.select("source_id", "target_id").filter(
-        F.col("source_id") != F.col("target_id")
-    )
-    # lazy cut BEFORE the vid map — _vid_map_for's eager build is the
-    # first action over this subtree, so the scan+dedup shuffle runs
-    # once and the encode joins read the materialized frame instead of
-    # re-deriving it
-    und_s = e.select(
-        F.least("source_id", "target_id").alias("a"),
-        F.greatest("source_id", "target_id").alias("b"),
-    ).distinct().localCheckpoint(eager=False)
+        return und, vid_map
+    # the eager vid-map build is the pair frame's first action, so the
+    # encode joins read the materialized dedup back
+    und_s = _und_pairs(relationships)
     vmap = _vid_map_for(
         und_s.select(F.col("a").alias("dt_id")).unionByName(
             und_s.select(F.col("b").alias("dt_id"))
         )
     )
-    bc = (
-        (lambda df: F.broadcast(df))
-        if vmap.count() <= broadcast_vertex_limit
-        else (lambda df: df)
-    )
     va = vmap.select(F.col("dt_id").alias("a"), F.col("vid").alias("__va"))
     vb = vmap.select(F.col("dt_id").alias("b"), F.col("vid").alias("__vb"))
     # a < b on strings ⇒ __va < __vb on vids (order-preserving encode)
     und = (
-        und_s.join(bc(va), "a")
-        .join(bc(vb), "b")
+        und_s.join(u.bc(va), "a")
+        .join(u.bc(vb), "b")
         .select(F.col("__va").alias("a"), F.col("__vb").alias("b"))
         .localCheckpoint(eager=False)
     )
-    return und, bc, vmap
+    return und, vmap
+
+
+def _und_pairs(relationships: DataFrame) -> DataFrame:
+    """Distinct undirected (a < b) pairs without self loops, behind a
+    lazy cut (callers read it more than once)."""
+    e = relationships.select("source_id", "target_id").filter(
+        F.col("source_id") != F.col("target_id")
+    )
+    return e.select(
+        F.least("source_id", "target_id").alias("a"),
+        F.greatest("source_id", "target_id").alias("b"),
+    ).distinct().localCheckpoint(eager=False)
 
 
 def _undirected(relationships: DataFrame) -> DataFrame:
@@ -184,90 +269,93 @@ def _undirected(relationships: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def _power_step(
+    u: VertexUniverse,
+    edges: DataFrame,
+    state: DataFrame,
+    verts: DataFrame,
+    key: str,
+    msg: Column,
+    scalar: Callable[[DataFrame], DataFrame],
+    value: Column,
+    eager: bool,
+    src: str = "source_id",
+    dst: str = "target_id",
+) -> DataFrame:
+    """One push-sum superstep of a power iteration:
+
+    ``s(v) = Σ msg`` over ``edges ⋈ bc(state)`` (``edges[src] ==
+    state[key]``) grouped by ``dst``; then ``verts ⋈ bc(s)`` (left, so
+    vertices receiving nothing carry a NULL ``s``) crossed with the
+    1-row ``scalar(sums)`` frame, projected to ``key`` and ``value``,
+    and checkpointed (``eager`` sets the cadence).  The scalar rides a
+    broadcast nested-loop join, so a superstep is one job with no
+    driver collect; with the state broadcast and ``edges`` partitioned
+    on ``dst`` it runs no exchange at all."""
+    sums = (
+        edges.join(u.bc(state), edges[src] == state[key])
+        .select(F.col(dst).alias(key), msg.alias("__m"))
+        .groupBy(key)
+        .agg(F.sum("__m").alias("s"))
+    )
+    return (
+        verts.join(u.bc(sums), key, "left")
+        .crossJoin(scalar(sums))
+        .select(key, value)
+        .localCheckpoint(eager=eager)
+    )
+
+
+def _max_of_sums(sums: DataFrame) -> DataFrame:
+    return sums.agg(F.max("s").alias("mx"))
+
+
+def _max_normalized(name: str) -> Column:
+    """s / max(s) — the max-normalized power-iteration update (0 when
+    nothing received mass)."""
+    return (
+        F.when(
+            F.col("mx").isNotNull() & (F.col("mx") > 0),
+            F.coalesce(F.col("s"), F.lit(0.0)) / F.col("mx"),
+        )
+        .otherwise(F.lit(0.0))
+        .alias(name)
+    )
+
+
 def connected_components(
     twins: DataFrame,
     relationships: DataFrame,
     max_iters: int = 20,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
-    broadcast_vertex_limit: int = 2_000_000,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, component) — component = min twin id reachable over
     undirected edges.
 
-    Star-contraction (r8, the same move that made SCC 4× faster): the
-    label fixpoint is algorithm-independent, so instead of running
-    every min-label superstep over the FULL 2×|E| edge set (r7 shape:
-    ~6 × full-graph join at sf0.1), do
+    Star contraction: each level takes every vertex's local min over
+    its closed neighborhood (the min of two directed map-side-combined
+    groupBys — no join, labels are still the identity), rewrites each
+    edge's endpoints to those labels and keeps only cross-label edges,
+    so each level strictly shrinks the graph; the per-level maps then
+    compose vertex → label → … → root.  Exact: the global min of a
+    component is its own local min at every level.
 
-    1. ONE local-min pass — each vertex takes min(self, neighbors);
-       pure groupBy on the edge list, no join, because labels are
-       still the identity;
-    2. CONTRACT — rewrite each edge endpoint to its local-min label
-       and dedupe: only edges BETWEEN local minima survive, which on
-       hub-and-spoke graphs is a small fraction of the input;
-    3. iterate min-label propagation on the contracted graph (cheap
-       rounds, still O(diameter) of the contracted graph — each round
-       touches the small label-graph only);
-    4. map every vertex through its local-min label to the final
-       component (one join back out).
-
-    Exact, not approximate: level-k labels are vertex ids inside the
-    same component, and the global min vertex is its own local min at
-    every level, so the contracted fixpoint equals the original
-    fixpoint.
-
-    Level 1 never materializes the doubled edge set: the undirected
-    neighbor-min is the min of two DIRECTED map-side-combined groupBys
-    (min distributes over the union), so the big frame is only ever
-    scanned, not shuffled twice.
-
-    (r10 experiment, rejected THEN: running the label propagation in an
-    order-preserving long vid space measured 8.8-9.4 s vs 5.75 s here —
-    level 1 is a JOIN-FREE scan aggregation over the raw edge frame,
-    so the id-encode's two edge joins + endpoint-universe distinct cost
-    more than long mins save.  r16: the store now PERSISTS the
-    order-preserving encoding (``vid_edges``/``vid_map`` from
-    ``GraphStore.save_bucketed``), so the encode cost the r10
-    experiment paid per query is zero — with the layout present the
-    level loop runs verbatim on 8-byte longs (min/least decide
-    identically: the persisted map is order-preserving and injective),
-    levels compose in long space, and one decode join at the end maps
-    roots back to dt_id strings; twins outside the edge-endpoint
-    universe are their own components (exactly what the string path's
-    left-join composition gives them).  The vid path only activates on
-    store-backed frames, where the CRUD edge guard enforces endpoint
-    referential integrity."""
-    use_vid = vid_edges is not None and vid_map is not None
-    if use_vid:
-        e = vid_edges.select(
-            F.col("source_vid").alias("source_id"),
-            F.col("target_vid").alias("target_id"),
-        ).filter(F.col("source_id") != F.col("target_id"))
+    Scale strategy: the per-level label maps are vertex-sized and ride
+    the universe gate, so the |E| frame never shuffles for the
+    contraction joins; each level is one eager checkpoint plus a
+    ``take(1)`` probe, O(contracted diameter) levels.  With the layout
+    the levels run on long ids and one decode maps roots back; twins
+    outside the edge-endpoint universe are their own components."""
+    u = universe or VertexUniverse(twins, relationships)
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
+        e = _edge_vids(edges_vid)
     else:
-        e = relationships.select("source_id", "target_id").filter(
-            F.col("source_id") != F.col("target_id")
-        )
-    # r17 (optimization, guide §3.1): the level-1 contraction joined the
-    # full |E| frame against the vertex-sized label map TWICE as
-    # sort-merge shuffles (the lazily-checkpointed map has no usable
-    # size estimate, so AQE never upgraded it).  Broadcast the label
-    # maps under the standard ≤2M-vertex gate — the |E| frame then
-    # never shuffles for the contraction; above the gate the joins stay
-    # distributed (r14 verdict discipline).  Later levels shrink, so
-    # the gate only widens.
-    n_verts = (vid_map if use_vid else twins).select("dt_id").count()
-    bc_lbl = (
-        (lambda df: F.broadcast(df))
-        if n_verts <= broadcast_vertex_limit
-        else (lambda df: df)
-    )
+        e = relationships.select("source_id", "target_id")
+    e = e.filter(F.col("source_id") != F.col("target_id"))
     level_maps: list[DataFrame] = []
     for _ in range(max_iters):
-        # local min over the closed neighborhood of this level's edge
-        # endpoints: labels are still identity within the level, so the
-        # neighbor-min is a pure aggregation — no join with a label
-        # frame, and no doubled/distinct undirected edge materialization
         in_min = e.groupBy(F.col("target_id").alias("id")).agg(
             F.min("source_id").alias("nmin")
         )
@@ -281,17 +369,11 @@ def connected_components(
             .select(
                 "id", F.least(F.col("id"), F.col("nmin")).alias("label")
             )
-            # LAZY checkpoint: the contraction's e.take(1) action below
-            # computes (and caches) this level map in the SAME job —
-            # an eager checkpoint here would run a whole extra job per
-            # level (measured 5.6 → 4.7 s warm, 11.6 → 4.8 s cold at
-            # sf0.1); lineage still truncates at that first action
+            # lazy: the contraction's checkpoint job below computes
+            # (and caches) this level map in the same job
             .localCheckpoint(eager=False)
         )
         level_maps.append(local)
-        # contract: rewrite endpoints to labels, keep only cross-label
-        # edges — each level strictly shrinks the vertex set (every
-        # vertex adjacent to a smaller id collapses into it)
         ls = local.select(
             F.col("id").alias("source_id"), F.col("label").alias("__ls")
         )
@@ -299,8 +381,8 @@ def connected_components(
             F.col("id").alias("target_id"), F.col("label").alias("__lt")
         )
         e = (
-            e.join(bc_lbl(ls), "source_id")
-            .join(bc_lbl(lt), "target_id")
+            e.join(u.bc(ls), "source_id")
+            .join(u.bc(lt), "target_id")
             .select(
                 F.col("__ls").alias("source_id"),
                 F.col("__lt").alias("target_id"),
@@ -312,14 +394,9 @@ def connected_components(
         if not e.take(1):
             break
 
-    # compose: vertex → level-1 label → level-2 label → ... → root.
-    # Every level map after the first is label-space sized (small), so
-    # AQE broadcasts it; vertices absent from a level's map are already
-    # roots there (left join + coalesce keeps them fixed).
-    if use_vid:
-        # endpoint universe composes in LONG space (every join in the
-        # chain is long-keyed), one string decode at the end; twins
-        # outside the universe (no edges) are their own components
+    # compose vertex → level-1 label → … → root; vertices absent from a
+    # level's map are already roots there (left join + coalesce)
+    if layout is not None:
         comp = vid_map.select("dt_id", F.col("vid").alias("component"))
     else:
         comp = twins.select("dt_id", F.col("dt_id").alias("component"))
@@ -331,19 +408,11 @@ def connected_components(
             "dt_id",
             F.coalesce(F.col("__next"), F.col("component")).alias("component"),
         )
-    if use_vid:
-        bc = _bc_vid_gate(vid_map)
-        dec = vid_map.select(
-            F.col("vid").alias("component"), F.col("dt_id").alias("__root")
-        )
-        comp = comp.join(bc(dec), "component").select(
-            "dt_id", F.col("__root").alias("component")
-        )
-        isolated = twins.select("dt_id").join(
-            bc(vid_map.select("dt_id")), "dt_id", "left_anti"
-        )
-        comp = comp.unionByName(
-            isolated.select("dt_id", F.col("dt_id").alias("component"))
+    if layout is not None:
+        comp = _decode(u, comp, vid_map, "component").unionByName(
+            _isolated(u, twins, vid_map).select(
+                "dt_id", F.col("dt_id").alias("component")
+            )
         )
     return comp
 
@@ -354,71 +423,31 @@ def pagerank(
     iters: int = 10,
     damping: float = 0.85,
     weight_col: str | None = None,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, rank) after ``iters`` power iterations on the directed
-    twin graph.  Dangling vertices redistribute uniformly (the standard
-    stochastic fix — without it rank mass drains).
+    twin graph, rounded at 8.  Dangling vertices redistribute
+    uniformly, so rank mass never drains.
 
-    Loop-invariant work is hoisted OUT of the iteration (r8): the edge
-    list is pre-joined with its source out-degrees once (``deg_edges``,
-    checkpointed), and the dangling vertex set is computed once — each
-    superstep is then one edges⋈state join + a map-side-combined sum,
-    instead of the r7 shape that re-derived out-degrees against the
-    state every round.  When the vertex set is broadcastable (n below
-    the threshold) the state and contribs sides carry explicit
-    broadcast hints, collapsing each superstep to ONE shuffle (the
-    target-keyed partial-agg) — AQE alone missed this because the
-    checkpointed state's size estimate is conservative; measured
-    9.8 → 5.8 s warm at sf0.1.  Above the threshold (cluster-scale
-    graphs, where vertex state outgrows the driver) the hints drop out
-    and the joins run co-partitioned shuffle joins.  Arithmetic is
-    unchanged (rank/out_deg per edge, summed per target) so ranks
-    match the unrolled-iteration oracle at round(8).
+    Out-degrees count ALL of a twin source's outgoing edges, so mass
+    sent to a non-twin target leaks instead of inflating the twin
+    targets' shares (the oracle's semantics).  ``weight_col`` (the GDS
+    ``relationshipWeightProperty``): a non-negative, non-NULL numeric
+    column; each edge carries rank·w(u,v)/W(u) with W(u) the source's
+    total outgoing weight, and a zero-total source counts as dangling.
 
-    r10: the supersteps run in LONG vertex-id space — twins get unique
-    longs (``monotonically_increasing_id``; no ordering needed, PR has
-    no tie-breaks) and edges encode through two joins.  Long join/agg
-    keys cut the per-iteration hash work and shrink every broadcast;
-    the decode join back to dt_id strings is vertex-sized, once.
-
-    Referential-integrity edge cases (r11, ADVICE): a non-twin SOURCE
-    carries no rank, so dropping its edges at the encode join is
-    harmless; out-degrees, however, are counted over ALL of a twin
-    source's outgoing edges BEFORE the target encode join, so mass sent
-    to a non-twin target leaks (pre-r10 and oracle semantics) instead
-    of silently redistributing to the surviving targets.
-
-    ``weight_col`` (r15 — the GDS ``relationshipWeightProperty``
-    shape): a numeric column on ``relationships``; each edge carries
-    rank proportional to w(u,v)/W(u) with W(u) the source's TOTAL
-    outgoing weight (over all its edges, RI-leak semantics as above).
-    Weights must be non-negative and non-NULL (the query surface
-    defaults missing properties to 1.0 before calling); a source whose
-    total weight is 0 sends no mass and counts as dangling.  The
-    unweighted path is untouched (count, not sum-of-ones), so existing
-    plans and oracles are byte-identical.
-
-    r16 (optimization, guide §2.4 — remove shuffles outright): with the
-    store's persisted long-id layout (``vid_edges``/``vid_map``) the
-    per-query encode disappears — no vid_map build job, no two
-    |E|-sized encode joins, no twin-sided broadcast builds.  PageRank
-    has no id-ORDER dependence (no tie-breaks), only uniqueness, so
-    twins outside the edge-endpoint universe extend the persisted map
-    with NEGATIVE vids (``-mono_id - 1`` — disjoint from the persisted
-    non-negative range by construction, no driver max() collect).
-    Ranks are identical: n, out-degrees, the edge multiset and the
-    dangling set are all unchanged; only the join keys narrowed.  The
-    vid path requires endpoint referential integrity (every edge
-    endpoint a twin) — guaranteed on store-backed frames by the CRUD
-    edge guard, which is the only place the layout comes from; the
-    weighted path keeps the per-query encode (the persisted layout
-    carries no weight column)."""
-    use_vid = (
-        vid_edges is not None and vid_map is not None and weight_col is None
-    )
-    if use_vid:
+    Scale strategy: vertices get long ids (``monotonically_increasing_id``
+    — PageRank needs uniqueness, not order); the edge frame, joined
+    with out-degrees, is hoisted once and partitioned on the target, so
+    each :func:`_power_step` is one map-side pass over |E| with the
+    state broadcast under the gate.  With the layout (unweighted only:
+    it carries no weights) the encode disappears; twins outside the
+    endpoint universe take negative vids, disjoint from the persisted
+    ones."""
+    u = universe or VertexUniverse(twins, relationships)
+    layout = u.layout() if weight_col is None else None
+    if layout is not None:
+        vid_map, edges_vid = layout
         extra = (
             twins.select("dt_id")
             .join(vid_map.select("dt_id"), "dt_id", "left_anti")
@@ -432,38 +461,21 @@ def pagerank(
             .unionByName(extra)
             .localCheckpoint(eager=False)
         )
-        verts = dec_map.select("vid").localCheckpoint(eager=False)
-        n = verts.count()
-        bc = (
-            (lambda df: F.broadcast(df)) if n <= 2_000_000 else (lambda df: df)
-        )
-        edges = vid_edges.select(
-            F.col("source_vid").alias("source_id"),
-            F.col("target_vid").alias("target_id"),
-        )
+        edges = _edge_vids(edges_vid)
         out_deg = edges.groupBy(F.col("source_id").alias("vid")).agg(
             F.count(F.lit(1)).alias("out_deg")
         )
-        wcols: list = []
+        verts = dec_map.select("vid").localCheckpoint(eager=True)
     else:
-        # Lazy is retry-safe HERE, unlike Louvain's eager vid_map pin: this
-        # encode has no orderBy (no range-shuffle sampling nondeterminism —
-        # mono_id over a stable parquet-scan partitioning is deterministic
-        # per layout), and the verts.count() below materializes the
-        # checkpoint in the very next job, before any consumer forks.
+        # mono_id over a stable scan partitioning is deterministic per
+        # layout, and the eager verts cut pins it before any consumer
+        # forks
         dec_map = (
             twins.select("dt_id")
             .select("dt_id", F.monotonically_increasing_id().alias("vid"))
             .localCheckpoint(eager=False)
         )
-        verts = dec_map.select("vid").localCheckpoint(eager=False)
-        n = verts.count()
-        # vertex-state rows are ~30 B (id + double); 2M rows ≈ 60 MB
-        # broadcast — comfortably under a 1 GiB driver, far under executor
-        # memory.  Beyond that, state must stay distributed.
-        bc = (
-            (lambda df: F.broadcast(df)) if n <= 2_000_000 else (lambda df: df)
-        )
+        verts = dec_map.select("vid").localCheckpoint(eager=True)
         sv = dec_map.select(
             F.col("dt_id").alias("source_id"), F.col("vid").alias("__sv")
         )
@@ -471,18 +483,12 @@ def pagerank(
             F.col("dt_id").alias("target_id"), F.col("vid").alias("__tv")
         )
         ecols = ["source_id", "target_id"] + ([weight_col] if weight_col else [])
-        src_edges = relationships.select(*ecols).join(bc(sv), "source_id")
-        # out-degree counts every outgoing edge of a twin source (including
-        # any to non-twin targets) so the per-edge rank share is unchanged
-        # on RI-violating inputs — the non-twin share then leaks, it does
-        # not inflate the twin targets' shares.
+        src_edges = relationships.select(*ecols).join(u.bc(sv), "source_id")
         if weight_col is None:
             out_deg = src_edges.groupBy(F.col("__sv").alias("vid")).agg(
                 F.count(F.lit(1)).alias("out_deg")
             )
         else:
-            # total outgoing WEIGHT; zero-total sources drop out here and
-            # land in dangling_verts (no 0/0 share)
             out_deg = (
                 src_edges.groupBy(F.col("__sv").alias("vid"))
                 .agg(F.sum(F.col(weight_col).cast("double")).alias("out_deg"))
@@ -491,22 +497,12 @@ def pagerank(
         wcols = (
             [F.col(weight_col).cast("double").alias("__w")] if weight_col else []
         )
-        edges = src_edges.join(bc(tv), "target_id").select(
+        edges = src_edges.join(u.bc(tv), "target_id").select(
             F.col("__sv").alias("source_id"),
             F.col("__tv").alias("target_id"),
             *wcols,
         )
-    # r17 (optimization, guide §2.4): lay the hoisted edge frame out on
-    # the TARGET key once — each superstep's contribs aggregation
-    # (groupBy target) then reuses that partitioning and, with the
-    # state broadcast under the gate, a superstep runs ZERO exchanges
-    # (the old shape paid one |E|-partial-agg exchange per iteration).
-    # _keyed_ckpt pins the partitioning against AQE's UnknownPartitioning
-    # checkpoint estimate.  Above the gate the join on source re-shuffles
-    # the edge frame exactly as the unpartitioned checkpoint did — no
-    # regression on the distributed path.  Per-target sums change their
-    # partial-aggregation grouping; ranks are re-verified against the
-    # unrolled-iteration oracle at round(8).
+    n = u.n
     spark = edges.sparkSession
     deg_edges = _keyed_ckpt(
         edges.join(out_deg, edges["source_id"] == out_deg["vid"])
@@ -521,46 +517,27 @@ def pagerank(
     dangling_verts = verts.join(out_deg, "vid", "left_anti").localCheckpoint(
         eager=True
     )
+    share = (
+        F.col("rank") * F.col("__w") / F.col("out_deg")
+        if weight_col
+        else F.col("rank") / F.col("out_deg")
+    )
+    update = (
+        F.lit((1.0 - damping) / n)
+        + F.lit(damping) * F.col("dangling") / F.lit(float(n))
+        + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+    ).alias("rank")
     state = verts.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
     for i in range(iters):
-        # Dangling mass stays a DataFrame (1-row agg, broadcast by the
-        # nested-loop cross join) so each superstep is ONE job — no
-        # driver scalar collect serializing iterations on job latency.
-        dangling = state.join(bc(dangling_verts), "vid", "semi").agg(
+        dangling = state.join(u.bc(dangling_verts), "vid", "semi").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
         )
-        share = (
-            F.col("rank") * F.col("__w") / F.col("out_deg")
-            if weight_col
-            else F.col("rank") / F.col("out_deg")
+        state = _power_step(
+            u, deg_edges, state, verts, "vid", share,
+            lambda _: dangling, update,
+            eager=(i % 2 == 1) or (i == iters - 1),
         )
-        contribs = (
-            deg_edges.join(bc(state), deg_edges["source_id"] == state["vid"])
-            .select(F.col("target_id").alias("vid"), share.alias("c"))
-            .groupBy("vid")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        state = (
-            verts.join(bc(contribs), "vid", "left")
-            .crossJoin(dangling)
-            .select(
-                "vid",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.col("dangling") / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            # Eager checkpoint every SECOND superstep: one Spark job
-            # executes two supersteps (lineage depth 2, still bounded),
-            # halving the per-job scheduling floor — measured 7.1 →
-            # 6.8 s warm and 13.6 → 6.8 s cold at sf0.1 (deeper
-            # batching saves nothing more and grows the plan).  The
-            # lazy checkpoint still truncates lineage at the next
-            # action, so plans never compound across the loop.
-            .localCheckpoint(eager=(i % 2 == 1) or (i == iters - 1))
-        )
-    return state.join(bc(dec_map), "vid").select(
+    return state.join(u.bc(dec_map), "vid").select(
         "dt_id", F.round("rank", 8).alias("rank")
     )
 
@@ -572,6 +549,7 @@ def personalized_pagerank(
     iters: int = 5,
     damping: float = 0.85,
     weight_col: str | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, rank) — personalized PageRank: teleport (and dangling
     redistribution) target the SEED set only, so rank measures
@@ -580,22 +558,15 @@ def personalized_pagerank(
 
     rank_k(v) = s(v)·((1−d) + d·dangling_{k−1}) + d·Σ_in rank(u)/out(u)
     with s(v) = 1/|S| for seeds, 0 elsewhere; r0 = s.  Vertices
-    unreachable from the seeds stay at exactly 0.
+    unreachable from the seeds stay at exactly 0.  ``weight_col``: the
+    :func:`pagerank` contract.
 
-    Same plan shape as :func:`pagerank` (loop-invariant deg_edges /
-    dangling hoisting, ≤2M-vertex broadcast hints that drop out at
-    scale, checkpoint every 2nd superstep); the seed vector is a
-    plan-time literal IN-list — seeds are user-query-sized, never
-    corpus-sized.
-
-    ``weight_col`` (r15): same contract as :func:`pagerank` — per-edge
-    share rank·w(u,v)/W(u), zero-total sources dangling, unweighted
-    path byte-identical."""
+    Scale strategy: :func:`pagerank`'s, in dt_id space; the seed vector
+    is a plan-time IN-list (seeds are query-sized)."""
     if not seeds:
         raise ValueError("personalized_pagerank needs at least one seed")
-    verts = twins.select("dt_id").localCheckpoint(eager=False)
-    n = verts.count()
-    bc = (lambda df: F.broadcast(df)) if n <= 2_000_000 else (lambda df: df)
+    u = universe or VertexUniverse(twins, relationships)
+    verts = twins.select("dt_id").localCheckpoint(eager=True)
     s_v = F.when(
         F.col("dt_id").isin(list(seeds)), F.lit(1.0 / len(seeds))
     ).otherwise(F.lit(0.0))
@@ -611,10 +582,6 @@ def personalized_pagerank(
             .agg(F.sum(F.col(weight_col).cast("double")).alias("out_deg"))
             .filter(F.col("out_deg") > 0)
         )
-    # r17: same target-keyed hoist as pagerank (guide §2.4) — the
-    # per-iteration contribs aggregation then reuses the partitioning
-    # under the state broadcast instead of exchanging |E| partials
-    # every round; ranks re-verified at round(8) vs the oracle.
     spark = edges.sparkSession
     deg_edges = _keyed_ckpt(
         edges.join(out_deg, edges["source_id"] == out_deg["dt_id"])
@@ -633,34 +600,24 @@ def personalized_pagerank(
     dangling_verts = verts.join(out_deg, "dt_id", "left_anti").localCheckpoint(
         eager=True
     )
+    share = (
+        F.col("rank") * F.col("__w") / F.col("out_deg")
+        if weight_col
+        else F.col("rank") / F.col("out_deg")
+    )
+    update = (
+        s_v * (F.lit(1.0 - damping) + F.lit(damping) * F.col("dangling"))
+        + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+    ).alias("rank")
     state = verts.withColumn("rank", s_v).localCheckpoint(eager=True)
     for i in range(iters):
-        dangling = state.join(bc(dangling_verts), "dt_id", "semi").agg(
+        dangling = state.join(u.bc(dangling_verts), "dt_id", "semi").agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling")
         )
-        share = (
-            F.col("rank") * F.col("__w") / F.col("out_deg")
-            if weight_col
-            else F.col("rank") / F.col("out_deg")
-        )
-        contribs = (
-            deg_edges.join(bc(state), deg_edges["source_id"] == state["dt_id"])
-            .select(F.col("target_id").alias("dt_id"), share.alias("c"))
-            .groupBy("dt_id")
-            .agg(F.sum("c").alias("in_sum"))
-        )
-        state = (
-            verts.join(bc(contribs), "dt_id", "left")
-            .crossJoin(dangling)
-            .select(
-                "dt_id",
-                (
-                    s_v
-                    * (F.lit(1.0 - damping) + F.lit(damping) * F.col("dangling"))
-                    + F.lit(damping) * F.coalesce(F.col("in_sum"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=(i % 2 == 1) or (i == iters - 1))
+        state = _power_step(
+            u, deg_edges, state, verts, "dt_id", share,
+            lambda _: dangling, update,
+            eager=(i % 2 == 1) or (i == iters - 1),
         )
     return state.select("dt_id", F.round("rank", 8).alias("rank"))
 
@@ -691,98 +648,16 @@ def degree_distribution(twins: DataFrame, relationships: DataFrame) -> DataFrame
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_twins"))
 
 
-def triangle_count(
-    relationships: DataFrame,
-    broadcast_vertex_limit: int = 2_000_000,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
-) -> DataFrame:
-    """Global triangle count over the undirected twin graph.
+def _closed_triangles(und: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(deg, closed) over a deduplicated undirected (a < b) pair frame:
+    per-vertex degrees (v, deg), and every triangle exactly once as
+    (u, v, w).
 
-    100 TB shape: DEGREE-ORDERED orientation (the MapReduce-classic
-    Cohen / Suri-Vassilvitskii scheme).  Every undirected edge is
-    directed from its lower-(degree, id) endpoint to the higher one,
-    which makes the edge relation acyclic and bounds every vertex's
-    out-degree by O(sqrt(m)) — so the wedge-building self-join cannot
-    blow up on hubs (a naive a<b join explodes on the highest-degree
-    vertex; a hub with 10^6 neighbors would otherwise build 10^12
-    wedges).  Two shuffles: wedge join + closing-edge semi join.
-
-    r16 (optimization): the wedge join, closing semi join and corner
-    shuffles run in ORDER-PRESERVING LONG id space (guide §2.3 —
-    narrower types; see :func:`_vid_map_for` for the exactness
-    argument: degree ties break on ids, and order preservation makes
-    the long orientation identical to the string one).  The vid-map
-    joins ride the same ≤``broadcast_vertex_limit`` gate as every other
-    vertex-sized broadcast (shuffle equi-joins above it).
-    """
-    und, bc, vid_map = _und_pairs_vid(
-        relationships, broadcast_vertex_limit, vid_edges, vid_map
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    # orient: lower (deg, id) -> higher (deg, id)
-    ranked = (
-        und.join(deg.withColumnRenamed("v", "a").withColumnRenamed("deg", "da"), "a")
-        .join(deg.withColumnRenamed("v", "b").withColumnRenamed("deg", "db"), "b")
-    )
-    fwd = F.struct("da", "a") < F.struct("db", "b")
-    oriented = ranked.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    ).localCheckpoint(eager=False)
-    wedges = (
-        oriented.alias("e1")
-        .join(oriented.alias("e2"), F.col("e1.hi") == F.col("e2.lo"))
-        .select(
-            F.col("e1.lo").alias("u"), F.col("e1.hi").alias("v"), F.col("e2.hi").alias("w")
-        )
-    )
-    closed = wedges.join(
-        oriented.select(F.col("lo").alias("u"), F.col("hi").alias("w")),
-        ["u", "w"],
-        "left_semi",
-    )
-    return closed.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
-
-
-def local_clustering(
-    relationships: DataFrame,
-    broadcast_vertex_limit: int = 2_000_000,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
-) -> DataFrame:
-    """(dt_id, triangles, wedges, lcc_micro) — PER-NODE local
-    clustering coefficient over the undirected twin graph: triangles(v)
-    / C(deg(v), 2), the classic neighborhood-cohesion feature (Watts-
-    Strogatz) behind community features and link-prediction signals.
-
-    Exactness: triangles and wedges are exact BIGINTs; the coefficient
-    is reported as floor-divided MICRO units (triangles·1e6 //
-    wedges) — no float division in-plan, so the whole frame
-    value-checks against SQL.  Degree-1 vertices have wedges = 0 and
-    lcc_micro NULL (no defined coefficient); zero-degree twins are
-    omitted (join the twins dim for a dense frame).
-
-    100 TB shape: the same degree-ordered orientation as
-    :func:`triangle_count` (per-vertex out-degree bounded by O(√m), so
-    the wedge join cannot blow up on hubs); closed triangles explode to
-    their three corners and aggregate map-side — three shuffles total
-    (wedge join, closing semi join, corner count).
-
-    r16 (optimization): all three shuffles run in ORDER-PRESERVING LONG
-    id space (guide §2.3; :func:`_vid_map_for` has the exactness
-    argument — orientation and tie-breaks decide identically), with a
-    single vertex-sized decode join back to dt_id strings at the end.
-    Encode/decode joins ride the ≤``broadcast_vertex_limit`` gate."""
-    und, bc, vid_map = _und_pairs_vid(
-        relationships, broadcast_vertex_limit, vid_edges, vid_map
-    )
+    Each edge is oriented from its lower-(degree, id) endpoint to the
+    higher one (the Cohen / Suri-Vassilvitskii scheme): the relation is
+    acyclic and every out-degree is O(√m), so the wedge self-join
+    cannot blow up on hubs.  Two shuffles: the wedge join and the
+    closing-edge semi join."""
     deg = (
         und.select(F.col("a").alias("v"))
         .unionAll(und.select(F.col("b").alias("v")))
@@ -813,6 +688,43 @@ def local_clustering(
         ["u", "w"],
         "left_semi",
     )
+    return deg, closed
+
+
+def triangle_count(
+    relationships: DataFrame, universe: VertexUniverse | None = None
+) -> DataFrame:
+    """Global triangle count over the undirected twin graph, in
+    order-preserving long id space (orientation ties break on ids, so
+    the long orientation is the string one); see
+    :func:`_closed_triangles` for the hub-proof plan."""
+    u = universe or VertexUniverse(relationships=relationships)
+    und, _ = _und_pairs_vid(relationships, u)
+    _, closed = _closed_triangles(und)
+    return closed.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
+
+
+def local_clustering(
+    relationships: DataFrame, universe: VertexUniverse | None = None
+) -> DataFrame:
+    """(dt_id, triangles, wedges, lcc_micro) — PER-NODE local
+    clustering coefficient over the undirected twin graph: triangles(v)
+    / C(deg(v), 2), the classic neighborhood-cohesion feature (Watts-
+    Strogatz) behind community features and link-prediction signals.
+
+    Exactness: triangles and wedges are exact BIGINTs; the coefficient
+    is reported as floor-divided MICRO units (triangles·1e6 //
+    wedges) — no float division in-plan, so the whole frame
+    value-checks against SQL.  Degree-1 vertices have wedges = 0 and
+    lcc_micro NULL (no defined coefficient); zero-degree twins are
+    omitted (join the twins dim for a dense frame).
+
+    Scale strategy: :func:`_closed_triangles` in long id space, closed
+    triangles exploded to their three corners and counted map-side
+    (three shuffles in all), then one gated decode join."""
+    u = universe or VertexUniverse(relationships=relationships)
+    und, vid_map = _und_pairs_vid(relationships, u)
+    deg, closed = _closed_triangles(und)
     corners = (
         closed.select(F.col("u").alias("v"))
         .unionAll(closed.select("v"))
@@ -835,9 +747,7 @@ def local_clustering(
             ).cast("long"),
         ).alias("lcc_micro"),
     )
-    # decode: one vertex-sized join back to dt_id strings (gated
-    # broadcast; values are per-vertex counts, unchanged by the encode)
-    return scored.join(bc(vid_map), "vid").select(
+    return scored.join(u.bc(vid_map), "vid").select(
         "dt_id", "triangles", "wedges", "lcc_micro"
     )
 
@@ -848,16 +758,10 @@ def k_core(
     """Vertices of the k-core (the maximal subgraph where every vertex
     has degree ≥ k), with each survivor's within-core degree.
 
-    Iterative peeling as Pregel-style supersteps: each round recomputes
-    degrees WITHIN the surviving vertex set (two left-semi joins — no
-    edge materialization per round) and drops sub-k vertices; stops at
-    fixpoint or ``max_iters``.  Peeling converges in O(peeling-depth)
-    rounds — shallow for the hub-and-spoke graphs twins form.
-    ``localCheckpoint`` cuts the per-round lineage exactly like
-    ``connected_components``.  A fixed ``max_iters`` keeps the
-    unrolled-CTE oracle exact: extra rounds past the fixpoint are
-    no-ops.
-    """
+    Iterative peeling: each round recomputes degrees within the surviving
+    vertex set (two left-semi joins) and drops sub-k vertices, stopping at
+    the fixpoint or ``max_iters`` (rounds past the fixpoint are no-ops, so
+    the unrolled-CTE oracle stays exact); one eager checkpoint per round."""
     edges = _undirected(relationships).localCheckpoint(eager=False)
     nodes = edges.select(F.col("source_id").alias("dt_id")).distinct()
     deg = None
@@ -892,24 +796,16 @@ def k_truss(
     relationships: DataFrame, k: int = 3, max_rounds: int = 3
 ) -> DataFrame:
     """(src, dst) — edges of the k-truss: the maximal subgraph where
-    every edge participates in ≥ k−2 triangles (Cohen's truss — the
-    edge-strength analogue of the k-core, and a standard community-
-    backbone extractor).  Canonical undirected edges (src < dst).
+    every edge participates in ≥ k−2 triangles (Cohen's truss).  Canonical
+    undirected edges (src < dst).
 
-    Iterative EDGE peeling: each round counts per-edge support
-    (triangles through the edge) within the surviving edge set via the
-    two-join wedge closure — edge (u, v) joins the adjacency on u to
-    propose wedges (u, v, w), and the (v, w) join closes them — then
-    drops edges with support < k−2.  A fixed ``max_rounds`` keeps the
-    unrolled-CTE oracle exact (rounds past the fixpoint are no-ops);
-    the early exit below is output-identical.
-
-    100 TB shape: per round, one wedge join shuffled on the adjacency
-    key and one closure join on the (v, w) pair — the wedge frame is
-    Σ deg(u) per edge (the same cost envelope as triangle counting);
-    support aggregation is map-side-combined on the canonical edge
-    key; peeling SHRINKS the edge set every round.  Hub skew in the
-    wedge join is AQE skew-join territory, same as node-similarity."""
+    Iterative EDGE peeling: each round counts per-edge support within the
+    surviving edge set — edge (u, v) joins the adjacency on u to propose
+    wedges (u, v, w), the (v, w) join closes them — and drops edges with
+    support < k−2.  ``max_rounds`` is fixed so the unrolled-CTE oracle
+    stays exact; the early exit at the fixpoint is output-identical.  Per
+    round: one wedge join (Σ deg(u) per edge, the triangle-count cost
+    envelope) and one closure join; the edge set shrinks every round."""
     e = (
         _undirected(relationships)
         .filter(F.col("source_id") < F.col("target_id"))
@@ -946,19 +842,12 @@ def label_propagation(
     twins: DataFrame, relationships: DataFrame, iterations: int = 3
 ) -> DataFrame:
     """(dt_id, label) — synchronous label propagation communities over
-    the undirected (deduplicated) edge set.  Deterministic variant:
-    every node simultaneously adopts its neighbors' most frequent
-    current label, ties broken by smallest label; isolated nodes keep
-    their own id.  The iteration count is FIXED (no convergence test)
-    so the result is reproducible and expressible as an unrolled SQL
-    CTE for the oracle.
-
-    100 TB shape: per superstep one edge⋈label join shuffled on the
-    vertex key, a map-side-combined (node, label) count, and a
-    per-node top-1 window that reuses the groupBy partitioning;
-    ``localCheckpoint`` cuts lineage every iteration like the other
-    supersteps in this module.
-    """
+    the undirected (deduplicated) edge set: every node adopts its
+    neighbors' most frequent label, ties broken by smallest label;
+    isolated nodes keep their own id.  The iteration count is FIXED, so
+    the result is reproducible and expressible as an unrolled SQL CTE.
+    Per superstep: one edge⋈label join, a map-side-combined (node, label)
+    count and a per-node top-1 window on the same partitioning."""
     from pyspark.sql import Window
 
     labels = twins.select("dt_id", F.col("dt_id").alias("label"))
@@ -987,37 +876,23 @@ def label_propagation(
     return labels
 
 
-def global_clustering_coefficient(relationships: DataFrame) -> DataFrame:
+def global_clustering_coefficient(
+    relationships: DataFrame, universe: VertexUniverse | None = None
+) -> DataFrame:
     """Global (transitivity) clustering coefficient:
     3 × triangles / open-triad count, where triads = Σ deg·(deg−1)/2
     over the deduplicated undirected graph — how much of the graph's
-    wedge structure actually closes.
-
-    100 TB shape: reuses the degree-ordered triangle count (hub-proof
-    wedge join) plus one map-side-combined degree aggregation; the
-    final ratio is a 1×1 cross join, no extra shuffle over edges.
-    """
-    tri = triangle_count(relationships)  # 1 row: n_triangles
-    e = relationships.select("source_id", "target_id").filter(
-        F.col("source_id") != F.col("target_id")
-    )
-    und = (
-        e.select(
-            F.least("source_id", "target_id").alias("a"),
-            F.greatest("source_id", "target_id").alias("b"),
-        )
-        .distinct()
-    )
-    triads = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .agg(
-            F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
-            .cast("long")
-            .alias("n_triads")
-        )
+    wedge structure actually closes.  The triangle count and the triads
+    read one pair frame and one degree dim (:func:`_closed_triangles`);
+    the final ratio is a 1×1 cross join."""
+    u = universe or VertexUniverse(relationships=relationships)
+    und, _ = _und_pairs_vid(relationships, u)
+    deg, closed = _closed_triangles(und)
+    tri = closed.agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
+    triads = deg.agg(
+        F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
+        .cast("long")
+        .alias("n_triads")
     )
     return tri.crossJoin(triads).select(
         "n_triangles",
@@ -1094,106 +969,65 @@ def strongly_connected_components(
     relationships: DataFrame,
     max_rounds: int = 8,
     max_iters: int = 20,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
-    broadcast_vertex_limit: int = 2_000_000,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, scc) — SCC id = min twin id in the component, over the
     DIRECTED edge set.
 
-    Forward-backward min-label coloring with peeling (the superstep
-    adaptation of FW-BW-Trim): per round, compute fwd(v) = min id
-    reaching v and bwd(v) = min id reachable from v; vertices with
-    fwd(v)==bwd(v)==c are exactly c's SCC (c reaches v and v reaches
-    c), settle them, peel their vertices/edges, repeat.  Every round
-    settles at least the SCC of the smallest remaining id, so rounds ≤
-    number of "pivot chains"; each fwd/bwd pass is O(diameter)
-    supersteps with per-superstep ``localCheckpoint`` lineage cuts —
-    the same 100 TB shape as the other iterative operators.  Raises
-    after ``max_rounds`` without convergence instead of mislabeling
-    the remainder.
+    FW-BW-Trim as supersteps: per round, TRIM first — until stable, a
+    vertex with no in-edge or no out-edge in the remaining subgraph is a
+    singleton SCC (one degree aggregation per layer), which settles the
+    acyclic bulk of the twin graph.  Then fwd(v) = min id reaching v and
+    bwd(v) = min id reachable from v; fwd(v) == bwd(v) == c exactly
+    identifies c's SCC, which settles and peels off.  Each round settles
+    at least the smallest remaining id's SCC.  Raises after
+    ``max_rounds`` (or a propagation not converged in ``max_iters``)
+    instead of mislabeling the remainder.
 
-    r16 (optimization, guide §2.3): with the store's persisted
-    order-preserving long-id layout (``vid_edges``/``vid_map``), the
-    whole peel/propagate pipeline — the heaviest string-keyed join
-    loop left after the wedge family — runs verbatim on 8-byte longs:
-    min-label propagation, trim degrees and the fwd==bwd settle all
-    decide identically because the encoding is order-preserving and
-    injective (scc id = min vid ⇔ min dt_id).  Twins outside the
-    edge-endpoint universe are singleton SCCs (exactly what the trim
-    pass labels them in the string path), attached at the final decode
-    instead of being dragged through every peel round."""
-    use_vid = vid_edges is not None and vid_map is not None
-    if use_vid:
+    Scale strategy: every peel/trim layer semi-joins the |E| frame against
+    the vertex-sized remaining set under the universe gate and cuts
+    lineage with an eager checkpoint.  With the layout the pipeline runs
+    on long ids, and round 1 skips its semi joins: the remaining set is
+    the whole endpoint universe, which ``VertexUniverse.layout`` has
+    checked contains every edge endpoint.  Twins outside that universe are
+    singleton SCCs, attached at the decode."""
+    u = universe or VertexUniverse(twins, relationships)
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
         verts = vid_map.select(F.col("vid").alias("dt_id"))
-        edges = (
-            vid_edges.select(
-                F.col("source_vid").alias("source_id"),
-                F.col("target_vid").alias("target_id"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        edges = _edge_vids(edges_vid)
     else:
         verts = twins.select("dt_id")
-        edges = (
-            relationships.select("source_id", "target_id")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        edges = relationships.select("source_id", "target_id")
+    edges = edges.distinct().localCheckpoint(eager=False)
     remaining = verts.localCheckpoint(eager=True)
     out: DataFrame | None = None
-    # r17 (optimization, guide §3.1): every peel/trim layer semi-joins
-    # the |E| frame against a VERTEX-sized remaining/settled frame —
-    # all planned as two-sided sort-merge shuffles (checkpointed frames
-    # carry no usable size estimate).  Broadcast the vertex-sized side
-    # under the standard ≤2M gate; the |E| frame then never shuffles
-    # for the peeling.  Above the gate everything stays distributed.
-    n_verts = verts.count()
-    bc_v = (
-        (lambda df: F.broadcast(df))
-        if n_verts <= broadcast_vertex_limit
-        else (lambda df: df)
-    )
+
+    def within(e: DataFrame, vs: DataFrame) -> DataFrame:
+        return (
+            e.join(
+                u.bc(vs.withColumnRenamed("dt_id", "source_id")),
+                "source_id", "left_semi",
+            )
+            .join(
+                u.bc(vs.withColumnRenamed("dt_id", "target_id")),
+                "target_id", "left_semi",
+            )
+            .localCheckpoint(eager=True)
+        )
+
     first_round = True
     for _ in range(max_rounds):
         if not remaining.take(1):
             break
-        if first_round and use_vid:
-            # round 1: remaining IS the whole endpoint universe and the
-            # store's edge guard enforces endpoint RI — the two semi
-            # joins are no-ops; materialize the edge frame directly
-            # (string-path inputs are untrusted and keep the joins)
+        if first_round and layout is not None:
             e = edges.localCheckpoint(eager=True)
         else:
-            e = (
-                edges.join(
-                    bc_v(remaining.withColumnRenamed("dt_id", "source_id")),
-                    "source_id",
-                    "left_semi",
-                )
-                .join(
-                    bc_v(remaining.withColumnRenamed("dt_id", "target_id")),
-                    "target_id",
-                    "left_semi",
-                )
-                .localCheckpoint(eager=True)
-            )
+            e = within(edges, remaining)
         first_round = False
-        # TRIM (the T of FW-BW-Trim): a vertex with no in-edge or no
-        # out-edge in the REMAINING subgraph is a singleton SCC —
-        # iterated trimming peels all DAG appendages without any label
-        # propagation.  On a mostly-acyclic graph (the twin graph)
-        # this settles nearly everything in O(dag-depth) cheap joins,
-        # leaving FW-BW only the cyclic core.
-        #
-        # r8: one degree aggregation per layer instead of four
-        # membership probes — a single union+groupBy yields
-        # (id, has_out, has_in); vertices missing either edge direction
-        # (plus isolated vertices never touched by e) are the layer's
-        # trivial SCCs.  Settled frames accumulate in a list and union
-        # once per round (each element is already checkpoint-derived,
-        # so the union's lineage stays flat).
+        # settled singleton layers accumulate and union once per round
+        # (each is checkpoint-derived, so the union's lineage is flat)
         trivial_parts: list[DataFrame] = []
         while True:
             deg = (
@@ -1213,7 +1047,7 @@ def strongly_connected_components(
                 .agg(F.max("o").alias("has_out"), F.max("i").alias("has_in"))
             )
             lab = (
-                remaining.join(bc_v(deg), "dt_id", "left")
+                remaining.join(u.bc(deg), "dt_id", "left")
                 .select(
                     "dt_id",
                     (
@@ -1233,17 +1067,7 @@ def strongly_connected_components(
             remaining = lab.filter(~F.col("__triv")).select("dt_id")
             if not remaining.take(1):
                 break  # everything settled; skip the dead e rebuild
-            e = (
-                e.join(
-                    bc_v(remaining.withColumnRenamed("dt_id", "source_id")),
-                    "source_id", "left_semi",
-                )
-                .join(
-                    bc_v(remaining.withColumnRenamed("dt_id", "target_id")),
-                    "target_id", "left_semi",
-                )
-                .localCheckpoint(eager=True)
-            )
+            e = within(e, remaining)
         for settled_t in trivial_parts:
             out = settled_t if out is None else out.unionByName(settled_t)
         if trivial_parts:
@@ -1253,9 +1077,7 @@ def strongly_connected_components(
         fwd, f_ok = _min_propagate(remaining, e, True, max_iters)
         bwd, b_ok = _min_propagate(remaining, e, False, max_iters)
         if not (f_ok and b_ok):
-            # Partial labels would settle one SCC under several ids
-            # (two low-id anchors > max_iters hops apart inside a single
-            # component) — refuse to mislabel, per the docstring contract.
+            # partial labels would settle one SCC under several ids
             raise RuntimeError(
                 f"SCC min-propagation did not converge in {max_iters} "
                 "supersteps (graph diameter too large); raise max_iters"
@@ -1269,7 +1091,7 @@ def strongly_connected_components(
         out = settled if out is None else out.unionByName(settled)
         out = out.localCheckpoint(eager=True)
         remaining = remaining.join(
-            bc_v(settled), "dt_id", "left_anti"
+            u.bc(settled), "dt_id", "left_anti"
         ).localCheckpoint(eager=True)
     else:
         if remaining.take(1):  # pragma: no cover — pathological chains
@@ -1278,26 +1100,11 @@ def strongly_connected_components(
             )
     if out is None:
         out = verts.select("dt_id", F.col("dt_id").alias("scc"))
-    if use_vid:
-        bc = _bc_vid_gate(vid_map)
-        dec_id = vid_map.select(
-            F.col("vid").alias("dt_id"), F.col("dt_id").alias("__id_s")
-        )
-        dec_scc = vid_map.select(
-            F.col("vid").alias("scc"), F.col("dt_id").alias("__scc_s")
-        )
-        out = (
-            out.join(bc(dec_id), "dt_id")
-            .join(bc(dec_scc), "scc")
-            .select(
-                F.col("__id_s").alias("dt_id"), F.col("__scc_s").alias("scc")
+    if layout is not None:
+        out = _decode(u, out, vid_map, "dt_id", "scc").unionByName(
+            _isolated(u, twins, vid_map).select(
+                "dt_id", F.col("dt_id").alias("scc")
             )
-        )
-        isolated = twins.select("dt_id").join(
-            bc(vid_map.select("dt_id")), "dt_id", "left_anti"
-        )
-        out = out.unionByName(
-            isolated.select("dt_id", F.col("dt_id").alias("scc"))
         )
     return out
 
@@ -1308,27 +1115,19 @@ def harmonic_centrality_sampled(
     max_depth: int = 3,
 ) -> DataFrame:
     """(dt_id, h12, n_reached) — sampled harmonic centrality over the
-    undirected graph: for every node, ``h12 = Σ_sources 12/d(source,
-    node)`` for BFS distances 1..max_depth (unreachable contributes 0),
-    ``n_reached`` = number of sources within range.
+    undirected graph: ``h12 = Σ_sources 12/d(source, node)`` over BFS
+    distances 1..max_depth, ``n_reached`` = sources within range.
 
-    Multi-source BFS as supersteps: the frontier carries (node, source)
-    pairs, one edge join + left-anti dedup against the visited set per
-    depth, ``localCheckpoint`` lineage cuts — O(max_depth) shuffles
-    total, never per source (the standard trick that makes sampled
-    centrality tractable at scale: cost scales with |frontier|, not
-    |sources| × BFS runs).  The 12/d weighting (12, 6, 4 for depths
-    1-3) keeps the score an exact INTEGER sum — order-independent and
-    engine-portable, per the fixed-point oracle rule (a float Σ1/d
-    hashes differently across engines).  ``max_depth`` ≤ 12 for
-    exactness (12/d stays integral at 1,2,3,4,6,12; other depths would
-    truncate — extend the constant if deeper sampling is needed)."""
+    The 12/d weighting keeps the score an exact INTEGER sum
+    (order-independent, engine-portable); ``max_depth`` ≤ 12 keeps 12/d
+    integral at 1, 2, 3, 4, 6, 12.  Cost scales with the frontier, not
+    with |sources| BFS runs (:func:`_multi_source_bfs`)."""
     seen = _multi_source_bfs(relationships, sources, max_depth)
     return (
         seen.filter(F.col("depth") > 0)
         .groupBy(F.col("node").alias("dt_id"))
         .agg(
-            # per-term floor ≡ the old integer 12 // depth weighting
+            # per-term floor ≡ integer 12 // depth
             F.sum(F.floor(F.lit(12) / F.col("depth")))
             .cast("bigint")
             .alias("h12"),
@@ -1356,20 +1155,12 @@ def _multi_source_bfs(
     (the same argument as the Cypher allShortestPaths compiler).
     Needed by Brandes-style betweenness.
 
-    ``und_edges`` (r16): a caller-prebuilt doubled-distinct undirected
-    (source_id, target_id) frame — lets the vid-space callers share ONE
-    materialized edge frame between the forward BFS and their own
-    passes instead of re-deriving it, and keeps the BFS itself
-    id-dtype-agnostic (every join/dedup here keys on column names).
-
-    r17 (optimization, guide §2.4 — loop-invariant hoisting): the edge
-    frame is loop-invariant but the lazy checkpoint recorded
-    UnknownPartitioning, so EVERY depth's frontier join re-exchanged
-    the 2|E| doubled frame.  It is now built through ONE
-    repartition(source_id) whose partitioning the symmetric dedup and
-    the keyed checkpoint both reuse — per depth, only the frontier
-    side shuffles.  Callers passing ``und_edges`` are expected to do
-    the same (betweenness does)."""
+    ``und_edges``: a caller-built doubled-distinct undirected
+    (source_id, target_id) frame, so a caller can share one edge frame
+    with its own passes (the BFS keys on column names only, so any id
+    dtype works).  The edge frame is loop-invariant and partitioned on
+    ``source_id`` once (:func:`_keyed_ckpt`), so per depth only the
+    frontier shuffles; callers passing ``und_edges`` do the same."""
     if und_edges is not None:
         edges = und_edges
     else:
@@ -1426,32 +1217,18 @@ def weighted_shortest_paths(
     sources: DataFrame,
     iters: int = 4,
 ) -> DataFrame:
-    """(dt_id, dist) — single-source-set weighted shortest distances by
-    ``iters`` Bellman-Ford relaxation rounds (distances over paths of at
-    most ``iters`` edges — the k-bounded truncation that keeps sampled
-    graph queries tractable, same convention as the sampled
-    centralities).  ``edges`` is (source_id, target_id, weight) with
-    non-negative integer weights (exact arithmetic — order-independent
-    and engine-portable); ``sources`` is a (dt_id) frame, each at
-    distance 0.  Unreached vertices are omitted (sparse output).
+    """(dt_id, dist) — weighted shortest distances from a source set by
+    ``iters`` Bellman-Ford rounds (paths of at most ``iters`` edges, the
+    hop bound of the sampled centralities).  ``edges`` is (source_id,
+    target_id, weight) with non-negative integer weights (exact,
+    engine-portable); ``sources`` is a (dt_id) frame at distance 0;
+    unreached vertices are omitted.
 
-    GDS parity: the Dijkstra/`shortestPath` family's distance semantics
-    under a hop bound; ties need no break (min over equal longs).
-
-    100 TB shape: DELTA-FRONTIER supersteps — each round joins only the
-    vertices whose distance IMPROVED last round against the edge set
-    (frontier-sized, not state-sized), then folds candidates into the
-    running minimum with one map-side-combined aggregate; early-exits
-    when a round improves nothing.  State and frontier are vertex-sized
-    localCheckpoints, lineage never compounds.
-
-    r16 (optimization, guide §2.4 — loop-invariant hoisting): the edge
-    frame is PRE-PARTITIONED on the join key and checkpointed ONCE —
-    previously every relaxation round re-derived it from source
-    (callers project the weight out of a JSON document column: a full
-    |E| parse + shuffle per round) and re-shuffled it for the frontier
-    join; now rounds shuffle only the frontier side, the same hoisting
-    discipline as PageRank/Louvain."""
+    DELTA-FRONTIER supersteps: each round joins only the vertices whose
+    distance improved last round, folds candidates into the running
+    minimum with one map-side-combined aggregate, and stops when nothing
+    improves.  The edge frame is partitioned and sorted on the join key
+    once (:func:`_keyed_ckpt`), so rounds shuffle only the frontier."""
     spark = edges.sparkSession
     e = _keyed_ckpt(
         edges.select(
@@ -1459,11 +1236,7 @@ def weighted_shortest_paths(
             F.col("target_id").alias("dst"),
             F.col("weight").cast("long").alias("w"),
         ).repartition(spark.sparkContext.defaultParallelism, F.col("src")),
-        # sorted within partitions so the per-round frontier SMJ reads
-        # the preserved [src ASC] ordering instead of re-sorting the
-        # edge side every relaxation round (r16 optimization round —
-        # the plain checkpoint ALSO lost the hash partitioning under
-        # AQE and re-exchanged the edge frame per round; see _keyed_ckpt)
+        # the per-round frontier sort-merge join reads this ordering
         sort_cols=["src"],
     )
     dist = sources.select(
@@ -1497,14 +1270,41 @@ def weighted_shortest_paths(
     return dist.select(F.col("node").alias("dt_id"), "dist")
 
 
+def _walk_starts(starts: DataFrame, walks_per_node: int) -> DataFrame:
+    """(start, walk_no, cur): ``walks_per_node`` walks at each start."""
+    return starts.select(F.col("dt_id").alias("start")).crossJoin(
+        F.broadcast(
+            starts.sparkSession.range(walks_per_node).select(
+                F.col("id").alias("walk_no")
+            )
+        )
+    ).withColumn("cur", F.col("start"))
+
+
+def _walk_hash(salt: str, k: int) -> Column:
+    """H = the first 8 hex chars of md5(salt|start|walk_no|k) as an
+    integer: the seedless, engine-portable step-k draw of a walk."""
+    return F.conv(
+        F.substring(
+            F.md5(
+                F.concat_ws(
+                    "|", F.lit(salt), F.col("start"), F.col("walk_no"),
+                    F.lit(str(k)),
+                )
+            ),
+            1, 8,
+        ),
+        16, 10,
+    ).cast("long")
+
+
 def random_walks(
     relationships: DataFrame,
     starts: DataFrame,
     steps: int = 4,
     walks_per_node: int = 2,
     salt: str = "walk",
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(start, walk_no, step, node) — DETERMINISTIC random walks over
     the directed deduplicated edge set: the DeepWalk/node2vec corpus
@@ -1516,88 +1316,42 @@ def random_walks(
     value-checks against SQL.  Dead ends terminate the walk (no
     restart); step 0 rows (the starts) are not emitted.
 
-    100 TB shape: neighbor ranks and out-degrees are computed ONCE
-    (one shuffle) and checkpointed; each step is two walk-sized
-    equi-joins — (cur = src) to fetch the degree, then (src, rn =
-    pick) against the ranked neighbor table — never a fan-out to all
-    neighbors followed by a filter.  Walk state is walks-sized, not
-    graph-sized.
-
-    r16 (guide §2.3): with the store's persisted long-id layout the
-    JOIN keys go long while the md5 inputs stay the ORIGINAL strings —
-    ``start`` rides the state untouched (the hash never sees ``cur``),
-    neighbor ranks are identical because the encode is
-    order-preserving (rank by target vid ≡ rank by target id), and
-    out-degrees count the same distinct neighbor sets; one decode join
-    over the walk-sized output restores ``node``.  Walks are therefore
-    bit-identical to the string path and still value-check against the
-    SQL oracle."""
+    Scale strategy: neighbor ranks and out-degrees are computed once,
+    partitioned on the source (:func:`_keyed_ckpt`), so each step is
+    two walk-sized equi-joins in which only the walk state shuffles;
+    state is walks-sized, never graph-sized.  With the layout the join
+    keys are long ids while the md5 inputs stay the original strings
+    (``start`` rides the state; ranks by target vid equal ranks by
+    target id), and one decode over the output restores ``node``."""
     from pyspark.sql import Window
 
-    use_vid = vid_edges is not None and vid_map is not None
-    if use_vid:
-        edges = vid_edges.select(
-            F.col("source_vid").alias("source_id"),
-            F.col("target_vid").alias("target_id"),
-        ).distinct()
+    u = universe or VertexUniverse(relationships=relationships)
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
+        edges = _edge_vids(edges_vid).distinct()
     else:
         edges = relationships.select("source_id", "target_id").distinct()
-    # r17 (optimization, guide §2.4): both loop-invariant tables are
-    # consumed once per step on the source key; the lazy checkpoints
-    # recorded UnknownPartitioning so each step re-exchanged the |E|
-    # neighbor table.  The keyed checkpoint pins the window's
-    # hash(source_id) layout, so per step only the walk-state side
-    # shuffles (an explicit (source_id, rn) sort pin was A/B'd and
-    # dropped — the extra sort pass cost more than the per-step SMJ
-    # sort it saved on this join's skinny rows).
     w_rank = Window.partitionBy("source_id").orderBy("target_id")
     nbrs = _keyed_ckpt(edges.withColumn("rn", F.row_number().over(w_rank)))
     degs = _keyed_ckpt(
         edges.groupBy("source_id").agg(F.count(F.lit(1)).alias("deg"))
     )
-    state = starts.select(F.col("dt_id").alias("start")).crossJoin(
-        F.broadcast(
-            starts.sparkSession.range(walks_per_node).select(
-                F.col("id").alias("walk_no")
-            )
-        )
-    ).withColumn("cur", F.col("start"))
-    if use_vid:
-        bc = _bc_vid_gate(vid_map)
+    state = _walk_starts(starts, walks_per_node)
+    if layout is not None:
         # starts outside the endpoint universe are dead ends at step 1
-        # in BOTH paths (no out-edges ⇒ the degree join drops them and
-        # nothing is emitted) — the inner encode join is lossless
-        state = (
-            state.join(
-                bc(
-                    vid_map.select(
-                        F.col("dt_id").alias("cur"),
-                        F.col("vid").alias("__cv"),
-                    )
-                ),
-                "cur",
-            )
-            .select("start", "walk_no", F.col("__cv").alias("cur"))
-        )
+        # either way, so the inner encode join loses nothing
+        state = state.join(
+            u.bc(
+                vid_map.select(
+                    F.col("dt_id").alias("cur"), F.col("vid").alias("__cv")
+                )
+            ),
+            "cur",
+        ).select("start", "walk_no", F.col("__cv").alias("cur"))
     outs: list[DataFrame] = []
     for k in range(1, max(0, steps) + 1):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.lit(salt),
-                        F.col("start"),
-                        F.col("walk_no"),
-                        F.lit(str(k)),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h = _walk_hash(salt, k)
         picked = (
             state.join(degs, state["cur"] == degs["source_id"])
             .select(
@@ -1623,16 +1377,9 @@ def random_walks(
                 F.col("cur").alias("node"),
             )
         )
-    out = outs[0]
-    for df in outs[1:]:
-        out = out.unionByName(df)
-    if use_vid:
-        dec = vid_map.select(
-            F.col("vid").alias("node"), F.col("dt_id").alias("__node_s")
-        )
-        out = out.join(bc(dec), "node").select(
-            "start", "walk_no", "step", F.col("__node_s").alias("node")
-        )
+    out = reduce(DataFrame.unionByName, outs)
+    if layout is not None:
+        out = _decode(u, out, vid_map, "node")
     return out
 
 
@@ -1646,24 +1393,18 @@ def node2vec_walks(
     salt: str = "n2v",
 ) -> DataFrame:
     """(start, walk_no, step, node) — DETERMINISTIC node2vec
-    second-order biased walks (Grover & Leskovec 2016) over the
-    directed deduplicated edge set.  From current vertex v with
-    previous vertex t, candidate x gets unnormalized weight α(t, x):
-    ``1/p`` if x == t (return), ``1`` if the edge t→x exists (BFS-ish),
-    else ``1/q`` (DFS-ish).  ``p``/``q`` must be positive INTEGERS:
-    weights are scaled by p·q (return → q, adjacent → p·q, else → p)
-    so every cumulative sum is exact BIGINT.  The pick is the first
+    second-order biased walks (Grover & Leskovec 2016) over the directed
+    deduplicated edge set.  From vertex v with previous vertex t, candidate
+    x weighs ``1/p`` if x == t, ``1`` if the edge t→x exists, else ``1/q``;
+    ``p``/``q`` must be positive INTEGERS, and weights are scaled by p·q so
+    every cumulative sum is an exact BIGINT.  The pick is the first
     candidate (ranked by target id) whose cumulative weight exceeds
-    ``H(salt|start|walk_no|k) % total_weight`` — md5-derived,
-    seedless, engine-portable, so the corpus value-checks against an
-    unrolled SQL replay.  Step 1 (no previous vertex) is the uniform
-    first-order pick; dead ends terminate.
+    ``H % total_weight`` (:func:`_walk_hash`), so the corpus value-checks
+    against an unrolled SQL replay.  Step 1 is the uniform first-order
+    pick; dead ends terminate.
 
-    100 TB shape: per step, one walk→neighbors join (fans out to the
-    walk vertices' out-degrees — bounded by Δ·|walks|, never
-    graph-sized), one left join against the edge set for the t→x
-    adjacency flag, and one per-walk cumulative window whose
-    partitions are single-vertex neighbor lists."""
+    Per step: one walk→neighbors join (bounded by Δ·|walks|), one left
+    join for the t→x adjacency flag and one per-walk cumulative window."""
     from pyspark.sql import Window
 
     edges = relationships.select("source_id", "target_id").distinct()
@@ -1671,32 +1412,12 @@ def node2vec_walks(
     adj = edges.select(
         F.col("source_id").alias("__t"), F.col("target_id").alias("__x")
     ).localCheckpoint(eager=False)
-    state = (
-        starts.select(F.col("dt_id").alias("start"))
-        .crossJoin(
-            F.broadcast(
-                starts.sparkSession.range(walks_per_node).select(
-                    F.col("id").alias("walk_no")
-                )
-            )
-        )
-        .withColumn("cur", F.col("start"))
-        .withColumn("prev", F.lit(None).cast("string"))
+    state = _walk_starts(starts, walks_per_node).withColumn(
+        "prev", F.lit(None).cast("string")
     )
     outs: list[DataFrame] = []
     for k in range(1, max(0, steps) + 1):
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit(salt), F.col("start"), F.col("walk_no"),
-                        F.lit(str(k)),
-                    )
-                ),
-                1, 8,
-            ),
-            16, 10,
-        ).cast("long")
+        h = _walk_hash(salt, k)
         cand = state.join(nbrs, state["cur"] == nbrs["source_id"]).select(
             "start", "walk_no", "prev", "cur",
             F.col("target_id").alias("__cand"),
@@ -1738,20 +1459,14 @@ def node2vec_walks(
                 F.col("cur").alias("node"),
             )
         )
-    out = outs[0]
-    for df in outs[1:]:
-        out = out.unionByName(df)
-    return out
+    return reduce(DataFrame.unionByName, outs)
 
 
 def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     """(center, context, n_pairs) — skip-gram co-occurrence pairs from a
-    :func:`random_walks` corpus: two walk positions within ``window``
-    steps of each other co-occur (both directions, center ≠ context) —
-    the input a word2vec-style node-embedding trainer consumes.
-
-    100 TB shape: one self-join keyed on the walk id (walk-sized, never
-    graph-sized) + a map-side-combined pair rollup."""
+    :func:`random_walks` corpus: two walk positions within ``window`` steps
+    co-occur (both directions, center ≠ context).  One walk-keyed
+    self-join + a map-side-combined pair rollup."""
     a = walks.select(
         "start", "walk_no", F.col("step").alias("i"),
         F.col("node").alias("center"),
@@ -1771,6 +1486,30 @@ def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
     )
 
 
+def _with_ppmi(pairs: DataFrame) -> DataFrame:
+    """``pairs`` plus ``__ppmi`` = ln((n·N)/(cnt_c·cnt_x)) clipped at 0
+    — positive PMI over the node marginals (two node-sized aggregates
+    joined back, broadcast) and the 1-row corpus total."""
+    cc = pairs.groupBy("center").agg(F.sum("n_pairs").alias("__cnt_c"))
+    cx = pairs.groupBy("context").agg(F.sum("n_pairs").alias("__cnt_x"))
+    tot = pairs.agg(F.sum("n_pairs").alias("__n_tot"))
+    return (
+        pairs.join(F.broadcast(cc), "center")
+        .join(F.broadcast(cx), "context")
+        .crossJoin(F.broadcast(tot))
+        .withColumn(
+            "__ppmi",
+            F.greatest(
+                F.lit(0.0),
+                F.log(
+                    (F.col("n_pairs") * F.col("__n_tot"))
+                    / (F.col("__cnt_c") * F.col("__cnt_x"))
+                ),
+            ),
+        )
+    )
+
+
 def node_embeddings_ri(
     pairs: DataFrame,
     dim: int = 16,
@@ -1778,34 +1517,22 @@ def node_embeddings_ri(
     weighting: str = "count",
 ) -> DataFrame:
     """(dt_id, embedding) — RANDOM-INDEXING node embeddings from a
-    skip-gram co-occurrence corpus (Kanerva/Sahlgren random indexing,
-    the incremental count-based embedding trainer): each context node
-    x carries a ±1 md5-derived index vector, and a node's embedding is
-    the weighted sum of the index vectors of everything it co-occurs
-    with::
+    skip-gram co-occurrence corpus (Kanerva/Sahlgren): each context x
+    carries a ±1 md5-derived index vector, and a node's embedding is the
+    weighted sum of the index vectors of everything it co-occurs with::
 
         emb_j(c) = Σ_x w(c, x) · sign(j, x)
         sign(j, x) = +1 iff md5(f"{salt}-{j}-{x}")[0] in '0'..'7'
 
-    This is the distributed-exact member of the trainer family: with
-    ``weighting="count"`` (w = n_pairs) every term is BIGINT and the
-    sum is order-independent, so the embedding VALUE-CHECKS against any
-    SQL engine — same construction discipline as the JL projection.
-    ``weighting="ppmi"`` reweights by positive PMI (ln((n·N)/(cnt_c·
-    cnt_x)) clipped at 0, float, the word2vec-equivalent weighting per
-    Levy & Goldberg 2014) — better geometry for retrieval, but float
-    sums are summation-order-dependent, so PPMI output is for
-    consumers, not for cross-engine hashing.
+    With ``weighting="count"`` (w = n_pairs) every term is BIGINT and the
+    sum is order-independent, so the embedding value-checks against SQL.
+    ``weighting="ppmi"`` reweights by positive PMI (:func:`_with_ppmi`,
+    Levy & Goldberg 2014): better retrieval geometry, but float sums are
+    order-dependent, so it is for consumers, not cross-engine hashing.
 
-    100 TB shape: ONE map-side-combined groupBy on the center key —
-    the ``dim`` per-dimension sums are independent partial aggregates
-    in the same exchange, the sign is computed inline (md5 in
-    whole-stage codegen, no sign matrix to ship since contexts are
-    unbounded), and nothing is vocab-bounded: unlike SGD trainers the
-    model never materializes driver-side, so this path scales to
-    billion-node vocabularies.  PPMI adds two node-sized marginal
-    aggregates joined back (broadcast when small) and a 1-row total
-    carried by crossJoin."""
+    One map-side-combined groupBy on the center key computes all ``dim``
+    sums with the sign inline; no model materializes on the driver, so
+    any vocabulary size works."""
     if weighting not in ("count", "ppmi"):
         raise ValueError(f"unknown weighting {weighting!r}")
 
@@ -1826,21 +1553,8 @@ def node_embeddings_ri(
             for j in range(dim)
         ]
     else:
-        cc = pairs.groupBy("center").agg(F.sum("n_pairs").alias("__cnt_c"))
-        cx = pairs.groupBy("context").agg(F.sum("n_pairs").alias("__cnt_x"))
-        tot = pairs.agg(F.sum("n_pairs").alias("__n_tot"))
-        pairs = (
-            pairs.join(F.broadcast(cc), "center")
-            .join(F.broadcast(cx), "context")
-            .crossJoin(F.broadcast(tot))
-        )
-        w = F.greatest(
-            F.lit(0.0),
-            F.log(
-                (F.col("n_pairs") * F.col("__n_tot"))
-                / (F.col("__cnt_c") * F.col("__cnt_x"))
-            ),
-        )
+        pairs = _with_ppmi(pairs)
+        w = F.col("__ppmi")
         aggs = [F.sum(w * sign(j)).alias(f"__e{j}") for j in range(dim)]
     return (
         pairs.groupBy("center")
@@ -1863,36 +1577,25 @@ def node_embeddings_sgd(
     shards: int = 8,
     salt: str = "sgd",
     combine: str = "in+out",
-    max_vocab: int = 2_000_000,
+    max_vocab: int = BROADCAST_VERTEX_LIMIT,
 ) -> DataFrame:
     """(dt_id, embedding) — word2vec-style SGNS (skip-gram with
-    negative sampling) trained over the (center, context, n_pairs)
-    corpus: the gradient-descent member of the trainer family, for
-    when count-linear embeddings (:func:`node_embeddings_ri`) aren't
-    enough.  Parameter-averaged hogwild sharding:
+    negative sampling) over the (center, context, n_pairs) corpus, by
+    parameter-averaged sharding:
 
-    1. pairs hash into ``shards`` buckets (md5 of the pair — stable
-       under repartitioning);
-    2. each shard trains locally inside one Arrow-batched
-       ``applyInPandas`` task — rows sorted by (center, context) so
-       per-shard SGD is DETERMINISTIC; negative contexts are md5-picks
-       from the broadcast vocab; the positive gradient is scaled by
-       ln(1 + n_pairs) (sub-linear multiplicity, the standard corpus
-       dampening);
+    1. pairs hash into ``shards`` buckets (md5 of the pair);
+    2. each shard trains in one ``applyInPandas`` task, rows sorted by
+       (center, context) so per-shard SGD is deterministic; negatives are
+       md5-picks from the vocab; the positive gradient scales by
+       ln(1 + n_pairs);
     3. shard models average per node, weighted by touch count, and the
-       average re-broadcasts for the next epoch (Zinkevich et al.'s
-       parameter averaging).
+       average re-broadcasts for the next epoch.
 
-    Fully deterministic end-to-end (md5 init, md5 negatives, sorted
-    visit order, weighted-mean merge) but NOT SQL-expressible — the
-    driver records the rows-only check; quality is gated by
-    :func:`embedding_neighbor_recall`.
-
-    Scale note (honest bound): parameter averaging broadcasts the
-    model each epoch, so the VOCABULARY must fit executor memory —
-    ~1 GB per 10M nodes at dim 8.  Same bound as the BPE trainer's
-    vocab stage; beyond it, use :func:`node_embeddings_ri`, which has
-    no driver-side state at any vocabulary size."""
+    Deterministic end to end but not SQL-expressible (rows-only on the
+    board); quality is gated by :func:`embedding_neighbor_recall`.  The
+    model broadcasts each epoch, so the vocabulary must fit executor
+    memory (~1 GB per 10M nodes at dim 8): above ``max_vocab`` it raises
+    and points at :func:`node_embeddings_ri`."""
     import hashlib
 
     spark = pairs.sparkSession
@@ -1900,10 +1603,8 @@ def node_embeddings_sgd(
     def h64(s: str) -> int:
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
-    # the vocab-bound guard, BEFORE the collect: parameter averaging
-    # needs the model driver/executor-resident, so an oversized corpus
-    # must fail with a clear redirect instead of an opaque driver OOM
-    # (same cap discipline as allShortestPaths / range_join).
+    # the vocab cap runs BEFORE the collect, so an oversized corpus
+    # fails with a redirect instead of a driver OOM
     nv_probe = (
         pairs.select("center").union(pairs.select("context"))
         .distinct().count()
@@ -2050,24 +1751,17 @@ def embedding_neighbor_recall(
     method: str = "ri",
     truth_weighting: str = "count",
 ) -> DataFrame:
-    """(method, recall_at_k, meets_floor) — the trainer quality gate
-    (same shape as the ANN recall gates): for the ``probes`` nodes
-    with the largest co-occurrence mass, compare the top-``k``
-    neighbors by embedding cosine against the top-``k`` by EXACT
-    cosine over the sparse co-occurrence vectors — the distributional
-    similarity the embedding is supposed to compress (random indexing
-    approximates exactly this inner product; SGNS factorizes the
-    shifted PMI of the same matrix).  A trainer that fails the floor
-    regressed: geometry no longer reflects the corpus.
+    """(method, recall_at_k, meets_floor) — the trainer quality gate:
+    for the ``probes`` nodes with the largest co-occurrence mass, compare
+    the top-``k`` neighbors by embedding cosine with the top-``k`` by EXACT
+    cosine over the sparse co-occurrence vectors (counts, or positive PMI
+    with ``truth_weighting="ppmi"`` for the PMI-family trainers).  A
+    trainer below the floor no longer reflects the corpus.
 
-    100 TB shape: ground truth is a probe-filtered join — only the
-    ``probes`` rows fan out against the pair corpus on the shared
-    context key, so the exact-cosine side is probe-bounded, never
-    all-pairs; probe vectors broadcast (probes × dim is bytes);
-    candidate scoring is one map-side pass over the embedding table +
-    a top-k window — brute force by design because it's a GATE over a
-    sampled probe set, not a serving path (serving is the
-    LSH/IVF/PQ family)."""
+    Ground truth is a probe-filtered join (probe-bounded, never
+    all-pairs); candidate scoring is one pass over the embedding table + a
+    top-k window — brute force by design, since it gates a sampled probe
+    set rather than serving queries."""
     from pyspark.sql import Window
 
     if truth_weighting not in ("count", "ppmi"):
@@ -2079,37 +1773,18 @@ def embedding_neighbor_recall(
         .limit(probes)
         .select("center")
     )
-    # the exact vector each trainer is supposed to compress: raw
-    # counts for the count-linear trainers, positive PMI for the
-    # PMI-family (SGNS factorizes shifted PMI — Levy & Goldberg 2014)
+    # the exact vector each trainer compresses (SGNS: shifted PMI)
     if truth_weighting == "ppmi":
-        cc = pairs.groupBy("center").agg(F.sum("n_pairs").alias("__cnt_c"))
-        cx = pairs.groupBy("context").agg(F.sum("n_pairs").alias("__cnt_x"))
-        tot = pairs.agg(F.sum("n_pairs").alias("__n_tot"))
         pairs = (
-            pairs.join(F.broadcast(cc), "center")
-            .join(F.broadcast(cx), "context")
-            .crossJoin(F.broadcast(tot))
-            .withColumn(
-                "__w",
-                F.greatest(
-                    F.lit(0.0),
-                    F.log(
-                        (F.col("n_pairs") * F.col("__n_tot"))
-                        / (F.col("__cnt_c") * F.col("__cnt_x"))
-                    ),
-                ),
-            )
-            .filter(F.col("__w") > 0)
-            .select("center", "context", F.col("__w").alias("__wt"))
+            _with_ppmi(pairs)
+            .filter(F.col("__ppmi") > 0)
+            .select("center", "context", F.col("__ppmi").alias("__wt"))
         )
     else:
         pairs = pairs.select(
             "center", "context", F.col("n_pairs").cast("double").alias("__wt")
         )
-    # exact cosine: dot of the probe's and candidate's weighted
-    # co-occurrence vectors over the shared contexts, over the l2
-    # norms of each node's full vector
+    # exact cosine over the shared contexts and full-vector l2 norms
     norms = pairs.groupBy("center").agg(
         F.sqrt(F.sum(F.col("__wt") * F.col("__wt"))).alias("__nrm")
     )
@@ -2198,14 +1873,9 @@ def distance_distribution(
 ) -> DataFrame:
     """(depth, n_pairs) — hop-distance histogram from a sampled source
     set over the undirected graph: how many (node, source) pairs sit at
-    each BFS distance 1..max_depth.  The pre-flight stat that sizes
-    ``max_depth`` for the sampled centralities (the analogue of
-    :func:`degree_distribution` for whole-graph algorithms): the depth
-    where the histogram stops growing is the sampled diameter, and the
-    pair counts ARE the frontier frames the centralities will carry.
-
-    Same shared multi-source BFS — O(max_depth) shuffles regardless of
-    source count; the rollup is a tiny map-side-combined aggregate."""
+    each BFS distance 1..max_depth.  Sizes ``max_depth`` for the sampled
+    centralities: the depth where it stops growing is the sampled
+    diameter, and the counts are the frontiers they will carry."""
     seen = _multi_source_bfs(relationships, sources, max_depth)
     return (
         seen.filter(F.col("depth") > 0)
@@ -2220,18 +1890,10 @@ def closeness_centrality_sampled(
     max_depth: int = 3,
 ) -> DataFrame:
     """(dt_id, dist_sum, n_reached, closeness) — sampled closeness
-    centrality over the undirected graph (GDS parity shape, sampled to
-    a source set like ``harmonic_centrality_sampled``): per node,
-    ``dist_sum = Σ_sources d(source, node)`` over BFS distances
-    1..max_depth and ``closeness = n_reached / dist_sum`` (the sampled
-    analogue of (n−1)/Σd), rounded to 6 — integers come first so the
-    score is reproducible and engine-portable; unreachable sources
-    simply don't contribute (the standard sampled-closeness
-    convention; a true-infinite-distance penalty would need the full
-    BFS this sampling exists to avoid).
-
-    Same multi-source-BFS shape as harmonic: O(max_depth) shuffles
-    total, never per source."""
+    centrality over the undirected graph: ``dist_sum = Σ_sources
+    d(source, node)`` over BFS distances 1..max_depth and ``closeness =
+    n_reached / dist_sum`` rounded to 6 (integers first, so the score is
+    engine-portable); unreachable sources do not contribute."""
     seen = _multi_source_bfs(relationships, sources, max_depth)
     return (
         seen.filter(F.col("depth") > 0)
@@ -2255,6 +1917,7 @@ def eigenvector_centrality(
     twins: DataFrame,
     relationships: DataFrame,
     iters: int = 5,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, score) — eigenvector centrality by max-normalized power
     iteration over the undirected deduplicated edge set: x₀ = 1,
@@ -2265,37 +1928,17 @@ def eigenvector_centrality(
     varies, so the result is engine-portable.  Isolated vertices score
     0 (they receive no mass).
 
-    100 TB shape: the same hoisted superstep as PageRank — per
-    iteration, one edges⋈state join + a map-side-combined sum; the
-    state broadcasts under the ≤2M-vertex gate and the normalizing max
-    is a 1-row aggregate carried as a cross join (no driver collect
-    inside the loop)."""
-    verts = twins.select("dt_id").localCheckpoint(eager=False)
-    n = verts.count()
-    bc = (lambda df: F.broadcast(df)) if n <= 2_000_000 else (lambda df: df)
+    Scale strategy: one :func:`_power_step` per iteration, the
+    normalizing max a 1-row aggregate carried as a cross join."""
+    u = universe or VertexUniverse(twins, relationships)
+    verts = twins.select("dt_id").localCheckpoint(eager=True)
     edges = _undirected(relationships).localCheckpoint(eager=True)
     state = verts.withColumn("score", F.lit(1.0)).localCheckpoint(eager=True)
     for i in range(iters):
-        sums = (
-            edges.join(bc(state), edges["source_id"] == state["dt_id"])
-            .select(F.col("target_id").alias("dt_id"), "score")
-            .groupBy("dt_id")
-            .agg(F.sum("score").alias("s"))
-        )
-        mx = sums.agg(F.max("s").alias("mx"))
-        state = (
-            verts.join(bc(sums), "dt_id", "left")
-            .crossJoin(mx)
-            .select(
-                "dt_id",
-                F.when(
-                    F.col("mx").isNotNull() & (F.col("mx") > 0),
-                    F.coalesce(F.col("s"), F.lit(0.0)) / F.col("mx"),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("score"),
-            )
-            .localCheckpoint(eager=(i % 2 == 1) or (i == iters - 1))
+        state = _power_step(
+            u, edges, state, verts, "dt_id", F.col("score"),
+            _max_of_sums, _max_normalized("score"),
+            eager=(i % 2 == 1) or (i == iters - 1),
         )
     return state.select("dt_id", F.round("score", 6).alias("score"))
 
@@ -2304,69 +1947,42 @@ def betweenness_centrality_sampled(
     relationships: DataFrame,
     sources: DataFrame,
     max_depth: int = 3,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
-    """(dt_id, betweenness) — Brandes betweenness centrality sampled
-    to a pivot (source) set, distances bounded by ``max_depth``
-    (k-bounded betweenness: pairs farther apart contribute nothing —
-    the standard truncation that keeps sampled betweenness tractable;
-    GDS's sampled mode picks pivots the same way).
+    """(dt_id, betweenness) — Brandes betweenness centrality sampled to
+    a pivot (source) set, distances bounded by ``max_depth`` (pairs farther
+    apart contribute nothing; GDS's sampled mode picks pivots the same
+    way).
 
-    Forward: the shared multi-source BFS with walk counts gives
-    σ(s, v) = number of shortest s→v paths (every minimum-length walk
-    is a path).  Backward (Brandes' dependency accumulation), by
-    DESCENDING depth layer:
+    Forward: the multi-source BFS with walk counts gives σ(s, v), the
+    number of shortest s→v paths.  Backward, by DESCENDING depth layer:
 
         δ(s, v) = Σ_{w: v→w, depth(w)=depth(v)+1} σ(s,v)/σ(s,w) · (1 + δ(s,w))
 
     betweenness(v) = Σ_s δ(s, v) over non-source layers, rounded at 6.
-    Output is SPARSE: a node never interior to any sampled pair (e.g.
-    the pivots themselves on a path) is omitted, not zero-filled —
-    join against the vertex set if dense scores are needed.
+    Output is SPARSE: a node never interior to a sampled pair is omitted.
 
-    100 TB shape: the forward pass is O(max_depth) frontier joins; the
-    backward pass is one layer⋈edges⋈layer join per depth — every
-    frame is (reached-pairs)-sized, never |V|², and nothing is
-    collected to the driver.
-
-    r16 (guide §2.3): with the store's persisted long-id layout
-    (``vid_edges``/``vid_map``) the whole forward-σ/backward-δ pipeline
-    runs on 8-byte longs — pivots encode through one tiny join, ONE
-    doubled-distinct undirected vid frame is shared by the BFS and
-    every backward layer, and the sparse result decodes once at the
-    end.  σ/δ arithmetic is id-value-independent (counts and ratios
-    keyed by ids), so scores are unchanged."""
-    use_vid = vid_edges is not None and vid_map is not None
-    if use_vid:
+    Scale strategy: one doubled-distinct undirected edge frame,
+    partitioned on the source once, serves the O(max_depth) forward
+    frontier joins and every backward layer join; every frame is
+    reached-pairs-sized and only the max depth is collected.  With the
+    layout the pipeline runs on long ids and decodes once."""
+    u = universe or VertexUniverse(relationships=relationships)
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
         sources = sources.join(vid_map, "dt_id").select(
             F.col("vid").alias("dt_id")
         )
-        ev = vid_edges.select(
-            F.col("source_vid").alias("source_id"),
-            F.col("target_vid").alias("target_id"),
-        )
-        doubled = ev.unionByName(
-            ev.select(
-                F.col("target_id").alias("source_id"),
-                F.col("source_id").alias("target_id"),
-            )
-        )
+        e0 = _edge_vids(edges_vid)
     else:
         e0 = relationships.select("source_id", "target_id")
-        doubled = e0.unionByName(
-            e0.select(
-                F.col("target_id").alias("source_id"),
-                F.col("source_id").alias("target_id"),
-            )
+    doubled = e0.unionByName(
+        e0.select(
+            F.col("target_id").alias("source_id"),
+            F.col("source_id").alias("target_id"),
         )
-    # r17 (optimization, guide §2.4): the forward BFS joins this frame
-    # once per depth and the backward pass once per layer, all on
-    # source_id — ONE repartition(source_id) (whose partitioning the
-    # symmetric dedup reuses, so the build costs a single exchange)
-    # through the AQE-proof keyed checkpoint keeps the 2|E| frame in
-    # place for every one of those joins; previously the lazy
-    # checkpoint's UnknownPartitioning re-exchanged it each time.
+    )
     edges = _keyed_ckpt(
         doubled.repartition(
             relationships.sparkSession.sparkContext.defaultParallelism,
@@ -2441,13 +2057,8 @@ def betweenness_centrality_sampled(
     bw = acc.groupBy(F.col("node").alias("dt_id")).agg(
         F.round(F.sum("delta"), 6).alias("betweenness")
     )
-    if use_vid:
-        dec = vid_map.select(
-            F.col("vid").alias("dt_id"), F.col("dt_id").alias("__id_s")
-        )
-        bw = bw.join(_bc_vid_gate(vid_map)(dec), "dt_id").select(
-            F.col("__id_s").alias("dt_id"), "betweenness"
-        )
+    if layout is not None:
+        bw = _decode(u, bw, vid_map, "dt_id")
     return bw
 
 
@@ -2457,101 +2068,54 @@ def node_similarity_jaccard(
     top_k: int = 20,
     max_target_degree: int | None = None,
     candidates: DataFrame | None = None,
-    broadcast_vertex_limit: int = 2_000_000,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
-    """Neighbor-set Jaccard node similarity (the GDS nodeSimilarity
-    shape): for every source pair sharing at least one OUT-neighbor,
-    ``|N(a) ∩ N(b)| / |N(a) ∪ N(b)|`` over the (optionally
-    name-filtered) directed edge set; top-k pairs under a total order
-    (similarity desc, a asc, b asc).
+    """Neighbor-set Jaccard node similarity (GDS nodeSimilarity): for
+    every source pair sharing at least one OUT-neighbor, ``|N(a) ∩ N(b)| /
+    |N(a) ∪ N(b)|`` over the (optionally name-filtered) directed edge set;
+    top-k pairs under the total order (similarity desc, a asc, b asc).
 
-    Hub guard (r10, GDS ``upperDegreeCutoff`` parity):
-    ``max_target_degree`` drops TARGETS whose fan-in exceeds the
-    cutoff BEFORE the co-neighbor join — a single hub target with
-    fan-in d otherwise emits d²/2 pairs, the one term that can blow
-    this plan up at corpus scale.  Degrees are computed over the SAME
-    filtered edge set, so the Jaccard stays exact similarity of the
-    filtered neighbor sets (deterministic and SQL-oracle-able).
+    ``max_target_degree`` (GDS ``upperDegreeCutoff``) drops TARGETS whose
+    fan-in exceeds the cutoff before the co-neighbor join (a fan-in-d hub
+    emits d²/2 pairs); degrees use the same filtered edges, so the Jaccard
+    stays exact on them.  ``candidates`` — an (a, b) pair frame, e.g. from
+    MinHash/LSH banding — switches to re-scoring: intersections are
+    computed candidate-driven, bounded by the candidate set.
 
-    ``candidates`` — an (a, b) pair frame (e.g. from MinHash/LSH
-    banding in operators/similarity.py) — switches to the RE-SCORER
-    path: intersections are computed candidate-driven (pairs ⋈
-    neighbor sets), so the pair count is bounded by the candidate set
-    and the d² co-neighbor explosion never happens at all.  This is
-    the documented corpus-scale shape; the exact co-neighbor join is
-    the small/medium-graph default and the oracle baseline.
-
-    100 TB shape: intersection counts come from ONE co-neighbor
-    self-join on the shared target + a (a,b) groupBy — two shuffles,
-    no all-pairs product; pairs that share nothing are never
-    materialized.  Degrees join after aggregation (small side, AQE
-    broadcasts).
-
-    r16 (optimization): the co-neighbor join and the (a,b) pair
-    aggregate — the Σ C(fan_in, 2)-sized work — run in ORDER-PRESERVING
-    LONG id space (guide §2.3; :func:`_vid_map_for` has the exactness
-    argument — ``<`` pair normalization and the (jaccard, a, b)
-    tie-break decide identically on vids), with a top_k-row decode at
-    the end.  Encode/decode joins ride the ≤``broadcast_vertex_limit``
-    gate like every vertex-sized broadcast in this module.
-    """
-    if vid_edges is not None and vid_map is not None:
-        # store-persisted long-id layout: the directed edge frame is
-        # already encoded (vid ORDER == dt_id ORDER over the endpoint
-        # universe, so the fan-in cap, pair normalization and every
-        # tie-break decide identically); no per-query encode at all
-        ev = vid_edges
-        if rel_name is not None:
-            ev = ev.filter(F.col("name") == rel_name)
-        e = ev.select(
+    Scale strategy: ONE co-neighbor self-join on the shared target + an
+    (a, b) groupBy — pairs that share nothing never materialize — in
+    order-preserving long id space; encode joins ride the universe gate
+    and the top_k rows decode at the end."""
+    u = universe or VertexUniverse(relationships=relationships)
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
+        e = edges_vid.select(
             F.col("source_vid").alias("source_id"),
             F.col("target_vid").alias("target_id"),
-        ).distinct()
-        if max_target_degree is not None:
-            keep = (
-                e.groupBy("target_id")
-                .agg(F.count(F.lit(1)).alias("__fan_in"))
-                .filter(F.col("__fan_in") <= int(max_target_degree))
-                .select("target_id")
-            )
-            e = e.join(keep, "target_id", "left_semi")
-        e = e.localCheckpoint(eager=False)
-        bc = (
-            (lambda df: F.broadcast(df))
-            if vid_map.count() <= broadcast_vertex_limit
-            else (lambda df: df)
+            "name",
         )
     else:
         e = relationships.select("source_id", "target_id", "name")
-        if rel_name is not None:
-            e = e.filter(F.col("name") == rel_name)
-        e = e.select("source_id", "target_id").distinct()
-        if max_target_degree is not None:
-            keep = (
-                e.groupBy("target_id")
-                .agg(F.count(F.lit(1)).alias("__fan_in"))
-                .filter(F.col("__fan_in") <= int(max_target_degree))
-                .select("target_id")
-            )
-            e = e.join(keep, "target_id", "left_semi")
-        # r16b: lazy cut BEFORE the vid map — the filtered/dedup'd edge
-        # subtree (distinct + fan-in groupBy + semi join on the capped
-        # path) is materialized ONCE by the eager vid-map build; the
-        # encode joins read it back instead of re-deriving it (was:
-        # twice per execution — the whole capped-variant regression in
-        # the first r16 timing pass).
-        e = e.localCheckpoint(eager=False)
+    if rel_name is not None:
+        e = e.filter(F.col("name") == rel_name)
+    e = e.select("source_id", "target_id").distinct()
+    if max_target_degree is not None:
+        keep = (
+            e.groupBy("target_id")
+            .agg(F.count(F.lit(1)).alias("__fan_in"))
+            .filter(F.col("__fan_in") <= int(max_target_degree))
+            .select("target_id")
+        )
+        e = e.join(keep, "target_id", "left_semi")
+    # lazy cut: without the layout the eager vid-map build below is its
+    # first action, and the encode joins read it back
+    e = e.localCheckpoint(eager=False)
+    if layout is None:
         vid_map = _vid_map_for(
             e.select(F.col("source_id").alias("dt_id")).unionByName(
                 e.select(F.col("target_id").alias("dt_id"))
             )
-        )
-        bc = (
-            (lambda df: F.broadcast(df))
-            if vid_map.count() <= broadcast_vertex_limit
-            else (lambda df: df)
         )
         sv = vid_map.select(
             F.col("dt_id").alias("source_id"), F.col("vid").alias("__sv")
@@ -2560,8 +2124,8 @@ def node_similarity_jaccard(
             F.col("dt_id").alias("target_id"), F.col("vid").alias("__tv")
         )
         e = (
-            e.join(bc(sv), "source_id")
-            .join(bc(tv), "target_id")
+            e.join(u.bc(sv), "source_id")
+            .join(u.bc(tv), "target_id")
             .select(
                 F.col("__sv").alias("source_id"), F.col("__tv").alias("target_id")
             )
@@ -2569,13 +2133,9 @@ def node_similarity_jaccard(
         )
     deg = e.groupBy("source_id").agg(F.count(F.lit(1)).alias("deg"))
     if candidates is not None:
-        # candidate-driven intersections: normalize pairs to a < b,
-        # attach both neighbor sets, count shared targets.  Join order
-        # keeps the big edge frame on the probe side twice — the pair
-        # frame bounds every intermediate.  Pairs encode through the
-        # same vid map (inner joins: ids absent from the edge set
-        # dropped at the first edge join before, drop at the encode
-        # now — same surviving pairs).
+        # normalize pairs to a < b and encode them (ids absent from the
+        # edge set drop at the inner encode join, as they would at the
+        # first edge join); the pair frame bounds every intermediate
         cand = candidates.select(
             F.least(F.col("a"), F.col("b")).alias("a"),
             F.greatest(F.col("a"), F.col("b")).alias("b"),
@@ -2583,8 +2143,8 @@ def node_similarity_jaccard(
         ca = vid_map.select(F.col("dt_id").alias("a"), F.col("vid").alias("__ca"))
         cb = vid_map.select(F.col("dt_id").alias("b"), F.col("vid").alias("__cb"))
         cand = (
-            cand.join(bc(ca), "a")
-            .join(bc(cb), "b")
+            cand.join(u.bc(ca), "a")
+            .join(u.bc(cb), "b")
             .select(F.col("__ca").alias("a"), F.col("__cb").alias("b"))
         )
         inter = (
@@ -2626,29 +2186,8 @@ def node_similarity_jaccard(
         .orderBy(F.col("jaccard").desc(), F.col("a"), F.col("b"))
         .limit(top_k)
     )
-    # decode the top_k rows (tiny side; the vid order IS the dt_id
-    # order, so re-imposing the same ORDER BY post-decode returns the
-    # identical ranking).  The TOP_K-ROW side carries the broadcast
-    # hint — hash-building the k rows and streaming the vertex-sized
-    # map beats broadcasting the map (guarded for pathological top_k).
-    dec_a = vid_map.select(F.col("vid").alias("a"), F.col("dt_id").alias("__a"))
-    dec_b = vid_map.select(F.col("vid").alias("b"), F.col("dt_id").alias("__b"))
-    tb = (
-        (lambda df: F.broadcast(df))
-        if top_k <= 1_000_000
-        else (lambda df: df)
-    )
-    return (
-        tb(tb(top).join(dec_a, "a"))
-        .join(dec_b, "b")
-        .select(
-            F.col("__a").alias("a"),
-            F.col("__b").alias("b"),
-            "inter",
-            "union_size",
-            "jaccard",
-        )
-        .orderBy(F.col("jaccard").desc(), F.col("a"), F.col("b"))
+    return _decode_top(
+        top, vid_map, top_k, F.col("jaccard").desc(), F.col("a"), F.col("b")
     )
 
 
@@ -2658,22 +2197,14 @@ def neighbor_feature_agg(
     hops: int = 2,
     direction: str = "both",
 ) -> DataFrame:
-    """GraphSAGE-style neighborhood feature aggregation — the feature-
-    engineering pass a graph-ML training pipeline runs before sampling:
-    per node and per layer k, count/mean/min/max of the (k−1)-layer
-    feature over its neighbors, with layer 0 = the node's own input
-    feature.  Nodes whose neighbors carry no feature aggregate to NULL
-    mean/min/max and count 0 — nulls never poison the mean.
+    """GraphSAGE-style neighborhood feature aggregation: per node and
+    layer k, count/mean/min/max of the (k−1)-layer feature over its
+    neighbors, with layer 0 = the node's own feature (``node_features``:
+    (dt_id, feature double)).  Neighbors without a feature aggregate to
+    NULL and count 0.  ``direction``: "out", "in" or "both".
 
-    ``node_features``: (dt_id, feature double).  ``direction``: "out"
-    (follow source→target), "in", or "both".
-
-    100 TB shape: ONE edge⋈state join + ONE map-side-combined groupBy
-    per layer (the superstep pattern); the state frame is vertex-sized
-    and AQE-broadcastable, the edge frame is scanned once per layer.
-    Layer k+1 aggregates layer k's MEAN (standard GNN layering), so
-    deep neighborhoods never materialize multi-hop path explosions.
-    """
+    One edge⋈state join + one map-side-combined groupBy per layer; layer
+    k+1 aggregates layer k's MEAN, so no multi-hop path ever materializes."""
     if direction not in ("out", "in", "both"):
         raise ValueError("direction must be out|in|both")
     e = relationships.select("source_id", "target_id")
@@ -2719,87 +2250,38 @@ def _louvain_round(
     """One synchronous local-move round of weighted Louvain.
 
     ``nbr``: doubled directed edges (src, dst, w) WITHOUT self rows,
-    pre-partitioned on ``dst`` and checkpointed by the caller (loop
-    invariant — the same hoisting that fixed PageRank/CC); ``comm``:
-    (dt_id, comm, k) — the community state CARRIES the weighted degree
-    so no per-round join against a separate degree table is needed.
+    partitioned on the round key and checkpointed by the caller (loop
+    invariant); ``comm``: (dt_id, comm, k) — the community state
+    carries the weighted degree, so no per-round degree join.
 
     All move decisions use EXACT integer arithmetic — the classic gain
     ΔQ(v→c) ∝ k_vc/m − k_v·Σ'_c/(2m²) is compared as
     ``2m·k_vc − k_v·Σ'_c`` over BIGINT counts, so the outcome never
-    depends on float summation order (the property every oracle-able
-    op in this package leans on).  Ties break to the smallest
+    depends on float summation order.  Ties break to the smallest
     community id; only vertices whose hashed parity matches the round
     may move (synchronous swaps between two vertices would otherwise
     oscillate forever).
 
-    Plan shape (r10 rewrite, bit-identical assignments): per round —
-    σ is one small aggregation over the vertex-sized state; the edge
-    frame joins comm on ``dst`` (edges stay in place, only the vertex
-    side shuffles), then ONE k_vc aggregation per (src, candidate c)
-    runs on the src partitioning; (c_v, k) and σ join the
-    candidate-sized output (not the 2|E| edge pass), and the
-    per-vertex argmax ``min(struct(-score, c))`` (≡ max score, min-c
-    tie-break) plus ``max(score where c = c_v)`` — the stay score —
-    share the final vertex aggregation.
-
-    r16 (optimization, guide §2.4 — remove shuffles outright): the r10
-    shape unioned a ZERO-WEIGHT SELF ROW per vertex into the candidate
-    stream before the k_vc aggregation; the Union discarded the edge
-    frame's src partitioning, so BOTH the k_vc aggregation and the
-    per-vertex argmax exchanged the candidate set every round (at 10×
-    data, round 1's candidate set IS the 2|E| edge set — two ~26M-row
-    exchanges per round).  Now the candidate pipeline runs edge-only
-    and stays on the caller's src partitioning end to end — ZERO
-    data-sized exchanges per round: the stay score for a vertex with
-    no active neighbor in its own community is reconstructed from a
-    σ(c_v) broadcast join (same formula at k_vc = 0:
-    ``−k·(σ_cv − k)``; when neighbors in c_v exist the max-when picks
-    the identical merged-sum score, and a best-tie against the absent
-    zero-weight self candidate cannot change the outcome — either way
-    the strict ``best > stay`` comparison says stay).  Vertices with
-    NO nbr rows at all (post-contraction supernodes whose edges are
-    all self loops) never appear in the edge pipeline; they can never
-    move (no candidates), so their state is ROUND-INVARIANT and rides
-    ``iso_state`` — a per-LEVEL constant frame the caller computes
-    once (empty at level 1 by construction) — instead of a per-round
-    self-row union + anti-join."""
+    Plan shape: σ (with community sizes) is one small aggregation over
+    the state; the candidate pipeline runs over the active parity's
+    edges only, joins comm on ``dst``, aggregates k_vc per (src, c) on
+    the src partitioning, and picks the per-vertex argmax
+    ``min(struct(-score, c))`` (max score, min-c tie-break) beside the
+    stay score.  ``bcast`` (the universe gate) broadcasts comm and σ —
+    the raw frames are joined twice each so the planner reuses each
+    exchange (2 broadcast builds per round) — and the round then runs
+    no data-sized exchange.  A vertex with no active neighbor in its
+    own community gets its stay score from σ(c_v) (the same formula at
+    k_vc = 0).  Vertices with no ``nbr`` rows at all (post-contraction
+    supernodes with only self loops) can never move; they ride
+    ``iso_state``, a per-level constant frame."""
     # the previous round's __moved flag (if any) is not state
     comm = comm.select("dt_id", "comm", "k")
-    # csize rides the sigma aggregation for free — the singleton-merge
-    # ordering rule below needs community SIZES
     sigma = comm.groupBy("comm").agg(
         F.sum("k").alias("sigma"), F.count(F.lit(1)).alias("csize")
     )
-    # ONLY the active parity's vertices can move this round, so the
-    # candidate pipeline — the expensive 2|E| pass — runs over edges
-    # whose SRC is active (half the edge set); the inactive half of the
-    # vertex state passes straight through to the output.  Decisions
-    # are identical by construction: an inactive vertex keeps c_v
-    # regardless of its scores.
     active_src = F.pmod(F.xxhash64(F.col("src")), F.lit(2)) == F.lit(parity)
-    # candidate rows: neighbor communities (self rows excluded: a
-    # vertex is not its own neighbor) + the vertex's own community at
-    # weight 0.  ``bcast`` (vertex state fits executor memory — the
-    # same ≤2M-vertex gate PageRank uses, dropping out at scale): the
-    # comm joins broadcast, so the edge set never leaves its partitions
-    # and BOTH aggregations run exchange-free on the caller's src
-    # partitioning — one map-side pass over |E| per round.
-    # r17 (optimization, guide §2.4/§3.1 — reuse, don't rebuild): the
-    # round used FOUR per-round vertex/community-sized broadcast builds
-    # (comm projected two ways + σ projected two ways — measured: 4
-    # BroadcastExchange, 0 ReusedExchange in the round plan; the builds
-    # dominate a round's wall at sf1).  Joining the RAW ``comm`` and
-    # ``sigma`` frames twice each — with the renames moved ABOVE the
-    # join — makes the two exchanges of each pair canonically equal
-    # (same projection, same dt_id/comm build key), so the planner
-    # emits ReusedExchange for the second use: 2 builds per round
-    # instead of 4.  Pure projection refactor — same rows, same
-    # formulas, assignments bit-identical (fixture pins + clique tests).
     comm_j = F.broadcast(comm) if bcast else comm
-    # σ rides the SAME gate as the state broadcasts: when ``bcast`` is
-    # off because |V| exceeds the 2M limit, σ must not broadcast either
-    # (r14 verdict)
     sigma_j = F.broadcast(sigma) if bcast else sigma
     cand = (
         nbr.filter(active_src)
@@ -2840,10 +2322,6 @@ def _louvain_round(
                 F.when(F.col("c") == F.col("c_v"), F.col("csize"))
             ).alias("own_raw"),
         )
-        # σ(c_v) fills the stay score / own size for vertices with no
-        # neighbor in their own community — the SAME raw σ frame as the
-        # candidate join above (r17: identical projection + build key
-        # ⇒ ReusedExchange instead of a second broadcast build)
         .join(sigma_j, F.col("c_v") == F.col("comm"))
         .select(
             F.col("src").alias("dt_id"),
@@ -2861,21 +2339,11 @@ def _louvain_round(
             ),
         )
     )
-    # all per_v rows are active-parity vertices, so the gate reduces to
-    # the score comparison.  move_cond implies c != c_v: when best c ==
-    # c_v the two scores are the same formula over the same
-    # (k_vc, sigma), so the strict > cannot hold — the flag therefore
-    # counts REAL moves.  per_v covers every ACTIVE vertex (self rows);
-    # the inactive half of the state passes through unchanged.
-    # singleton-merge ORDERING rule (r15): two mutual-best SINGLETONS
-    # in the same parity half would otherwise SWAP labels every active
-    # round and never merge (synchronous-Louvain's classic
-    # oscillation; the parity gate only breaks it when the pair's
-    # parities differ).  A singleton may join another singleton only
-    # when the target label sorts BELOW its own — exactly one of the
-    # pair is allowed, so they merge instead of swapping.  Deterministic
-    # (label total order) and quality-monotone (the blocked move's gain
-    # is realized by its partner's allowed move).
+    # move_cond implies c != c_v (equal scores cannot be strictly
+    # greater), so __moved counts real moves.  Singleton-merge ordering:
+    # two mutual-best singletons of the same parity would swap labels
+    # every round; a singleton may join another singleton only when the
+    # target label sorts below its own, so exactly one of the pair moves.
     move_cond = (F.col("best_score") > F.col("stay_score")) & ~(
         (F.col("own_size") == 1)
         & (F.col("best_size") == 1)
@@ -2892,20 +2360,16 @@ def _louvain_round(
         ).select("dt_id", "comm", "k", F.lit(0).alias("__moved"))
     )
     if iso_state is not None:
-        # nbr-isolated vertices (no candidates, can never move) of the
-        # ACTIVE parity — the inactive half already rode the union above
+        # nbr-isolated vertices of the ACTIVE parity (the inactive half
+        # already rode the union above)
         out = out.unionByName(
             iso_state.filter(
                 F.pmod(F.xxhash64(F.col("dt_id")), F.lit(2)) == F.lit(parity)
             ).select("dt_id", "comm", "k", F.lit(0).alias("__moved"))
         )
-    # checkpoint=False exists for plan inspection (tests) only — the
-    # caller's loop always cuts lineage here.  EAGER: a lazy checkpoint
-    # leaves the full lineage in the logical plan, and every API call
-    # of the NEXT round then re-analyzes it — measured ~1.6 s/round of
-    # pure driver-side analysis vs ~0.2 s against a materialized
-    # LogicalRDD.  The caller's move-count agg on the materialized
-    # state costs ~0.1 s
+    # checkpoint=False exists for plan inspection only.  Eager: a lazy
+    # cut would leave the round's lineage for the next round's API calls
+    # to re-analyze on the driver.
     return out.localCheckpoint(eager=True) if checkpoint else out
 
 
@@ -2916,82 +2380,52 @@ def louvain_communities(
     levels: int = 2,
     min_moves_frac: float = 0.0,
     weight_col: str | None = None,
-    endpoint_ids: DataFrame | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, community) — Louvain-style modularity communities: up to
-    ``rounds_per_level`` synchronous local-move rounds per level (a
-    level CONVERGENCE-EXITS early — see below), then community
-    contraction to a weighted supergraph, repeated ``levels`` times.
+    ``rounds_per_level`` synchronous local-move rounds per level, then
+    community contraction to a weighted supergraph, repeated
+    ``levels`` times.
 
-    Convergence schedule (r10): each round reports its exact move
-    count (a sum over the already-checkpointed vertex state — free).
-    A level stops early when the last TWO rounds together moved fewer
-    than ``max(1, min_moves_frac·|V_level|)`` vertices; two rounds
-    cover both move parities, so a 0+0 pair is a true fixed point and
-    the early exit is OUTPUT-IDENTICAL to running the full schedule.
-    ``min_moves_frac`` > 0 trades tail rounds (that each cost a full
-    2|E| pass to move a handful of vertices) for an approximate stop —
-    the default 0.0 keeps exact fixed-point semantics.
+    Convergence: each round reports its exact move count (a sum over
+    the checkpointed state).  A level stops when the last TWO rounds
+    (both move parities) together moved fewer than
+    ``max(1, min_moves_frac·|V_level|)`` vertices; at the default 0.0
+    that is a true fixed point, so the early exit is output-identical
+    to the full schedule.
 
     Deterministic by construction (integer gain comparisons, min-id
-    tie-breaks, hash-parity move gating, move-count-driven round
-    schedule) — but not SQL-expressible, so the driver key
-    is rows-only; quality is pinned by crafted-graph tests (cliques
-    recovered exactly, hand-computed modularity) and a modularity
-    floor on the fixture.
+    tie-breaks, hash-parity move gating) but not SQL-expressible, so
+    its board key is rows-only; quality is pinned by crafted-graph
+    tests (cliques recovered exactly, hand-computed modularity) and a
+    modularity floor on the fixture.
 
-    100 TB shape: per round, one edge⋈comm join shuffled on the vertex
-    key + two vertex-sized aggregations (sigma is community-sized and
-    broadcast); contraction is one groupBy over the edge set and
-    SHRINKS the graph each level — the standard multilevel schedule.
+    ``weight_col`` (GDS relationshipWeightProperty): a NON-NEGATIVE
+    INTEGER edge-weight column — parallel edges SUM their weights on
+    the normalized pair, zero-total pairs drop, and 2m becomes the
+    weight total; the arithmetic stays exact BIGINT end to end.
 
-    ``weight_col`` (r15, GDS relationshipWeightProperty parity): a
-    NON-NEGATIVE INTEGER edge-weight column — parallel edges SUM their
-    weights on the normalized pair (GDS aggregation semantics; the
-    unweighted path keeps its exact distinct+w=1 construction,
-    byte-identical), zero-total pairs drop (a 0-weight edge carries no
-    modularity mass), and 2m becomes the weight total.  Rounds and
-    contraction already run on arbitrary integer w (the multilevel
-    supergraph is weighted by construction), so the arithmetic stays
-    exact BIGINT end-to-end.
-
-    ``endpoint_ids`` (r16, optimization): an optional (dt_id) frame
-    that IS the edge-endpoint universe (the store's persisted
-    ``vertex_ids`` dt_id column).  Used ONLY to derive the
-    non-twin-endpoint ``extra`` set via a map-sized anti-join instead
-    of a 2|E|-row endpoint distinct — the SET (and therefore every vid
-    value, parity hash, and final assignment) is identical; louvain's
-    own order-preserving encode is untouched because the move-gating
-    parity hashes the vid VALUES and the board outputs are pinned to
-    them."""
+    Scale strategy: vertices get ORDER-PRESERVING long ids
+    (``monotonically_increasing_id`` over an ``orderBy``, distributed),
+    so min-vid tie-breaks pick what min-dt_id would; the move-gating
+    parity hashes the vid values, and the board outputs are pinned to
+    them.  The id universe is the twins plus any edge endpoint missing
+    from them (read from the layout's ``vertex_ids`` when the universe
+    has one, instead of a 2|E| endpoint distinct).  The edge frame is
+    built once per level, partitioned on the round key through
+    :func:`_keyed_ckpt`: under the universe gate the state broadcasts
+    and rounds run on the src partitioning with no exchange; above it
+    they partition on dst so only the vertex side shuffles.  Each level
+    contracts with one exchange keyed on the next level's round key."""
+    u = universe or VertexUniverse(twins, relationships)
+    layout = u.layout()
     verts = twins.select("dt_id")
     rcols = ["source_id", "target_id"] + ([weight_col] if weight_col else [])
     raw = relationships.select(*rcols).filter(
         F.col("source_id") != F.col("target_id")
     )
-    # r10: ORDER-PRESERVING LONG VERTEX IDS.  Every round runs two hash
-    # aggregations keyed on vertex/community ids; long keys make those
-    # ~25% faster than string dt_ids and shrink every shuffle/broadcast.
-    # monotonically_increasing_id over an orderBy'd frame is
-    # order-preserving (range shuffle keeps partition index order, ids
-    # rise within partitions) WITHOUT a single-partition window, so the
-    # encoding itself is distributed and scale-safe.  Determinism is BY
-    # CONSTRUCTION with tie-break parity: order preservation means
-    # min-vid tie-breaks pick the same community as min-dt_id.  Note
-    # the move-gating parity domain CHANGED with the encoding —
-    # xxhash64(vid) splits vertices into different halves than
-    # xxhash64(dt_id) — so per-round active sets (and in principle
-    # final assignments) may differ from the string implementation;
-    # the observed equality on the full sf0.01 fixture is empirical,
-    # not structural.  The id universe is verts plus any edge endpoints
-    # missing from twins (none under the store's referential integrity,
-    # but inputs are not trusted here).
-    if endpoint_ids is not None:
-        # the persisted endpoint universe replaces the 2|E| endpoint
-        # scan+distinct; SAME SET ⇒ same vids ⇒ same assignments
-        extra = endpoint_ids.select("dt_id").join(
-            verts, "dt_id", "left_anti"
-        )
+    if layout is not None:
+        extra = layout[0].select("dt_id").join(verts, "dt_id", "left_anti")
     else:
         extra = (
             raw.select(F.col("source_id").alias("dt_id"))
@@ -2999,19 +2433,9 @@ def louvain_communities(
             .join(verts, "dt_id", "left_anti")
             .distinct()
         )
-    # EAGER checkpoint (r11): mono_id over orderBy is deterministic per
-    # EXECUTION, not per plan — four consumers (sv/tv encode, final
-    # composition, decode) each re-derive a lazy checkpoint until its
-    # first materialization pins it, so a task retry in between could
-    # hand different consumers different ids.  The pin costs one
-    # vertex-sized job up front and also removes the repeated
-    # orderBy+mono_id stage from the final composition chain.
-    # r17: lazy-cut the universe BEFORE the orderBy — the range
-    # partitioner's sampling pass re-evaluates its child, so the
-    # twins-scan + anti-join subtree ran twice per build; the cut
-    # caches one computation for both passes.  Same rows in the same
-    # order over the same child partitions ⇒ identical vids (and the
-    # assignment fixture pins verify that).
+    # eager: mono_id over orderBy is deterministic per execution only,
+    # and four consumers must see one assignment; the lazy cut before
+    # the orderBy lets the range sampler and the build share one scan
     vid_map = (
         verts.select("dt_id", F.lit(True).alias("is_v"))
         .unionByName(extra.select("dt_id", F.lit(False).alias("is_v")))
@@ -3020,35 +2444,18 @@ def louvain_communities(
         .select("dt_id", "is_v", F.monotonically_increasing_id().alias("vid"))
         .localCheckpoint(eager=True)
     )
-    # vertex-broadcast gate, shared by the ROUND broadcasts below and
-    # (r16) the encode / contraction / composition joins — the
-    # checkpointed map's conservative size estimate otherwise left all
-    # of them as two-sided sort-merge shuffles (guide §3.1: the
-    # estimate is wrong after a checkpoint, hint explicitly)
-    bcast = verts.count() <= 2_000_000
-    bc = (lambda df: F.broadcast(df)) if bcast else (lambda df: df)
+    bcast = u.broadcasts
     sv = vid_map.select(
         F.col("dt_id").alias("source_id"), F.col("vid").alias("sv")
     )
     tv = vid_map.select(
         F.col("dt_id").alias("target_id"), F.col("vid").alias("tv")
     )
-    # dedupe on the NORMALIZED pair before doubling — same symmetric
-    # distinct edge set as _undirected, but the expensive distinct runs
-    # over |E| rows instead of 2|E| (and over long pairs, post-encode)
-    enc = raw.join(bc(sv), "source_id").join(bc(tv), "target_id")
+    enc = raw.join(u.bc(sv), "source_id").join(u.bc(tv), "target_id")
     if weight_col is None:
-        # r16 (optimization round, guide §2.4): DOUBLE FIRST, dedupe on
-        # the round-key partitioning — the doubled symmetric set's
-        # distinct-(src, dst) IS the doubled distinct-pair set, so the
-        # level-1 edge build costs ONE 2|E| exchange (the repartition in
-        # the level loop below; the dedup aggregation then runs
-        # exchange-free on it via _keyed_ckpt's preserved partitioning)
-        # instead of a |E| pair-distinct exchange PLUS the 2|E|
-        # repartition.
-        # r17: the symmetric union evaluates its child twice, and the
-        # child here is the |E| scan + two encode joins — lazy-cut so
-        # both branches read one cached computation (guide §2.4)
+        # doubled first, deduplicated in the level loop on the round-key
+        # partitioning (one 2|E| exchange); the lazy cut keeps the
+        # union's two branches on one computation of the encode
         d = enc.select(
             F.least("sv", "tv").alias("src"), F.greatest("sv", "tv").alias("dst")
         ).localCheckpoint(eager=False)
@@ -3056,8 +2463,6 @@ def louvain_communities(
             d.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
     else:
-        # weighted: parallel edges SUM on the normalized pair (same
-        # shuffle key as the distinct), zero-total pairs drop
         pairs = (
             enc.select(
                 F.least("sv", "tv").alias("a"),
@@ -3067,9 +2472,6 @@ def louvain_communities(
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
             .filter(F.col("w") > 0)
-            # r17: same double-evaluation cut as the unweighted branch —
-            # the doubling union would otherwise re-run the scan +
-            # encode joins + pair aggregation per branch
             .localCheckpoint(eager=False)
         )
         e = pairs.select(
@@ -3077,51 +2479,19 @@ def louvain_communities(
         ).unionByName(
             pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
         )
-    # 2m = doubled-edge weight total = 2·|distinct pairs|, computed as
-    # a COUNT ON THE MATERIALIZED LEVEL-1 EDGE CHECKPOINT inside the
-    # loop (r10) — the separate pairs.count() job re-ran the dedup
-    # pipeline and cost ~4 s at sf0.1 before the first round started
+    # 2m is counted on the materialized level-1 edge checkpoint
     two_m = 0
-    # level state: the per-level community maps are composed into the
-    # original-vertex mapping ONCE at the end (each level's comm state
-    # is already checkpointed — deferring the composition folds the
-    # per-level vertex-sized joins into the caller's single action
-    # instead of one eager job per level)
+    # per-level community maps, composed into the vertex mapping once
+    # at the end
     level_maps: list[DataFrame] = []
-    # the ≤2M vertex-state broadcast gate (`bcast`, computed above with
-    # the encode) also steers the per-round layout: when the state
-    # broadcasts, rounds want the edges partitioned by SRC (both
-    # per-round aggregations then reuse that partitioning with zero
-    # exchange — one map-side pass over 2|E| per round); the shuffle
-    # path wants DST (the comm join then shuffles only the vertex
-    # side).  |V_level| never exceeds the twin count, and contraction
-    # only shrinks it.
     dedges = e
-    # level-1 edges are self-free BY CONSTRUCTION (src != dst filtered
-    # before doubling), so the pre-partitioned nbr checkpoint IS the
-    # full edge set — keeping a second `e` checkpoint alongside it
-    # doubled the resident edge memory and made sf1 (26M doubled rows)
-    # GC-thrash an 8g driver.  Self rows appear only after contraction.
+    # level-1 edges are self-free by construction, so the nbr checkpoint
+    # IS the full edge set; self rows appear only after contraction
     has_self = False
+    spark = dedges.sparkSession
+    n_part = spark.sparkContext.defaultParallelism
+    part_key = F.col("src") if bcast else F.col("dst")
     for level in range(max(1, levels)):
-        # loop-invariant hoisting: the self-free neighbor edges don't
-        # change across rounds — PRE-PARTITION on the join key (dst)
-        # and checkpoint once (localCheckpoint preserves
-        # outputPartitioning), so every round's edge⋈comm join keeps
-        # the 2|E| edge set in place and shuffles only the vertex side
-        spark = dedges.sparkSession
-        n_part = spark.sparkContext.defaultParallelism
-        part_key = F.col("src") if bcast else F.col("dst")
-        # r16 (optimization round): every nbr build goes through
-        # _keyed_ckpt so the round aggregations SEE the partitioning
-        # (see _keyed_ckpt — the plain checkpoint reported
-        # UnknownPartitioning under AQE and every round re-exchanged
-        # the candidate set).  Level 1 unweighted additionally fuses
-        # the symmetric dedup INTO the one repartition exchange
-        # (distinct on (src, dst) over a src-partitioned frame is
-        # exchange-free); post-contraction levels are ALREADY
-        # partitioned on part_key by the fused contraction below, so
-        # the self-row filter checkpoints without any exchange at all.
         if has_self:
             nbr = _keyed_ckpt(dedges.filter(F.col("src") != F.col("dst")))
         elif weight_col is None:
@@ -3133,9 +2503,6 @@ def louvain_communities(
         else:
             nbr = _keyed_ckpt(dedges.repartition(n_part, part_key))
         if level == 0:
-            # the level-1 nbr IS the doubled self-free edge set, and
-            # it is materialized — this count/sum is free (unweighted
-            # keeps the cheaper count: identical value at w=1)
             if weight_col is None:
                 two_m = nbr.count()
             else:
@@ -3148,25 +2515,17 @@ def louvain_communities(
                 return verts.select(
                     "dt_id", F.col("dt_id").alias("community")
                 )
-        # full edge set for degrees/contraction: self rows carry the
-        # 2·intra weight after contraction; at level 1 it IS nbr, so
-        # degrees and contraction read the one checkpointed copy
+        # after contraction, self rows carry the 2·intra weight
         full_edges = dedges if has_self else nbr
-        # community state (dt_id, comm, k): every edge endpoint starts
-        # in its own community; the weighted degree rides in the state
-        # so rounds never re-join a separate degree table (the degree
-        # aggregation doubles as the endpoint-distinct pass)
+        # every endpoint starts in its own community, carrying its
+        # weighted degree
         comm = (
             full_edges.groupBy(F.col("src").alias("dt_id"))
             .agg(F.sum("w").alias("k"))
             .select("dt_id", F.col("dt_id").alias("comm"), "k")
             .localCheckpoint(eager=True)
         )
-        # r16: vertices with ONLY self edges (possible post-contraction;
-        # none at level 1, where full_edges IS the self-free nbr) never
-        # appear in the round's edge pipeline and can never move — their
-        # state is LEVEL-invariant, computed once here instead of riding
-        # a per-round self-row union (see _louvain_round)
+        # vertices with only self edges never move: level-invariant
         iso_state = None
         if has_self:
             iso_state = comm.join(
@@ -3174,9 +2533,6 @@ def louvain_communities(
                 "dt_id",
                 "left_anti",
             ).localCheckpoint(eager=True)
-        # convergence-aware rounds: the move count is one small agg on
-        # the eagerly-checkpointed vertex state; the floor compares the
-        # last TWO rounds (both parities) so a fixed point is certain
         move_floor = 1
         if min_moves_frac > 0:
             n_level_verts = comm.count()
@@ -3188,15 +2544,11 @@ def louvain_communities(
                 nbr, comm, two_m, r % 2, bcast=bcast, iso_state=iso_state
             )
             if r == n_rounds - 1:
-                break  # r16: the final round's move count decides
-                # nothing (the loop ends either way) — skip its
-                # driver-side aggregate job
+                break  # the last round's move count decides nothing
             n_moves = comm.agg(F.sum("__moved")).collect()[0][0] or 0
             if prev_moves is not None and prev_moves + n_moves < move_floor:
                 break
             prev_moves = n_moves
-        # record this level's map for the final composition (vertices
-        # absent from a level's graph keep their community)
         level_maps.append(
             comm.select(
                 F.col("dt_id").alias("community"),
@@ -3204,46 +2556,36 @@ def louvain_communities(
             )
         )
         if level + 1 < levels:
-            # contract: communities become supernodes; intra-community
-            # weight lands on self rows (A_cc = 2·intra, the standard
-            # weighted-Louvain bookkeeping)
+            # contract: communities become supernodes, intra-community
+            # weight lands on self rows (A_cc = 2·intra); the one
+            # exchange is keyed on the next level's round key
             cu = comm.select(
                 F.col("dt_id").alias("src"), F.col("comm").alias("cu")
             )
             cv = comm.select(F.col("dt_id").alias("dst"), F.col("comm").alias("cv"))
-            # bc (r16): broadcast the vertex-sized community maps so the
-            # 2|E| edge frame never shuffles for the contraction joins.
-            # r16 (optimization round): the contraction's ONE exchange is
-            # keyed on the NEXT level's round key (repartition before the
-            # groupBy — hash(src) satisfies the (src, dst) clustering, so
-            # the supergraph aggregation is exchange-free on it) and the
-            # result checkpoints through _keyed_ckpt: the next level's
-            # nbr/comm/iso_state then need no repartition at all.
             dedges = _keyed_ckpt(
-                full_edges.join(bc(cu), "src")
-                .join(bc(cv), "dst")
+                full_edges.join(u.bc(cu), "src")
+                .join(u.bc(cv), "dst")
                 .select(F.col("cu").alias("src"), F.col("cv").alias("dst"), "w")
                 .repartition(n_part, part_key)
                 .groupBy("src", "dst")
                 .agg(F.sum("w").alias("w"))
             )
             has_self = True
-    # compose identity ∘ level1 ∘ level2 ∘ … (all vertex-sized,
-    # long-keyed, reading checkpointed level states), then decode the
-    # community vid back to its vertex's dt_id string — the output
-    # contract is unchanged
+    # compose identity ∘ level1 ∘ level2 ∘ … on long ids, then decode
+    # each community vid to its vertex's dt_id
     mapping = vid_map.filter("is_v").select(
         "dt_id", F.col("vid").alias("community")
     )
     for level_map in level_maps:
-        mapping = mapping.join(bc(level_map), "community", "left").select(
+        mapping = mapping.join(u.bc(level_map), "community", "left").select(
             "dt_id",
             F.coalesce("new_community", "community").alias("community"),
         )
     dec = vid_map.select(
         F.col("vid").alias("community"), F.col("dt_id").alias("__comm_str")
     )
-    return mapping.join(bc(dec), "community").select(
+    return mapping.join(u.bc(dec), "community").select(
         "dt_id", F.col("__comm_str").alias("community")
     )
 
@@ -3259,10 +2601,9 @@ def modularity(
     edge set.  Exact rational arithmetic — Q = (2m·Σ in_c − Σ σ_c²)
     / (2m)² over BIGINT sums — rounded only at the end; ``two_m`` and
     the numerator ``q_num`` are emitted as exact BIGINTs so the whole
-    statistic hash-checks against a SQL oracle (the weighted Louvain
-    companion, r16).
+    statistic hash-checks against a SQL oracle.
 
-    ``weight_col`` (r16): a non-negative integer edge-weight column on
+    ``weight_col``: a non-negative integer edge-weight column on
     ``relationships`` — parallel edges SUM on the normalized pair and
     zero-total pairs drop, EXACTLY the weighted-Louvain edge
     construction (:func:`louvain_communities`), so this is the kernel
@@ -3285,8 +2626,7 @@ def modularity(
             )
             .groupBy("a", "b")
             .agg(F.sum("w").alias("w"))
-            # r17: lazy-cut before doubling — the union would evaluate
-            # the |E| pair aggregation once per branch (guide §2.4)
+            # lazy cut: the doubling union reads it twice
             .filter(F.col("w") > 0)
             .localCheckpoint(eager=False)
         )
@@ -3305,9 +2645,7 @@ def modularity(
     cv = communities.select(
         F.col("dt_id").alias("target_id"), F.col("community").alias("cv")
     )
-    # r17: two driver aggregates read this frame (the 2m total and the
-    # per-community sums) — without the cut each collect re-ran the
-    # doubled-edge build + both community joins end to end
+    # lazy cut: two driver aggregates read this frame
     tagged = e.join(cu, "source_id").join(cv, "target_id").localCheckpoint(
         eager=False
     )
@@ -3340,13 +2678,31 @@ def modularity(
     )
 
 
+def _decode_top(
+    top: DataFrame, vertex_ids: DataFrame, k: int, *order: Column
+) -> DataFrame:
+    """Decode the (a, b) vid columns of a ≤k-row ranked frame and
+    re-impose its order (vid order is dt_id order, so the ranking is
+    unchanged).  The k-row side is hash-built and the vertex-sized map
+    streams past it — guarded so the hint never broadcasts an
+    unbounded frame."""
+    dec_a = vertex_ids.select(F.col("vid").alias("a"), F.col("dt_id").alias("__a"))
+    dec_b = vertex_ids.select(F.col("vid").alias("b"), F.col("dt_id").alias("__b"))
+    tb = (lambda df: F.broadcast(df)) if k <= 1_000_000 else (lambda df: df)
+    rest = [c for c in top.columns if c not in ("a", "b")]
+    return (
+        tb(tb(top).join(dec_a, "a"))
+        .join(dec_b, "b")
+        .select(F.col("__a").alias("a"), F.col("__b").alias("b"), *rest)
+        .orderBy(*order)
+    )
+
+
 def link_prediction(
     relationships: DataFrame,
     k: int = 50,
     max_wedge_degree: int | None = None,
-    broadcast_vertex_limit: int = 2_000_000,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(a, b, common_neighbors, pref_attach) — top-``k`` NON-adjacent
     vertex pairs ranked by common-neighbor count (Newman's CN index),
@@ -3359,33 +2715,16 @@ def link_prediction(
     (``AgeDigitalTwins/AgeDigitalTwinsClient.Relationships.cs``) into
     the candidate-edge miner every graph-ML pipeline needs.
 
-    100 TB shape: one wedge self-join keyed on the MIDDLE vertex (the
-    same shape as triangle counting) + one anti join against the edge
-    set + a broadcast-size degree dim joined twice.  A degree-d middle
-    vertex emits d(d-1)/2 candidate rows — ``max_wedge_degree`` drops
-    hub middles above the cap (the standard candidate-generation
-    guard; a 10^6-degree hub would otherwise emit 5·10^11 wedges), an
-    explicitly documented approximation like node_similarity's cap.
-    Top-k compiles to TakeOrdered.
-
-    The degree dim broadcasts ONLY under the same ≤2M-vertex gate
-    PageRank/Louvain use (r14 verdict: a billions-row unconditional
-    broadcast is a driver OOM at the 100 TB north star); above the
-    gate the degree joins fall back to shuffle equi-joins.  The gate
-    count doubles as a lineage cut: ``deg`` is consumed three times
-    (cap filter + both score joins), so the lazy localCheckpoint it
-    materializes saves two recomputes of the dedup+groupBy."""
-    # r16 (optimization): the wedge join, the (a,b) candidate aggregate
-    # and the edge anti-join — the Σ C(deg,2)-sized exchanges that
-    # dominate this plan (BENCH_r15: 165M wedge rows at sf1) — run in
-    # ORDER-PRESERVING LONG id space (guide §2.3; _und_pairs_vid has the
-    # exactness argument: pair normalization and the (cn, pref, a, b)
-    # tie-break decide identically on vids), with a k-row decode at the
-    # end.  The store's persisted layout (vid_edges/vid_map) skips the
-    # per-query encode entirely when available.
-    und, bc, vid_map = _und_pairs_vid(
-        relationships, broadcast_vertex_limit, vid_edges, vid_map
-    )
+    Scale strategy: one wedge self-join keyed on the MIDDLE vertex
+    (the shape of triangle counting) + one anti join against the edge
+    set + a degree dim joined twice under the universe gate, all in
+    order-preserving long id space with a k-row decode at the end.  A
+    degree-d middle vertex emits d(d-1)/2 candidate rows, so
+    ``max_wedge_degree`` drops hub middles above the cap (the standard
+    candidate-generation guard, a documented approximation like
+    node_similarity's cap).  Top-k compiles to TakeOrdered."""
+    u = universe or VertexUniverse(relationships=relationships)
+    und, vid_map = _und_pairs_vid(relationships, u)
     nb = und.select(F.col("a").alias("m"), F.col("b").alias("x")).unionByName(
         und.select(F.col("b").alias("m"), F.col("a").alias("x"))
     )
@@ -3399,7 +2738,7 @@ def link_prediction(
     mids = nb
     if max_wedge_degree is not None:
         mids = nb.join(
-            bc(deg.filter(F.col("deg") <= max_wedge_degree)), "m"
+            u.bc(deg.filter(F.col("deg") <= max_wedge_degree)), "m"
         ).select("m", "x")
     cn = (
         mids.select("m", F.col("x").alias("ca"))
@@ -3412,8 +2751,8 @@ def link_prediction(
     da = deg.select(F.col("m").alias("a"), F.col("deg").alias("__da"))
     db = deg.select(F.col("m").alias("b"), F.col("deg").alias("__db"))
     top = (
-        cn.join(bc(da), "a")
-        .join(bc(db), "b")
+        cn.join(u.bc(da), "a")
+        .join(u.bc(db), "b")
         .select(
             "a",
             "b",
@@ -3425,28 +2764,9 @@ def link_prediction(
         )
         .limit(k)
     )
-    # decode the k rows (vid order == dt_id order, so the re-imposed
-    # ORDER BY returns the identical ranking).  The K-ROW side carries
-    # the broadcast hint — broadcasting the vertex-sized map here built
-    # a ~60 MB hash relation per decode join at sf1; hash-building the
-    # k rows and STREAMING the map is one pruned scan instead.  Guarded
-    # for pathological k (the hint must never broadcast an unbounded
-    # frame).
-    dec_a = vid_map.select(F.col("vid").alias("a"), F.col("dt_id").alias("__a"))
-    dec_b = vid_map.select(F.col("vid").alias("b"), F.col("dt_id").alias("__b"))
-    tb = (lambda df: F.broadcast(df)) if k <= 1_000_000 else (lambda df: df)
-    return (
-        tb(tb(top).join(dec_a, "a"))
-        .join(dec_b, "b")
-        .select(
-            F.col("__a").alias("a"),
-            F.col("__b").alias("b"),
-            "common_neighbors",
-            "pref_attach",
-        )
-        .orderBy(
-            F.desc("common_neighbors"), F.desc("pref_attach"), "a", "b"
-        )
+    return _decode_top(
+        top, vid_map, k,
+        F.desc("common_neighbors"), F.desc("pref_attach"), F.col("a"), F.col("b"),
     )
 
 
@@ -3456,20 +2776,11 @@ def link_prediction_wedge_count(
     """Candidate wedge-row count for ``link_prediction`` under the
     same cap: Σ over sub-cap middles of C(deg, 2) — exact BIGINT.
 
-    This is the work-size ATTRIBUTION for scale probes (r13, verdict
-    ask): capped wedge enumeration is linear in the wedge count, not
-    sub-linear in edges, so recording this next to the wall time makes
-    a 10× ratio at 10× data legible (wedges grew 10×) instead of
-    reading as a scale regression.  Also the capacity-planning number
-    (candidate rows the wedge join will emit).  One groupBy + one
-    1-row aggregate; the collect is a scalar."""
-    e = relationships.select("source_id", "target_id").filter(
-        F.col("source_id") != F.col("target_id")
-    )
-    und = e.select(
-        F.least("source_id", "target_id").alias("a"),
-        F.greatest("source_id", "target_id").alias("b"),
-    ).distinct().localCheckpoint(eager=False)  # r17: one dedup, 2 branches
+    The work-size attribution for scale probes: capped wedge
+    enumeration is linear in this count, so it explains a wall-time
+    ratio across scale factors; also the capacity-planning number.
+    One groupBy + one 1-row aggregate."""
+    und = _und_pairs(relationships)
     nb = und.select(F.col("a").alias("m")).unionByName(
         und.select(F.col("b").alias("m"))
     )
@@ -3489,13 +2800,10 @@ def node_similarity_pair_count(
     under the same filters: Σ over shared TARGETS of C(fan_in, 2) —
     exact BIGINT over the deduped (name-filtered) edge set.
 
-    Work-size ATTRIBUTION (r14 verdict): the co-neighbor self-join is
-    linear in this pair count — fan-in d² growth, not edge count,
-    drives the wall — so recording it next to the sf1 wall makes the
-    uncapped variant's ~9×-per-10× ratio legible as candidate growth
-    rather than a scale regression (the capped variant bounds exactly
-    this sum).  One groupBy + one 1-row aggregate; the collect is a
-    scalar."""
+    The work-size attribution for scale probes: the co-neighbor
+    self-join is linear in this pair count (fan-in d² growth, not edge
+    count), and the capped variant bounds exactly this sum.  One
+    groupBy + one 1-row aggregate."""
     e = relationships.select("source_id", "target_id", "name")
     if rel_name is not None:
         e = e.filter(F.col("name") == rel_name)
@@ -3513,9 +2821,7 @@ def topological_levels(
     twins: DataFrame,
     relationships: DataFrame,
     iters: int = 8,
-    vid_edges: DataFrame | None = None,
-    vid_map: DataFrame | None = None,
-    broadcast_vertex_limit: int = 2_000_000,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, level) — longest-path LAYERING of the directed graph:
     level(v) = 0 for sources (no in-edges), else 1 + max(level(u))
@@ -3523,77 +2829,33 @@ def topological_levels(
     dependency executor needs (every edge goes strictly level-up; all
     of level k can run once level k−1 finished).
 
-    ``iters`` is FIXED (the coreness/PageRank convention): after
-    ``iters`` rounds the output is exactly the longest path of at most
-    ``iters`` edges ending at v — equal to the true level once iters ≥
-    the DAG's depth (the fixpoint; further rounds are no-ops), and a
-    deterministic, engine-portable lower bound on any longer chain.
-    On a cyclic input levels keep growing until the cap — callers
-    wanting DAG VERIFICATION should compare iters and iters+1 outputs
-    (a fixpoint certifies acyclicity within the horizon).  All-integer
-    arithmetic: value-checks against an unrolled SQL oracle.
+    ``iters`` caps the rounds: the output is the longest path of at
+    most ``iters`` edges ending at v — the true level once iters ≥ the
+    DAG's depth, and a deterministic lower bound on any longer chain.
+    On a cyclic input levels keep growing until the cap; compare the
+    ``iters`` and ``iters+1`` outputs to certify acyclicity within the
+    horizon.  All-integer arithmetic: value-checks against an unrolled
+    SQL oracle.  The update is monotone, so a round that raises no
+    level is a fixpoint and the loop stops there — output-identical to
+    the full schedule.
 
-    100 TB shape: one edges⋈state equi-join + one map-side-combined
-    max aggregate per round, vertex-sized state, lineage cut per
-    round; depth-bounded like every superstep operator here (a DAG's
-    depth, not its size, bounds the rounds).
-
-    r16 (optimization): FIXPOINT EARLY EXIT — a round that raises no
-    vertex's level is a no-op, and so is every later round (the update
-    is monotone: greatest(level, 1 + max in-level) — once nothing
-    grows, nothing ever grows again), so the loop stops there.
-    Output-identical to running the full ``iters`` schedule (the
-    fixed-``iters`` oracle unrolling included); on a DAG of depth d
-    the operator now costs min(iters, d + 1) rounds instead of always
-    ``iters`` (guide §1.2: don't compute what you throw away — the
-    r15 sf1 probe paid 8 full edge⋈state rounds for a depth-3
-    fixture).  The change flag rides the eagerly-checkpointed state,
-    so the per-round convergence check is one cheap aggregate over
-    materialized rows (the Louvain move-count discipline); cyclic
-    inputs keep growing levels and still run the full cap.
-
-    r16 (guide §2.3): with the store's persisted order-preserving
-    long-id layout (``vid_edges``/``vid_map``) every round's
-    edges⋈state join + max aggregate runs on 8-byte longs — the
-    update is pure max/greatest arithmetic on the ``level`` column, so
-    id dtype cannot change any value; twins outside the edge-endpoint
-    universe have no in-edges, stay level 0 through every round, and
-    are attached as level-0 rows at the final decode instead of
-    riding |iters| vertex-sized joins."""
-    use_vid = vid_edges is not None and vid_map is not None
-    if use_vid:
+    Scale strategy: the edge frame is hoisted once, partitioned on the
+    target, and the per-round state joins ride the universe gate, so a
+    round is one map-side pass over |E| with no exchange under the
+    gate; the change flag rides the eagerly checkpointed state.  With
+    the layout the rounds run on long ids; twins outside the endpoint
+    universe stay level 0 and are attached at the decode."""
+    u = universe or VertexUniverse(twins, relationships)
+    layout = u.layout()
+    if layout is not None:
+        vid_map, edges_vid = layout
         verts = vid_map.select(F.col("vid").alias("dt_id"))
-        e = vid_edges.select(
-            F.col("source_vid").alias("source_id"),
-            F.col("target_vid").alias("target_id"),
-        ).filter(F.col("source_id") != F.col("target_id")).distinct()
+        e = _edge_vids(edges_vid)
     else:
         verts = twins.select("dt_id")
-        e = (
-            relationships.select("source_id", "target_id")
-            .filter(F.col("source_id") != F.col("target_id"))
-            .distinct()
-        )
-    # r17 (optimization, guide §2.4 — remove the per-round exchanges):
-    # the old loop joined a partitioning-less lazy edge checkpoint
-    # against the fresh state every round, so EVERY round exchanged the
-    # |E| edge frame AND the vertex state, then exchanged the max-agg
-    # partials, then ran a two-sided vertex join — 4 exchanges × rounds.
-    # The edge frame is loop-invariant: pre-partition it ONCE on the
-    # aggregation key (target) through _keyed_ckpt (the AQE-proof keyed
-    # checkpoint).  Under the standard ≤2M-vertex gate (PageRank's) the
-    # per-round state joins broadcast, so a round is ONE map-side pass
-    # over |E| + a vertex-sized broadcast join — zero exchanges; above
-    # the gate the state stays distributed and only it shuffles (the
-    # edge side is already laid out).  max/greatest over BIGINT levels
-    # is order-independent, so results are bit-identical either way.
+        e = relationships.select("source_id", "target_id")
+    e = e.filter(F.col("source_id") != F.col("target_id")).distinct()
     spark = e.sparkSession
-    n_verts = verts.count()
-    bc = (
-        (lambda df: F.broadcast(df))
-        if n_verts <= broadcast_vertex_limit
-        else (lambda df: df)
-    )
     e = _keyed_ckpt(
         e.repartition(
             spark.sparkContext.defaultParallelism, F.col("target_id")
@@ -3604,13 +2866,13 @@ def topological_levels(
     ).localCheckpoint(eager=True)
     for _ in range(max(1, iters)):
         nxt = (
-            e.join(bc(level), e["source_id"] == level["dt_id"])
+            e.join(u.bc(level), e["source_id"] == level["dt_id"])
             .groupBy(F.col("target_id").alias("dt_id"))
             .agg((F.max("level") + F.lit(1)).cast("long").alias("__cand"))
         )
         cand = F.coalesce("__cand", F.lit(0).cast("long"))
         stepped = (
-            level.join(bc(nxt), "dt_id", "left")
+            level.join(u.bc(nxt), "dt_id", "left")
             .select(
                 "dt_id",
                 F.greatest(F.col("level"), cand).alias("level"),
@@ -3621,25 +2883,17 @@ def topological_levels(
         level = stepped.select("dt_id", "level")
         if not (stepped.agg(F.sum("__ch")).collect()[0][0] or 0):
             break
-    if use_vid:
-        bc = _bc_vid_gate(vid_map)
-        dec = vid_map.select(
-            F.col("vid").alias("dt_id"), F.col("dt_id").alias("__id_s")
-        )
-        level = level.join(bc(dec), "dt_id").select(
-            F.col("__id_s").alias("dt_id"), "level"
-        )
-        isolated = twins.select("dt_id").join(
-            bc(vid_map.select("dt_id")), "dt_id", "left_anti"
-        )
-        level = level.unionByName(
-            isolated.select("dt_id", F.lit(0).cast("long").alias("level"))
+    if layout is not None:
+        level = _decode(u, level, vid_map, "dt_id").unionByName(
+            _isolated(u, twins, vid_map).select(
+                "dt_id", F.lit(0).cast("long").alias("level")
+            )
         )
     return level
 
 
 def degree_assortativity(
-    relationships: DataFrame, broadcast_vertex_limit: int = 2_000_000
+    relationships: DataFrame, universe: VertexUniverse | None = None
 ) -> DataFrame:
     """One row (n_edges, assortativity) — Newman's degree
     assortativity r (Pearson correlation of endpoint degrees over the
@@ -3651,42 +2905,26 @@ def degree_assortativity(
     Degenerate variance (regular graph) yields NULL rather than a
     0/0 NaN.
 
-    100 TB shape: a degree dim joined onto the edge list twice —
-    broadcast ONLY under the same ≤2M-vertex gate PageRank uses
-    (r14 verdict: unconditional vertex-sized broadcasts OOM at the
-    100 TB north star), shuffle equi-joins above it — then a single
-    map-side-combined global aggregate.  At extreme scale
-    the BIGINT moments of a 10^12-edge graph with 10^6-degree hubs
-    approach overflow (Σj² ≤ M·maxdeg²) — move the moments to
-    DECIMAL(38,0) there; at any realistic degree distribution BIGINT
-    holds."""
-    e = relationships.select("source_id", "target_id").filter(
-        F.col("source_id") != F.col("target_id")
-    )
-    und = e.select(
-        F.least("source_id", "target_id").alias("a"),
-        F.greatest("source_id", "target_id").alias("b"),
-    ).distinct().localCheckpoint(eager=False)
+    Scale strategy: a degree dim (eagerly checkpointed: it is read
+    twice) joined onto the edge list twice under the universe gate,
+    then one map-side-combined global aggregate.  The BIGINT moments
+    of a 10^12-edge graph with 10^6-degree hubs approach overflow
+    (Σj² ≤ M·maxdeg²); move them to DECIMAL(38,0) there."""
+    u = universe or VertexUniverse(relationships=relationships)
+    und = _und_pairs(relationships)
     nb = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
         und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-    # lazy cut (union-rooted lineage — never eager-checkpoint those);
-    # the gate count() materializes it, and deg is consumed twice
     deg = (
         nb.groupBy(F.col("src").alias("v"))
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    bc = (
-        (lambda df: F.broadcast(df))
-        if deg.count() <= broadcast_vertex_limit
-        else (lambda df: df)
+        .localCheckpoint(eager=True)
     )
     dj = deg.select(F.col("v").alias("src"), F.col("deg").alias("j"))
     dk = deg.select(F.col("v").alias("dst"), F.col("deg").alias("kk"))
     m = (
-        nb.join(bc(dj), "src")
-        .join(bc(dk), "dst")
+        nb.join(u.bc(dj), "src")
+        .join(u.bc(dk), "dst")
         .agg(
             F.count(F.lit(1)).alias("mm"),
             F.sum(F.col("j") * F.col("kk")).alias("sjk"),
@@ -3709,6 +2947,7 @@ def hits(
     twins: DataFrame,
     relationships: DataFrame,
     iters: int = 5,
+    universe: VertexUniverse | None = None,
 ) -> DataFrame:
     """(dt_id, authority, hub) — Kleinberg's HITS by max-normalized
     power iteration over the DIRECTED deduplicated edge set: per
@@ -3726,14 +2965,10 @@ def hits(
     customers) and dimension twins are authorities — the classic
     query/result bipartition HITS was built for.
 
-    100 TB shape: identical to PageRank's superstep — two edges⋈state
-    joins per round (one per direction), map-side-combined sums, the
-    vertex state broadcast under the ≤2M gate, and the normalizing
-    max carried as a 1-row cross join (no driver collect in the
-    loop)."""
-    verts = twins.select("dt_id").localCheckpoint(eager=False)
-    n = verts.count()
-    bc = (lambda df: F.broadcast(df)) if n <= 2_000_000 else (lambda df: df)
+    Scale strategy: two :func:`_power_step` half-steps per round (one
+    per edge direction), each checkpointed eagerly."""
+    u = universe or VertexUniverse(twins, relationships)
+    verts = twins.select("dt_id").localCheckpoint(eager=True)
     edges = (
         relationships.select("source_id", "target_id")
         .filter(F.col("source_id") != F.col("target_id"))
@@ -3742,48 +2977,15 @@ def hits(
     )
     hub = verts.withColumn("hub", F.lit(1.0)).localCheckpoint(eager=True)
     auth = verts.withColumn("authority", F.lit(1.0))
-    for i in range(iters):
-        a_sums = (
-            edges.join(bc(hub), edges["source_id"] == hub["dt_id"])
-            .select(F.col("target_id").alias("dt_id"), "hub")
-            .groupBy("dt_id")
-            .agg(F.sum("hub").alias("s"))
+    for _ in range(iters):
+        auth = _power_step(
+            u, edges, hub, verts, "dt_id", F.col("hub"),
+            _max_of_sums, _max_normalized("authority"), eager=True,
         )
-        a_mx = a_sums.agg(F.max("s").alias("mx"))
-        auth = (
-            verts.join(bc(a_sums), "dt_id", "left")
-            .crossJoin(a_mx)
-            .select(
-                "dt_id",
-                F.when(
-                    F.col("mx").isNotNull() & (F.col("mx") > 0),
-                    F.coalesce(F.col("s"), F.lit(0.0)) / F.col("mx"),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("authority"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        h_sums = (
-            edges.join(bc(auth), edges["target_id"] == auth["dt_id"])
-            .select(F.col("source_id").alias("dt_id"), "authority")
-            .groupBy("dt_id")
-            .agg(F.sum("authority").alias("s"))
-        )
-        h_mx = h_sums.agg(F.max("s").alias("mx"))
-        hub = (
-            verts.join(bc(h_sums), "dt_id", "left")
-            .crossJoin(h_mx)
-            .select(
-                "dt_id",
-                F.when(
-                    F.col("mx").isNotNull() & (F.col("mx") > 0),
-                    F.coalesce(F.col("s"), F.lit(0.0)) / F.col("mx"),
-                )
-                .otherwise(F.lit(0.0))
-                .alias("hub"),
-            )
-            .localCheckpoint(eager=True)
+        hub = _power_step(
+            u, edges, auth, verts, "dt_id", F.col("authority"),
+            _max_of_sums, _max_normalized("hub"), eager=True,
+            src="target_id", dst="source_id",
         )
     return auth.join(hub, "dt_id").select(
         "dt_id",
@@ -3798,40 +3000,25 @@ def minimum_spanning_forest(
     weights: DataFrame | None = None,
     max_rounds: int = 12,
 ) -> DataFrame:
-    """(a, b, w) — minimum spanning forest of the undirected twin
-    graph by Borůvka's algorithm (per round, every component picks its
-    cheapest outgoing edge; components merge; O(log V) rounds).
+    """(a, b, w) — minimum spanning forest of the undirected twin graph
+    by Borůvka's algorithm (per round every component picks its cheapest
+    outgoing edge and components merge).
 
-    Determinism: edges order by the EXACT lexicographic key
-    (w, a, b) — BIGINT weight, string tie-breaks — which makes all
-    edge weights distinct, and a graph with distinct weights has a
-    UNIQUE minimum spanning forest; Borůvka and Kruskal then agree
-    edge-for-edge, which is exactly how the test pins this operator
-    (a pure-Python Kruskal replay on the fixture).  Every chosen edge
-    is the minimum over a cut, so rounds only ever ADD true forest
-    edges — no cycle cleanup needed.  Not SQL-expressible
-    (union-find), so the board key is rows-only — the same contract
-    as Louvain.
+    Determinism: edges order by the exact key (w, a, b), which makes all
+    weights distinct, so the forest is UNIQUE and equals Kruskal's (the
+    test replays Kruskal in Python).  Not SQL-expressible (rows-only).
+    ``weights``: optional (source_id, target_id, w) BIGINT frame; default
+    weight 1 per distinct undirected pair.
 
-    ``weights``: optional (source_id, target_id, w) BIGINT frame;
-    default weight 1 per distinct undirected pair (the unweighted
-    forest — useful for backbone extraction; pass quantity-weighted
-    edges for the weighted version).
-
-    100 TB shape: per round, ONE component-keyed min aggregation over
-    the surviving cross-component edges (map-side combined
-    struct-min), then the component MERGE runs on the COMPONENT
-    graph — chosen-edge endpoints mapped to their labels, ≤ |C|
-    rows, shrinking at least geometrically — via the star-contraction
-    CC, never on the vertex-sized forest.  Cross-component edges drop
-    out of later rounds as soon as endpoints share a label, so the
-    scanned edge set shrinks monotonically.  ``max_rounds`` is a hard
-    FAILURE cap, not a silent cutoff (r13, ADVICE fix): Borůvka at
-    least halves the mergeable-component count per round (12 rounds
-    covers 4k; pass a larger cap for bigger forests), and if
-    cross-component edges survive the cap the operator RAISES — a
-    truncated forest is a wrong answer, not a cheaper one."""
+    Per round: ONE component-keyed struct-min over the cross-component
+    edges, then the merge runs on the component graph via
+    :func:`connected_components`, whose gate the twins' universe decides
+    once.  ``max_rounds`` is a FAILURE cap: Borůvka at least halves the
+    mergeable components per round (12 rounds cover 4k), and edges left
+    across components at the cap raise instead of truncating the forest."""
     verts = twins.select("dt_id")
+    # component labels are twin ids, so |twins| bounds every merge graph
+    u = VertexUniverse(twins)
     base = relationships.select("source_id", "target_id").filter(
         F.col("source_id") != F.col("target_id")
     )
@@ -3856,15 +3043,19 @@ def minimum_spanning_forest(
     comp = verts.select(
         "dt_id", F.col("dt_id").alias("component")
     ).localCheckpoint(eager=True)
-    converged = False
-    for _ in range(max(1, max_rounds)):
+
+    def cross_component(comp: DataFrame) -> DataFrame:
         ca = comp.select(F.col("dt_id").alias("a"), F.col("component").alias("__ca"))
         cb = comp.select(F.col("dt_id").alias("b"), F.col("component").alias("__cb"))
-        live = (
+        return (
             edges.join(ca, "a")
             .join(cb, "b")
             .filter(F.col("__ca") != F.col("__cb"))
         )
+
+    converged = False
+    for _ in range(max(1, max_rounds)):
+        live = cross_component(comp)
         # each component's cheapest outgoing edge, exact (w, a, b)
         # order; the edge rows CARRY both endpoint labels so the merge
         # below never rejoins the vertex-sized state
@@ -3898,7 +3089,7 @@ def minimum_spanning_forest(
         cedges = chosen.select(
             F.col("__ca").alias("source_id"), F.col("__cb").alias("target_id")
         )
-        relabel = connected_components(cverts, cedges).select(
+        relabel = connected_components(cverts, cedges, universe=u).select(
             F.col("dt_id").alias("component"), F.col("component").alias("__new")
         )
         comp = (
@@ -3907,19 +3098,8 @@ def minimum_spanning_forest(
             .localCheckpoint(eager=True)
         )
     if not converged:
-        # max_rounds exhausted mid-merge: a partial forest would be a
-        # silently WRONG answer (components larger than the cap's reach
-        # would truncate).  One extra probe in this failure path only.
-        ca = comp.select(F.col("dt_id").alias("a"), F.col("component").alias("__ca"))
-        cb = comp.select(F.col("dt_id").alias("b"), F.col("component").alias("__cb"))
-        remaining = (
-            edges.join(ca, "a")
-            .join(cb, "b")
-            .filter(F.col("__ca") != F.col("__cb"))
-            .limit(1)
-            .count()
-        )
-        if remaining > 0:
+        # the cap hit mid-merge: a partial forest would be a wrong answer
+        if cross_component(comp).limit(1).count() > 0:
             raise ValueError(
                 f"minimum_spanning_forest did not converge within "
                 f"max_rounds={max_rounds}: cross-component edges remain "
@@ -3934,26 +3114,16 @@ def coreness(
     relationships: DataFrame,
     iters: int = 5,
 ) -> DataFrame:
-    """(dt_id, coreness) — k-core DECOMPOSITION (each vertex's core
-    number, not just membership at one k) by the distributed H-index
-    iteration (Montresor et al. / Lü et al.): c₀ = degree,
-    c_{k+1}(v) = min(c_k(v), H-index of neighbors' c_k) — the H
-    operator converges monotonically DOWN to the true coreness.
+    """(dt_id, coreness) — k-core DECOMPOSITION by the distributed
+    H-index iteration (Montresor et al. / Lü et al.): c₀ = degree,
+    c_{k+1}(v) = min(c_k(v), H-index of neighbors' c_k), converging
+    monotonically down to the true coreness.
 
-    ``iters`` is FIXED (like PageRank/eigenvector), so the output is
-    a deterministic upper bound that both engines compute identically
-    — value-checkable against an unrolled SQL oracle; convergence to
-    exact coreness is pinned separately by a pure-Python peeling
-    replay in tests (the fixture converges well inside the default).
-    The H-index is order-invariant under ties (max over ranked
-    neighbors of min(value, rank) — equal values give the same h in
-    any tie order), so no tie-break is even needed for exactness.
-
-    100 TB shape: one edges⋈state join + ONE ranked-window
-    aggregation per iteration, both keyed on the vertex (the window
-    reuses the join's partitioning); state is vertex-sized; no
-    driver-side work.  Compare k_core(k): one round of THIS gives
-    every k at once."""
+    ``iters`` is FIXED, so the output is a deterministic upper bound that
+    value-checks against an unrolled SQL oracle (tests pin convergence on
+    the fixture with a Python peeling replay).  The H-index is tie-order
+    invariant.  Per iteration: one edges⋈state join + one ranked-window
+    aggregation on the same vertex partitioning."""
     from pyspark.sql import Window
 
     verts = twins.select("dt_id")

@@ -149,6 +149,28 @@ class GraphStore:
     # CRUD-built graphs) raises a targeted error from dataset().
     datasets_dir: str | None = None
     _datasets: dict[str, DataFrame] = field(default_factory=dict)
+    # the graph kernels' vertex universe, built on first use; every
+    # snapshot is a new GraphStore, so each starts without one
+    _universe: Any = field(default=None, init=False, repr=False, compare=False)
+
+    @property
+    def universe(self):
+        """This snapshot's ``operators.graph_analytics.VertexUniverse``:
+        its |V| count and its layout check run at most once per
+        snapshot, however many kernels read them (rebuilt if a frame
+        is reassigned while the store is being assembled)."""
+        u = self._universe
+        if u is None or u.twins is not self.twins or (
+            u.relationships is not self.relationships
+        ):
+            from pg_age_digitaltwins_spark.operators.graph_analytics import (
+                VertexUniverse,
+            )
+
+            self._universe = VertexUniverse(
+                self.twins, self.relationships, self.vertex_ids, self.edges_vid
+            )
+        return self._universe
 
     def dataset(self, name: str) -> DataFrame:
         """The named corpus dataset (``documents`` / ``embeddings``) —

@@ -9,6 +9,7 @@ twin at sf0.01, compares row count, column names, and sorted values
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 import sys
@@ -38,6 +39,17 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
         elif pd.api.types.is_integer_dtype(df[c]):
             df[c] = df[c].astype("int64")
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+
+
+def fingerprint(df: pd.DataFrame) -> str:
+    df = df.reindex(sorted(df.columns), axis=1)
+    for c in df.columns:
+        if pd.api.types.is_float_dtype(df[c]):
+            df[c] = df[c].round(6)
+    s = df.astype(str)
+    s = s.sort_values(by=list(s.columns)).reset_index(drop=True)
+    h = pd.util.hash_pandas_object(s, index=False).values
+    return hashlib.sha1(h.tobytes()).hexdigest()[:12]
 
 
 def values_match(a: pd.DataFrame, b: pd.DataFrame) -> bool:
@@ -115,7 +127,8 @@ def main() -> int:
             failures.append(k)
             continue
         if k not in oracles:
-            print(f"{k}: rows-only check — {len(spd)} rows, cols={list(spd.columns)}")
+            print(f"{k}: rows-only check — {len(spd)} rows, cols={list(spd.columns)}"
+                  f" fp={fingerprint(spd)}")
             continue
         try:
             opd = con.execute(oracles[k]).fetchdf()
@@ -140,7 +153,7 @@ def main() -> int:
                     diff_shown += 1
             failures.append(k)
         else:
-            print(f"{k}: OK ({len(a)} rows)")
+            print(f"{k}: OK ({len(a)} rows) fp={fingerprint(a)}")
     print(f"\n{len(selected) - len(failures)}/{len(selected)} passed")
     spark.stop()
     return 1 if failures else 0

@@ -1,5 +1,7 @@
 import os
+import signal
 import sys
+import time
 
 import pytest
 
@@ -8,6 +10,44 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from pg_age_digitaltwins_spark.store.graph_store import GraphStore  # noqa: E402
+
+# Wall-clock limit of each test phase (setup, call, teardown).  The
+# slowest test passes in ~90 s on 4 cores.  A phase still running at the
+# limit fails with the traceback of where it waited (re-raised every
+# few seconds in case something swallows it), its Spark jobs are
+# cancelled, and the suite goes on instead of stalling behind it.
+PHASE_TIME_LIMIT_S = 300
+_RE_RAISE_S = 5
+
+
+class PhaseTimeLimit(Exception):
+    pass
+
+
+def _expire(signum, frame):
+    raise PhaseTimeLimit(f"test phase still running after {PHASE_TIME_LIMIT_S} s")
+
+
+def _time_limited():
+    prev = signal.signal(signal.SIGALRM, _expire)
+    signal.setitimer(signal.ITIMER_REAL, PHASE_TIME_LIMIT_S, _RE_RAISE_S)
+    start = time.monotonic()
+    try:
+        return (yield)
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, prev)
+        if time.monotonic() - start >= PHASE_TIME_LIMIT_S:
+            from pyspark import SparkContext
+
+            sc = SparkContext._active_spark_context
+            if sc is not None:
+                sc.cancelAllJobs()
+
+
+pytest_runtest_setup = pytest.hookimpl(wrapper=True)(_time_limited)
+pytest_runtest_call = pytest.hookimpl(wrapper=True)(_time_limited)
+pytest_runtest_teardown = pytest.hookimpl(wrapper=True)(_time_limited)
 
 
 @pytest.fixture(scope="session")

@@ -761,23 +761,21 @@ def no_auto_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_link_prediction_degree_broadcast_gated_off(no_auto_broadcast):
+def test_link_prediction_degree_broadcast_gated_off(
+    no_auto_broadcast, monkeypatch
+):
     """r15 (r14 verdict): above the 2M-vertex gate the degree dims must
     NOT broadcast — a billions-row broadcast is a driver OOM at 100 TB.
-    Gate forced off via broadcast_vertex_limit=0; with auto-broadcast
+    Gate forced off via BROADCAST_VERTEX_LIMIT=0; with auto-broadcast
     disabled any BroadcastHashJoin left could only be an ungated hint."""
-    from pg_age_digitaltwins_spark.operators.graph_analytics import (
-        link_prediction,
-    )
+    import pg_age_digitaltwins_spark.operators.graph_analytics as ga
     from pg_age_digitaltwins_spark.store.tpch_loader import load_graph
 
     spark = no_auto_broadcast
     st = load_graph(spark, SF_DIR)
+    monkeypatch.setattr(ga, "BROADCAST_VERTEX_LIMIT", 0)
     plan = _plan(
-        link_prediction(
-            st.relationships, k=10, max_wedge_degree=100,
-            broadcast_vertex_limit=0,
-        )
+        ga.link_prediction(st.relationships, k=10, max_wedge_degree=100)
     )
     # r16: the k-row decode hash-builds the TakeOrdered side (bounded at
     # k rows by construction, safe at any graph size) — so exactly TWO
@@ -796,18 +794,17 @@ def test_link_prediction_degree_broadcast_gated_off(no_auto_broadcast):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_assortativity_degree_broadcast_gated_off(no_auto_broadcast):
+def test_assortativity_degree_broadcast_gated_off(
+    no_auto_broadcast, monkeypatch
+):
     """r15: same gate for assortativity's two degree-dim joins."""
-    from pg_age_digitaltwins_spark.operators.graph_analytics import (
-        degree_assortativity,
-    )
+    import pg_age_digitaltwins_spark.operators.graph_analytics as ga
     from pg_age_digitaltwins_spark.store.tpch_loader import load_graph
 
     spark = no_auto_broadcast
     st = load_graph(spark, SF_DIR)
-    plan = _plan(
-        degree_assortativity(st.relationships, broadcast_vertex_limit=0)
-    )
+    monkeypatch.setattr(ga, "BROADCAST_VERTEX_LIMIT", 0)
+    plan = _plan(ga.degree_assortativity(st.relationships))
     assert "BroadcastHashJoin" not in plan, plan
     assert "BroadcastExchange" not in plan, plan
 
@@ -1024,8 +1021,8 @@ def test_store_vid_layout_equivalence_and_invalidation(spark):
     assert vids == sorted(vids)
 
     def runs(fn):
-        with_vid = fn(vid_edges=st.edges_vid, vid_map=st.vertex_ids)
-        without = fn(vid_edges=None, vid_map=None)
+        with_vid = fn(universe=st.universe)
+        without = fn(universe=st.universe.without_layout())
         a = [tuple(r) for r in with_vid.collect()]
         b = [tuple(r) for r in without.collect()]
         return a, b
@@ -1055,9 +1052,7 @@ def test_store_vid_layout_equivalence_and_invalidation(spark):
     # orderBy range exchange (the vid-map build's signature) anywhere
     # in the composed plan
     plan = _plan(
-        triangle_count(
-            st.relationships, vid_edges=st.edges_vid, vid_map=st.vertex_ids
-        )
+        triangle_count(st.relationships, universe=st.universe)
     )
     assert "rangepartitioning" not in plan.lower(), plan
 
@@ -1096,8 +1091,8 @@ def test_store_vid_layout_iterative_kernels_equivalence(spark):
     assert st.vertex_ids is not None and st.edges_vid is not None
 
     def runs(fn):
-        with_vid = fn(vid_edges=st.edges_vid, vid_map=st.vertex_ids)
-        without = fn(vid_edges=None, vid_map=None)
+        with_vid = fn(universe=st.universe)
+        without = fn(universe=st.universe.without_layout())
         a = sorted(tuple(r) for r in with_vid.collect())
         b = sorted(tuple(r) for r in without.collect())
         return a, b
@@ -1147,7 +1142,7 @@ def test_label_kernel_broadcast_gates_force_off(no_auto_broadcast, monkeypatch):
     """r17 (r14-verdict discipline for the new gates): the CC
     contraction / SCC peel-trim / topological-levels state joins
     broadcast the vertex-sized side ONLY under the ≤2M gate.  With
-    ``broadcast_vertex_limit=0`` no F.broadcast hint may be planted at
+    ``BROADCAST_VERTEX_LIMIT=0`` no F.broadcast hint may be planted at
     all (auto-broadcast is disabled by the fixture, so zero hints ⇒
     zero vertex-sized BroadcastExchange anywhere in the loop's jobs —
     the loop internals execute during the call, so a plan-string pin
@@ -1177,9 +1172,9 @@ def test_label_kernel_broadcast_gates_force_off(no_auto_broadcast, monkeypatch):
         lambda **kw: ga.topological_levels(st.twins, st.relationships, **kw),
     ):
         calls["n"] = 0
-        fn(broadcast_vertex_limit=0).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        with monkeypatch.context() as m:
+            m.setattr(ga, "BROADCAST_VERTEX_LIMIT", 0)
+            fn().write.format("noop").mode("overwrite").save()
         assert calls["n"] == 0, "gate off must plant zero broadcast hints"
         calls["n"] = 0
         fn().write.format("noop").mode("overwrite").save()
