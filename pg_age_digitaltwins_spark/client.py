@@ -16,7 +16,7 @@ import re
 import threading
 import uuid
 from collections import OrderedDict
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -105,27 +105,26 @@ def _cypher_paging_order(df: DataFrame):
     return df, sort_cols
 
 
-def _keyset_ge(cols: list, vals: list):
-    """Lexicographic ``(cols) >= (vals)`` under Spark's default
-    ascending-nulls-first order (``a > lit(v)`` is null-safe false for
-    null ``a``, which is exactly nulls-first semantics), in the nested
-    O(k) form ``c0 > v0 OR (c0 = v0 AND (c1 > v1 OR ...))``.  A
-    leading ``c0 >= v0`` conjunct (implied by the rest) is a plain
+def _keyset_ge(df: DataFrame, names: list[str], vals: list):
+    """Lexicographic ``(names) >= (vals)`` over ``df``'s columns under
+    Spark's default ascending-nulls-first order, as one comparison of
+    two structs: Spark orders structs field by field, nulls first.  The
+    values stay literals (they come from a client's token), cast as one
+    struct to the key columns' types, so the predicate costs a fixed
+    handful of Column calls plus one ``lit`` per key.  A leading
+    ``c0 >= v0`` conjunct (implied by the rest) is a plain
     column-vs-literal bound that cached-batch and file min/max
     statistics can prune on."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import functions as F, types as T
 
-    pred = None
-    for c, v in reversed(list(zip(cols, vals))):
-        if v is None:
-            gt, eq = c.isNotNull(), c.isNull()
-        else:
-            lit = F.lit(v)
-            gt, eq = c > lit, c == lit
-        pred = gt | (eq if pred is None else eq & pred)
+    key_type = T.StructType(
+        [T.StructField(c, df.schema[c].dataType, True) for c in names]
+    )
+    lits = [F.lit(v) for v in vals]
+    pred = F.struct(*names) >= F.struct(*lits).cast(key_type)
     if vals[0] is None:  # every value is >= null under nulls-first
         return pred
-    return (cols[0] >= F.lit(vals[0])) & pred
+    return (F.col(names[0]) >= lits[0]) & pred
 
 
 def _token_encode_val(v):
@@ -183,22 +182,114 @@ def compute_query_charge(
     return charge
 
 
-# Cache caps.  A plan is a small lazy object; a paged result is a
-# persisted copy of a whole query answer, so only the few queries a
-# session is paging through at once keep one.  The cap counts entries,
-# not bytes: a paged full scan keeps the whole scan (memory, spilling
-# to disk).
+# Cache caps.  A plan is a small lazy object; a paged query's entry
+# holds at most one block of ready pages and, from its second Spark
+# page read in a snapshot, a persisted copy of the whole answer, so only
+# the few queries a session is paging through at once keep one.  The
+# cap counts entries, not bytes: a paged full scan keeps the whole scan
+# (memory, spilling to disk).
 _PLAN_CACHE_CAP = 64
 _RESULT_CACHE_CAP = 8
+
+# Rows one Spark page read collects: the page asked for and the pages
+# after it, FETCH_ROWS // n of them (at least one), plus one look-ahead
+# row.  A top-1001 costs what a top-101 costs; a Spark job costs more
+# than shipping the extra rows.
+FETCH_ROWS = 1000
+
+# The row-position column an offset-paged (Cypher ORDER BY) entry adds
+# to its persisted copy, so each block read is one top-N over it.
+_ROW_COL = "__pgage_row"
 
 
 @dataclass
 class _PagedResult:
-    """A paged query's answer, persisted with its paging keys."""
+    """A paged query's state in one store snapshot."""
 
-    store: GraphStore  # the snapshot it was computed from
-    df: DataFrame  # persisted; unordered unless offset-paged
+    store: GraphStore  # the snapshot it belongs to
+    plan: DataFrame  # the compiled plan: row shape and charge
+    # what a Spark page read reads: the plan with its paging columns,
+    # or the persisted copy of that once built
+    frame: DataFrame
     sort_cols: list[str]  # keyset columns; empty → offset paging
+    hidden: frozenset  # paging columns stripped from served rows
+    reads: int = 0  # Spark page reads so far
+    persisted: bool = False
+    # the last block read, cut into pages:
+    # (incoming token or None, page size) -> (Rows, outgoing token)
+    ready: dict = field(default_factory=dict)
+
+
+def _token(tok: dict) -> str:
+    return base64.b64encode(json.dumps(tok).encode()).decode()
+
+
+def _release(entries: list) -> None:
+    """Unpersist the persisted copies of released entries."""
+    for e in entries:
+        if e.persisted:
+            e.frame.unpersist()
+
+
+def _cut_block(block: list, n: int, m: int, token: "str | None", next_token) -> dict:
+    """Cut ``block``, read from the page ``token`` starts, into up to
+    ``m`` pages of ``n`` rows: ``{(incoming token, n): (rows, outgoing
+    token)}``.  ``next_token(i, rows)`` is page ``i``'s outgoing token,
+    asked only when the block holds a row past that page."""
+    pages = {}
+    for i in range(m):
+        rows = block[i * n:(i + 1) * n]
+        out = next_token(i, rows) if len(block) > (i + 1) * n else None
+        pages[(token, n)] = (rows, out)
+        if out is None:
+            break
+        token = out
+    return pages
+
+
+def _keyset_block(frame, sort_cols, query, n, m, tok):
+    """A keyset block read (one top-N) and the token rule that cuts
+    it: a page's token names its last key and how many rows with
+    that key it served, carried over a page of nothing else."""
+    boundary = tok.get("_ks")
+    skip = int(tok.get("_kd", 0))
+    vals = None
+    if boundary is not None:
+        if len(boundary) != len(sort_cols):
+            # a token from a build with other paging keys: zipping
+            # would misalign the values and serve a wrong page
+            raise ValueError(
+                "continuation token does not match this query's paging "
+                f"keys ({len(boundary)} values, {len(sort_cols)} keys); "
+                "restart from the first page"
+            )
+        vals = [_token_decode_val(v) for v in boundary]
+        frame = frame.filter(_keyset_ge(frame, sort_cols, vals))
+    # the page order comes from here: neither the keyset plan nor
+    # its persisted copy is sorted.  A top-N is one Spark job
+    # whatever the partition layout.
+    block = frame.orderBy(*sort_cols).offset(skip).limit(m * n + 1).collect()
+
+    def next_token(i, rows):
+        nonlocal vals, skip
+        if not rows:
+            return None
+        last = [rows[-1][c] for c in sort_cols]
+        dups = 0
+        for r in reversed(rows):
+            if [r[c] for c in sort_cols] == last:
+                dups += 1
+            else:
+                break
+        if vals is not None and last == vals and dups == len(rows):
+            # the whole page was boundary duplicates — carry the skip
+            dups += skip
+        vals, skip = last, dups
+        return _token(
+            {"_ks": [_token_encode_val(v) for v in last], "_kd": dups, "_q": query}
+        )
+
+    return block, next_token
 
 
 class DigitalTwinsSparkClient:
@@ -320,174 +411,150 @@ class DigitalTwinsSparkClient:
         are arbitrary expressions that need not appear in the
         projection.
 
-        Paged results are cached per (store snapshot, query text):
+        Paged queries keep one entry per (store snapshot, query text):
 
-        * A request WITH a continuation token for a query that has no
-          entry builds one: it persists the query's answer with its
-          paging keys, and its own page read (a top-N, which reads
-          every partition) fills the cache in the same single run of
-          the query.  That page costs somewhat more than an uncached
-          one (the whole answer is cached before the keyset filter
-          applies).  A reader that stops after the first page, an
-          unpaged query and a point query pay nothing extra.
-        * Every later page of that query, first page or continuation,
-          READS the entry: the keyset filter plus a top-N over the
-          cached rows — one Spark job, no re-run of the query's joins
-          or broadcast builds.  Offset pages (Cypher ORDER BY) read the
-          entry's sorted partitions in order.  A request without a
-          token and without an entry runs the query itself.
-        * The gain therefore depends on a query being paged more than
-          once per snapshot (page 3 onward, or a second walk); a store
-          swapped before every continuation pays one build per page.
-        * Entries are released (unpersisted) when the store is swapped
-          — every mutation, commit, checkpoint, job and ``DELETE`` —
-          and, least recently used first, when more than
-          ``_RESULT_CACHE_CAP`` queries hold one.  Pages therefore
-          read the current snapshot, as keyset tokens always did: a
-          page after a write runs against the new store.  A page read
-          racing a release recomputes its rows from the lineage the
-          persisted frame keeps."""
+        * A page read that runs on Spark reads a BLOCK in one job: the
+          page asked for and the ``FETCH_ROWS // n`` pages after it (at
+          least one page), plus one look-ahead row — one top-N for
+          keyset pages, one offset/limit for offset pages.  The block
+          is cut into pages exactly as page-by-page reads would cut
+          it: the same rows, tokens and charges.  The first is served;
+          all of them are kept on the entry as READY pages, keyed by
+          (incoming token or none, page size).
+        * A request whose key has a ready page returns it with no Spark
+          job and no compile; rows are shaped when served.  A token
+          replayed with another page size misses and reads its own
+          block.
+        * An entry keeps one block, at most ``max(FETCH_ROWS, n) + 1``
+          rows; a newer block replaces the older one.  A query whose
+          first read finds a one-page answer (a point query) keeps no
+          entry.
+        * The second Spark read of a query in one snapshot persists its
+          answer with its paging keys (that read fills the copy); every
+          later block read is one Spark job over the copy, with no
+          re-run of the query's joins or broadcast builds.  A walk
+          shorter than two blocks, an unpaged query and a point query
+          persist nothing.
+        * Entries, with their ready pages and persisted copies, are
+          released when the store is swapped — every mutation, commit,
+          checkpoint, job and ``DELETE`` — and, least recently used
+          first, when more than ``_RESULT_CACHE_CAP`` queries hold one.
+          Pages therefore read the current snapshot, as keyset tokens
+          always did: a page after a write runs against the new store.
+          A page read racing a release recomputes its rows from the
+          lineage the persisted frame keeps."""
         tok: dict[str, Any] = {}
         if continuation_token:
             tok = json.loads(base64.b64decode(continuation_token))
             query = tok["_q"]
-        paging = max_items_per_page is not None
         # one read of the current store serves the whole request, so
-        # the plan and the paged result it feeds are of one snapshot
+        # the plan and the paged entry it feeds are of one snapshot
         store = self.store
-        df = self._plan(query, paging, store)
-        cartesians = getattr(df, "_pgage_cartesians", 0)
-        if not paging:
+        if max_items_per_page is None:
+            df = self._plan(query, False, store)
             rows = _shape_rows(
                 [_jsonable(r.asDict(recursive=True)) for r in df.collect()], df
             )
             return QueryPage(
-                rows, None, compute_query_charge(rows, query, cartesians)
+                rows,
+                None,
+                compute_query_charge(rows, query, getattr(df, "_pgage_cartesians", 0)),
             )
 
-        df, sort_cols = self._paged_result(query, df, store, build=bool(tok))
-        if not sort_cols:
-            return self._offset_page(df, query, max_items_per_page, tok, cartesians)
-        return self._keyset_page(
-            df, query, max_items_per_page, tok, sort_cols, cartesians
+        key = (continuation_token or None, max_items_per_page)
+        entry = self._paged_entry(query, store)
+        with self._cache_lock:
+            page = entry.ready.get(key)
+        if page is None:
+            page = self._read_block(entry, query, key, tok)
+        rows = _shape_rows(
+            [
+                _jsonable(
+                    {k: v for k, v in r.asDict(recursive=True).items() if k not in entry.hidden}
+                )
+                for r in page[0]
+            ],
+            entry.plan,
         )
+        cartesians = getattr(entry.plan, "_pgage_cartesians", 0)
+        return QueryPage(rows, page[1], compute_query_charge(rows, query, cartesians))
 
-    def _paged_result(
-        self, query: str, plan: DataFrame, store: GraphStore, build: bool
-    ) -> tuple[DataFrame, list[str]]:
-        """The frame a page of ``query`` reads and its keyset sort
-        columns (empty → offset paging): the cached entry of ``store``
-        when one exists, else ``plan`` (compiled against ``store``),
-        which ``build`` persists as a new entry.  The entry is kept
-        only while ``store`` is current."""
+    def _paged_entry(self, query: str, store: GraphStore) -> _PagedResult:
+        """The cached entry of ``query`` in ``store``, or a new one
+        (compiling the plan) that ``_read_block`` decides to keep."""
         with self._cache_lock:
             hit = self._result_cache.get(query)
             if hit is not None and hit.store is store:
                 self._result_cache.move_to_end(query)
-                return hit.df, hit.sort_cols
+                return hit
+        plan = self._plan(query, True, store)
         if self.detect_dialect(query) == "adt":
-            df, sort_cols = plan, [c for c in plan.columns if c.startswith("__pk")]
+            frame, sort_cols = plan, [c for c in plan.columns if c.startswith("__pk")]
         elif re.search(r"\bORDER\s+BY\b", query, re.IGNORECASE):
-            df, sort_cols = plan, []
+            frame, sort_cols = plan, []
         else:
-            df, sort_cols = _cypher_paging_order(plan)
-        if not build:
-            return df, sort_cols
-        # persist, not localCheckpoint: the frame keeps its lineage, so
-        # a read that races the release recomputes instead of failing.
-        # No job here: this request's page read fills the cache (a
-        # keyset page is a top-N, which reads every partition).
-        df = df.persist()
-        entry = _PagedResult(store, df, sort_cols)
+            frame, sort_cols = _cypher_paging_order(plan)
+        hidden = frozenset(
+            [c for c in frame.columns if c.startswith(("__pk", "__ks"))]
+            if sort_cols
+            else [_ROW_COL]
+        )
+        return _PagedResult(store, plan, frame, sort_cols, hidden)
+
+    def _read_block(
+        self, entry: _PagedResult, query: str, key: tuple, tok: dict[str, Any]
+    ) -> tuple[list, str | None]:
+        """Read the block that starts at the page ``key`` names in one
+        Spark job, keep it as the entry's ready pages and return the
+        page asked for: (Rows, outgoing token)."""
+        from pyspark.sql import functions as F
+
+        token, n = key
+        m = max(1, FETCH_ROWS // n) if n > 0 else 1
         with self._cache_lock:
-            old = self._result_cache.pop(query, None)
-            # an entry of this store is a concurrent build of the same
-            # cached plan: replacing it releases nothing
-            released = [] if old is None or old.store is store else [old]
-            if self.store is store:
+            entry.reads += 1
+            # persist on the second read, and only an entry still cached
+            # (an evicted or swapped-out one would never be released)
+            if entry.reads == 2 and self._result_cache.get(query) is entry:
+                frame = entry.frame
+                if not entry.sort_cols:
+                    frame = frame.withColumn(_ROW_COL, F.monotonically_increasing_id())
+                # persist, not localCheckpoint: the frame keeps its
+                # lineage, so a read that races the release recomputes
+                # instead of failing.  This read fills it.
+                entry.frame, entry.persisted = frame.persist(), True
+            frame, persisted = entry.frame, entry.persisted
+        if entry.sort_cols:
+            block, next_token = _keyset_block(frame, entry.sort_cols, query, n, m, tok)
+        else:
+            offset = int(tok.get("_tr", 0))
+            if persisted:
+                # the copy keeps the sorted order in its row positions: a
+                # top-N over them is one job at any depth, where a limit
+                # over the copy scans partitions incrementally
+                frame = frame.orderBy(_ROW_COL)
+            block = frame.offset(offset).limit(m * n + 1).collect()
+
+            def next_token(i, rows):
+                return _token({"_tr": offset + (i + 1) * n, "_q": query})
+
+        pages = _cut_block(block, n, m, token, next_token)
+        released = []
+        with self._cache_lock:
+            entry.ready = pages  # one block per entry: replaces the last
+            # a new entry is kept when its answer has another page (a
+            # one-page answer, such as a point query, would only evict
+            # the entries of queries being paged), and only while its
+            # store is current
+            new = self._result_cache.get(query) is not entry
+            if new and pages[key][1] is not None and self.store is entry.store:
+                old = self._result_cache.pop(query, None)
+                released = [] if old is None else [old]
                 self._result_cache[query] = entry
                 while len(self._result_cache) > _RESULT_CACHE_CAP:
                     released.append(self._result_cache.popitem(last=False)[1])
-            else:  # swapped while building: serve this page, keep nothing
-                released.append(entry)
-        for e in released:
-            e.df.unpersist()
-        return df, sort_cols
-
-    def _offset_page(
-        self, df: DataFrame, query: str, n: int, tok: dict[str, Any],
-        cartesians: int = 0,
-    ) -> QueryPage:
-        offset = int(tok.get("_tr", 0))
-        page = df.offset(offset).limit(n + 1).collect()
-        rows = _shape_rows(
-            [_jsonable(r.asDict(recursive=True)) for r in page[:n]], df
-        )
-        token = None
-        if len(page) > n:
-            token = base64.b64encode(
-                json.dumps({"_tr": offset + n, "_q": query}).encode()
-            ).decode()
-        return QueryPage(rows, token, compute_query_charge(rows, query, cartesians))
-
-    def _keyset_page(
-        self, df: DataFrame, query: str, n: int, tok: dict[str, Any],
-        sort_cols: list[str], cartesians: int = 0,
-    ) -> QueryPage:
-        from pyspark.sql import functions as F
-
-        boundary = tok.get("_ks")
-        skip = int(tok.get("_kd", 0))
-        vals = None
-        page_df = df
-        if boundary is not None:
-            if len(boundary) != len(sort_cols):
-                # a token from a build with other paging keys: zipping
-                # would misalign the values and serve a wrong page
-                raise ValueError(
-                    "continuation token does not match this query's paging "
-                    f"keys ({len(boundary)} values, {len(sort_cols)} keys); "
-                    "restart from the first page"
-                )
-            vals = [_token_decode_val(v) for v in boundary]
-            page_df = df.filter(_keyset_ge([F.col(c) for c in sort_cols], vals))
-        # the page order comes from here: neither the keyset plan nor
-        # its cached entry is sorted.  A top-N is one Spark job
-        # whatever the partition layout.
-        page = page_df.orderBy(*sort_cols).offset(skip).limit(n + 1).collect()
-        served = page[:n]
-        token = None
-        if len(page) > n and served:
-            last = [served[-1][c] for c in sort_cols]
-            dups = 0
-            for r in reversed(served):
-                if [r[c] for c in sort_cols] == last:
-                    dups += 1
-                else:
-                    break
-            if vals is not None and last == vals and dups == len(served):
-                # the whole page was boundary duplicates — carry the skip
-                dups += skip
-            token = base64.b64encode(
-                json.dumps(
-                    {
-                        "_ks": [_token_encode_val(v) for v in last],
-                        "_kd": dups,
-                        "_q": query,
-                    }
-                ).encode()
-            ).decode()
-        hidden = {c for c in df.columns if c.startswith("__pk") or c.startswith("__ks")}
-        rows = _shape_rows(
-            [
-                _jsonable(
-                    {k: v for k, v in r.asDict(recursive=True).items() if k not in hidden}
-                )
-                for r in served
-            ],
-            df,
-        )
-        return QueryPage(rows, token, compute_query_charge(rows, query, cartesians))
+        _release(released)
+        return pages[key]
 
     def query_charge(self, page: QueryPage) -> float:
         """Per-page charge, reference arithmetic incl. the +10
@@ -517,8 +584,7 @@ class DigitalTwinsSparkClient:
             self._result_cache = OrderedDict(
                 (k, e) for k, e in self._result_cache.items() if e.store is store
             )
-        for e in released:
-            e.df.unpersist()
+        _release(released)
 
     def checkpoint(self, path: str | None = None, compact: bool = False) -> None:
         """Storage maintenance (SURVEY §7 hard-#5: update-heavy OLTP on

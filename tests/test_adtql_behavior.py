@@ -520,6 +520,8 @@ def test_keyset_relationship_pages_with_duplicate_rel_ids(spark):
                 )
             )
             page = c.query(q, max_items_per_page=n, continuation_token=token)
+            # one Spark read per snapshot persists nothing
+            assert not any(e.persisted for e in c._result_cache.values())
             seen += [(r["src"], r["rid"]) for r in page.rows]
             token = page.continuation_token
             if not token:
