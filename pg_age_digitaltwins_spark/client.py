@@ -11,6 +11,7 @@ cluster-deployment story (SURVEY.md §3.2).
 from __future__ import annotations
 
 import base64
+import dataclasses
 import json
 import re
 import threading
@@ -22,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from pg_age_digitaltwins_spark import crud
+from pg_age_digitaltwins_spark.adtql import ast as A
 from pg_age_digitaltwins_spark.adtql.compiler import QueryCompiler
 from pg_age_digitaltwins_spark.adtql.parser import parse
 from pg_age_digitaltwins_spark.store.graph_store import GraphStore
@@ -220,6 +222,33 @@ class _PagedResult:
     ready: dict = field(default_factory=dict)
 
 
+def _point_query_id(tree: "A.Query | None") -> "tuple[str, str | None] | None":
+    """``(dt_id, alias)`` when ``tree`` is an ADT point query by key —
+    ``SELECT <a> FROM DIGITALTWINS <a> WHERE <a>.$dtId = '<id>'`` (alias
+    ``a``) or ``SELECT * FROM DIGITALTWINS WHERE $dtId = '<id>'`` (alias
+    None) — else None."""
+    if tree is None or tree.source != "digitaltwins" or tree.top is not None:
+        return None
+    if tree.match is not None or tree.joins:
+        return None
+    a = tree.source_alias
+    if a is None:
+        if not isinstance(tree.select, A.Star):
+            return None
+    elif tree.select != [A.Projection(A.PropRef(None, [a]))]:
+        return None
+    w = tree.where
+    if not (
+        isinstance(w, A.Cmp)
+        and w.op == "="
+        and w.left == A.PropRef(None, ["$dtId"] if a is None else [a, "$dtId"])
+        and isinstance(w.right, A.Lit)
+        and w.right.kind == "string"
+    ):
+        return None
+    return w.right.value, a
+
+
 def _token(tok: dict) -> str:
     return base64.b64encode(json.dumps(tok).encode()).decode()
 
@@ -292,6 +321,26 @@ def _keyset_block(frame, sort_cols, query, n, m, tok):
     return block, next_token
 
 
+def _point_page(
+    tree: A.Query | None, query: str, n: int | None, store: GraphStore
+) -> QueryPage | None:
+    """The answer of a point query by key (``_point_query_id``) from the
+    twin index of ``store``, or None to compile: another shape, a page
+    size under 1, or documents over the index's bound."""
+    point = _point_query_id(tree)
+    if point is None or (n is not None and n < 1):
+        return None
+    docs = store.twin_docs()
+    if docs is None:
+        return None
+    dt_id, alias = point
+    doc = docs.get(dt_id)
+    rows = []
+    if doc is not None:
+        rows = [json.loads(doc) if alias is None else {alias: json.loads(doc)}]
+    return QueryPage(rows, None, compute_query_charge(rows, query))
+
+
 class DigitalTwinsSparkClient:
     def __init__(self, store: GraphStore, graph_name: str = "digitaltwins"):
         self.store = store
@@ -305,6 +354,9 @@ class DigitalTwinsSparkClient:
         # query text -> its paged result
         self._result_cache: OrderedDict[str, _PagedResult] = OrderedDict()
         self._cache_lock = threading.Lock()
+        # a swap since the last commit that the change log does not
+        # describe (see _swap)
+        self._unlogged = False
 
     # ------------------------------------------------------------------
     # query (read path, SURVEY §3.1)
@@ -342,9 +394,13 @@ class DigitalTwinsSparkClient:
         call runs no Spark job."""
         return self._plan(query, order_for_paging, self.store)
 
-    def _plan(self, query: str, order_for_paging: bool, store: GraphStore) -> DataFrame:
+    def _plan(
+        self, query: str, order_for_paging: bool, store: GraphStore,
+        tree: A.Query | None = None,
+    ) -> DataFrame:
         """``query_df`` against ``store``, the snapshot the caller read
-        once for its whole request."""
+        once for its whole request; ``tree`` is the ADT query's parse
+        when the caller has it."""
         key = (query, order_for_paging)
         with self._cache_lock:
             hit = self._plan_cache.get(key)
@@ -352,7 +408,7 @@ class DigitalTwinsSparkClient:
                 self._plan_cache.move_to_end(key)
                 return hit[1]
         if self.detect_dialect(query) == "adt":
-            df = QueryCompiler(store).compile(parse(query), order_for_paging)
+            df = QueryCompiler(store).compile(tree or parse(query), order_for_paging)
         else:
             from pg_age_digitaltwins_spark.cypher import compile_cypher
 
@@ -442,7 +498,15 @@ class DigitalTwinsSparkClient:
           Pages therefore read the current snapshot, as keyset tokens
           always did: a page after a write runs against the new store.
           A page read racing a release recomputes its rows from the
-          lineage the persisted frame keeps."""
+          lineage the persisted frame keeps.
+
+        An ADT point query by key — ``SELECT <a> FROM DIGITALTWINS <a>
+        WHERE <a>.$dtId = '<id>'`` or ``SELECT * FROM DIGITALTWINS WHERE
+        $dtId = '<id>'`` — is answered from the snapshot's twin index
+        (``GraphStore.twin_docs``) with no compile and no Spark job:
+        the rows, token (none) and charge of the compiled path.  The
+        shape is checked on the parse of a plan-cache miss, so a hit
+        pays no parse; over the index's bound the query compiles."""
         tok: dict[str, Any] = {}
         if continuation_token:
             tok = json.loads(base64.b64decode(continuation_token))
@@ -450,8 +514,14 @@ class DigitalTwinsSparkClient:
         # one read of the current store serves the whole request, so
         # the plan and the paged entry it feeds are of one snapshot
         store = self.store
+        tree = None
+        if not continuation_token:
+            tree = self._parse_on_miss(query, max_items_per_page is not None, store)
+            page = _point_page(tree, query, max_items_per_page, store)
+            if page is not None:
+                return page
         if max_items_per_page is None:
-            df = self._plan(query, False, store)
+            df = self._plan(query, False, store, tree)
             rows = _shape_rows(
                 [_jsonable(r.asDict(recursive=True)) for r in df.collect()], df
             )
@@ -462,7 +532,7 @@ class DigitalTwinsSparkClient:
             )
 
         key = (continuation_token or None, max_items_per_page)
-        entry = self._paged_entry(query, store)
+        entry = self._paged_entry(query, store, tree)
         with self._cache_lock:
             page = entry.ready.get(key)
         if page is None:
@@ -479,7 +549,22 @@ class DigitalTwinsSparkClient:
         cartesians = getattr(entry.plan, "_pgage_cartesians", 0)
         return QueryPage(rows, page[1], compute_query_charge(rows, query, cartesians))
 
-    def _paged_entry(self, query: str, store: GraphStore) -> _PagedResult:
+    def _parse_on_miss(
+        self, query: str, order_for_paging: bool, store: GraphStore
+    ) -> A.Query | None:
+        """The parse of an ADT ``query`` with no plan cached in
+        ``store``; None on a hit or for Cypher."""
+        with self._cache_lock:
+            hit = self._plan_cache.get((query, order_for_paging))
+        if hit is not None and hit[0] is store:
+            return None
+        if self.detect_dialect(query) != "adt":
+            return None
+        return parse(query)
+
+    def _paged_entry(
+        self, query: str, store: GraphStore, tree: A.Query | None = None
+    ) -> _PagedResult:
         """The cached entry of ``query`` in ``store``, or a new one
         (compiling the plan) that ``_read_block`` decides to keep."""
         with self._cache_lock:
@@ -487,7 +572,7 @@ class DigitalTwinsSparkClient:
             if hit is not None and hit.store is store:
                 self._result_cache.move_to_end(query)
                 return hit
-        plan = self._plan(query, True, store)
+        plan = self._plan(query, True, store, tree)
         if self.detect_dialect(query) == "adt":
             frame, sort_cols = plan, [c for c in plan.columns if c.startswith("__pk")]
         elif re.search(r"\bORDER\s+BY\b", query, re.IGNORECASE):
@@ -572,11 +657,15 @@ class DigitalTwinsSparkClient:
             self._registry = ModelRegistry(docs)
         return self._registry
 
-    def _swap(self, store: GraphStore) -> None:
+    def _swap(self, store: GraphStore, logged: bool = True) -> None:
         """Make ``store`` current; drop the cached plans and release the
-        paged results of every other store."""
+        paged results of every other store.  ``logged=False`` marks a
+        change the buffered change log does not describe (jobs, a reset
+        of the graph): the next ``commit`` then writes a full snapshot,
+        as a copy-on-write commit rewrites only what the events name."""
         with self._cache_lock:
             self.store = store
+            self._unlogged |= not logged
             self._plan_cache = OrderedDict(
                 (k, v) for k, v in self._plan_cache.items() if v[0] is store
             )
@@ -639,24 +728,31 @@ class DigitalTwinsSparkClient:
             load_latest,
         )
 
+        snap = self.store
         events = list(self.changes.events)
         # Copy-on-write when the buffered events fully describe what
         # changed since the base version: rewrite O(touched partitions)
-        # instead of the whole table set.  An empty buffer means the
-        # mutations were captured out-of-band (feed mode / distributed
-        # import), so only the full snapshot is provably consistent.
-        if events and CommitLog(root).latest_version() > 0:
+        # instead of the whole table set.  An empty buffer, or a swap
+        # the buffer does not describe, means the mutations were
+        # captured out-of-band (feed mode, jobs, a graph reset), so only
+        # the full snapshot is provably consistent.
+        if events and not self._unlogged and CommitLog(root).latest_version() > 0:
             version = commit_cow(
-                self.store,
+                snap,
                 root,
                 changed=changed_partitions_from_events(events),
                 events=events,
             )
         else:
-            version = commit_snapshot(self.store, root, events=events or None)
+            version = commit_snapshot(snap, root, events=events or None)
         # Only drop the buffered events once the commit is durable.
         self.changes.events.clear()
-        store, _ = load_latest(self.store.spark, root)
+        self._unlogged = False
+        store, loaded = load_latest(snap.spark, root)
+        idx = snap.built_twin_index()
+        if loaded == version and idx is not None:
+            # the reload holds the twins this commit wrote: same index
+            store._twin_index = dataclasses.replace(idx, twins=store.twins)
         self._swap(store)
         return version
 

@@ -74,12 +74,24 @@ def generate_etag(entity_id: str, ts_iso: str) -> str:
 # ----------------------------------------------------------------------
 
 def get_twin(store: GraphStore, dt_id: str) -> dict[str, Any]:
-    """D1: point lookup — a filter on the promoted unique-key column
-    (the reference's unique ``$dtId`` index, ``DigitalTwins.cs:92-116``)."""
-    rows = store.twins.filter(F.col("dt_id") == dt_id).select("doc").take(1)
-    if not rows:
+    """D1: point lookup by the unique key (the reference's unique
+    ``$dtId`` index, ``DigitalTwins.cs:92-116``).
+
+    Served from the snapshot's twin index (``GraphStore.twin_docs``):
+    the first read by key of a snapshot builds it (one size check, one
+    collect of ``(dt_id, doc)``), later reads run no Spark job.  Over
+    ``graph_store.TWIN_INDEX_BYTES`` of document text it is a Spark
+    filter on the promoted ``dt_id`` column.  Raises ``ValueError`` if
+    two twin rows share ``dt_id``."""
+    docs = store.twin_docs()
+    if docs is not None:
+        doc = docs.get(dt_id)
+    else:
+        rows = store.twins.filter(F.col("dt_id") == dt_id).select("doc").take(1)
+        doc = rows[0][0] if rows else None
+    if doc is None:
         raise NotFoundError(f"Digital Twin with ID {dt_id} not found")
-    return json.loads(rows[0][0])
+    return json.loads(doc)
 
 
 def stamp_twin(
@@ -137,7 +149,19 @@ def _merge_twin_rows(store: GraphStore, rows: list[tuple], ids: list[str]) -> Gr
     base = store.twins.filter(~F.col("dt_id").isin(ids))
     if "vdoc" in base.columns:
         new_df = with_vdoc(new_df)
-    return _replace(store, twins=base.unionByName(new_df))
+    twins = base.unionByName(new_df)
+    return _replace(
+        store, twins=twins,
+        _twin_index=_carried(store, twins, put=[(r[0], r[4]) for r in rows]),
+    )
+
+
+def _carried(store: GraphStore, twins, **writes):
+    """The twin index of a mutation's ``twins``: the old snapshot's
+    index with the mutation's writes (``TwinIndex.carried``), or none
+    when the old one was never built."""
+    idx = store.built_twin_index()
+    return None if idx is None else idx.carried(twins, **writes)
 
 
 def _replace(store: GraphStore, **kw) -> GraphStore:
@@ -164,6 +188,11 @@ def _replace(store: GraphStore, **kw) -> GraphStore:
         vertex_ids=(None if "relationships" in kw else store.vertex_ids),
         edges_vid=(None if "relationships" in kw else store.edges_vid),
         _descendants=store._descendants,
+        # the twin index mirrors the twin rows: a twin mutation passes
+        # its carried copy, any other new twin frame starts without one
+        _twin_index=kw.get(
+            "_twin_index", None if "twins" in kw else store._twin_index
+        ),
     )
 
 
@@ -238,7 +267,13 @@ def delete_twin(
         raise ValidationError(
             f"Cannot delete twin {dt_id}: relationships still reference it"
         )
-    return _replace(store, twins=store.twins.filter(F.col("dt_id") != dt_id)), old
+    twins = store.twins.filter(F.col("dt_id") != dt_id)
+    return (
+        _replace(
+            store, twins=twins, _twin_index=_carried(store, twins, drop=[dt_id])
+        ),
+        old,
+    )
 
 
 def create_twins_batch(
@@ -280,12 +315,32 @@ def create_twins_batch(
 def _fetch_docs(store: GraphStore, ids: list[str]) -> dict[str, dict]:
     if not ids:
         return {}
+    docs = store.twin_docs()
+    if docs is not None:
+        return {i: json.loads(docs[i]) for i in ids if i in docs}
     rows = store.twins.filter(F.col("dt_id").isin(ids)).select("doc").collect()
     out = {}
     for (doc,) in rows:
         d = json.loads(doc)
         out[d["$dtId"]] = d
     return out
+
+
+def _twin_models(store: GraphStore, ids: list[str]) -> dict[str, str | None]:
+    """``dt_id`` -> model id of the twins among ``ids`` that exist."""
+    docs = store.twin_docs()
+    if docs is not None:
+        return {
+            i: (json.loads(docs[i]).get("$metadata") or {}).get("$model")
+            for i in ids
+            if i in docs
+        }
+    return {
+        r[0]: r[1]
+        for r in store.twins.filter(F.col("dt_id").isin(ids))
+        .select("dt_id", "model_id")
+        .collect()
+    }
 
 
 def _fetch_rel_docs(
@@ -402,12 +457,7 @@ def create_or_replace_relationship(
     doc["$sourceId"] = dt_id
     validate_relationship(doc)
     target = doc["$targetId"]
-    models = {
-        r[0]: r[1]
-        for r in store.twins.filter(F.col("dt_id").isin([dt_id, target]))
-        .select("dt_id", "model_id")
-        .collect()
-    }
+    models = _twin_models(store, [dt_id, target])
     if dt_id not in models:
         raise NotFoundError(f"Source twin {dt_id} not found")
     if target not in models:
@@ -522,12 +572,7 @@ def create_relationships_batch(
                 {"$relationshipId": d.get("$relationshipId"), "status": "error", "error": str(exc)}
             )
     endpoint_ids = {d["$sourceId"] for d in valid_docs} | {d["$targetId"] for d in valid_docs}
-    present = {
-        r[0]
-        for r in store.twins.filter(F.col("dt_id").isin(list(endpoint_ids)))
-        .select("dt_id")
-        .collect()
-    }
+    present = set(_twin_models(store, list(endpoint_ids)))
     # Prefetch existing docs so a replace logs Update+old (the twin
     # batch path does the same; CloudEventFactory.cs:35-133 pins the
     # Create-vs-Update+patch contract downstream).

@@ -798,7 +798,7 @@ class ApiService:
     def _reset_graph(self) -> None:
         from pg_age_digitaltwins_spark.store.graph_store import GraphStore
 
-        self.client._swap(GraphStore.empty(self.client.store.spark))
+        self.client._swap(GraphStore.empty(self.client.store.spark), logged=False)
         self.client._registry = None
 
     def graph_create(self, req: Request) -> Response:

@@ -762,7 +762,7 @@ def _import_file_distributed_body(
     ).unionByName(new_rels)
     store = crud._replace(store, relationships=merged_rels)
 
-    client._swap(store)
+    client._swap(store, logged=False)
     if client.changes.feed_dir is not None:
         _emit_import_changes(client, new_twins, pre_twins, new_rels, pre_rels, ts)
     if commit_root is not None:
@@ -997,7 +997,7 @@ def delete_job(client: DigitalTwinsSparkClient) -> dict[str, int]:
         "twins": store.twins.count(),
         "models": store.models.count(),
     }
-    client._swap(GraphStore.empty(store.spark))
+    client._swap(GraphStore.empty(store.spark), logged=False)
     client._registry = None
     return counts
 
@@ -1038,7 +1038,7 @@ class DeleteJob:
                 store = crud._replace(
                     store, relationships=store.relationships.limit(0)
                 )
-                self.client._swap(store)
+                self.client._swap(store, logged=False)
                 cp.relationships_completed = True
                 cp.section = "Twins"
                 self.jobs.save_delete_checkpoint(cp)
@@ -1046,14 +1046,14 @@ class DeleteJob:
                 self._phase_hook("Twins")
                 cp.twins_deleted = store.twins.count()
                 store = crud._replace(store, twins=store.twins.limit(0))
-                self.client._swap(store)
+                self.client._swap(store, logged=False)
                 cp.twins_completed = True
                 cp.section = "Models"
                 self.jobs.save_delete_checkpoint(cp)
             if not cp.models_completed:
                 self._phase_hook("Models")
                 cp.models_deleted = store.models.count()
-                self.client._swap(GraphStore.empty(store.spark))
+                self.client._swap(GraphStore.empty(store.spark), logged=False)
                 self.client._registry = None
                 cp.models_completed = True
                 cp.section = "Completed"

@@ -59,6 +59,9 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.enabled", "true")
+        # the benchmark's heap: the sf0.1 centrality tests ran out of
+        # the 1 GB default
+        .config("spark.driver.memory", "2g")
         .getOrCreate()
     )
     yield spark
