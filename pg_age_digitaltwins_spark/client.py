@@ -322,12 +322,13 @@ def _keyset_block(frame, sort_cols, query, n, m, tok):
 
 
 def _point_page(
-    tree: A.Query | None, query: str, n: int | None, store: GraphStore
+    point: tuple[str, str | None] | None, query: str, n: int | None,
+    store: GraphStore,
 ) -> QueryPage | None:
-    """The answer of a point query by key (``_point_query_id``) from the
-    twin index of ``store``, or None to compile: another shape, a page
-    size under 1, or documents over the index's bound."""
-    point = _point_query_id(tree)
+    """The answer of a point query by key (``point``, its
+    ``_point_query_id``) from the twin index of ``store``, or None to
+    run the compiled plan: another shape, a page size under 1, or no
+    index to read (``GraphStore.twin_docs``)."""
     if point is None or (n is not None and n < 1):
         return None
     docs = store.twin_docs()
@@ -354,9 +355,8 @@ class DigitalTwinsSparkClient:
         # query text -> its paged result
         self._result_cache: OrderedDict[str, _PagedResult] = OrderedDict()
         self._cache_lock = threading.Lock()
-        # a swap since the last commit that the change log does not
-        # describe (see _swap)
-        self._unlogged = False
+        # (root, version) of this client's last commit
+        self._committed: tuple[str, int] | None = None
 
     # ------------------------------------------------------------------
     # query (read path, SURVEY §3.1)
@@ -394,6 +394,19 @@ class DigitalTwinsSparkClient:
         call runs no Spark job."""
         return self._plan(query, order_for_paging, self.store)
 
+    def _cached_plan(
+        self, query: str, order_for_paging: bool, store: GraphStore
+    ) -> tuple | None:
+        """The plan cache's entry of ``query`` compiled against
+        ``store``: (store, plan, its ``_point_query_id``), or None."""
+        key = (query, order_for_paging)
+        with self._cache_lock:
+            hit = self._plan_cache.get(key)
+            if hit is not None and hit[0] is store:
+                self._plan_cache.move_to_end(key)
+                return hit
+        return None
+
     def _plan(
         self, query: str, order_for_paging: bool, store: GraphStore,
         tree: A.Query | None = None,
@@ -401,21 +414,22 @@ class DigitalTwinsSparkClient:
         """``query_df`` against ``store``, the snapshot the caller read
         once for its whole request; ``tree`` is the ADT query's parse
         when the caller has it."""
-        key = (query, order_for_paging)
-        with self._cache_lock:
-            hit = self._plan_cache.get(key)
-            if hit is not None and hit[0] is store:
-                self._plan_cache.move_to_end(key)
-                return hit[1]
+        hit = self._cached_plan(query, order_for_paging, store)
+        if hit is not None:
+            return hit[1]
+        point = None
         if self.detect_dialect(query) == "adt":
-            df = QueryCompiler(store).compile(tree or parse(query), order_for_paging)
+            tree = tree or parse(query)
+            point = _point_query_id(tree)
+            df = QueryCompiler(store).compile(tree, order_for_paging)
         else:
             from pg_age_digitaltwins_spark.cypher import compile_cypher
 
             df = compile_cypher(store, query)
+        key = (query, order_for_paging)
         with self._cache_lock:
             if self.store is store:  # not swapped while compiling
-                self._plan_cache[key] = (store, df)
+                self._plan_cache[key] = (store, df, point)
                 self._plan_cache.move_to_end(key)
                 while len(self._plan_cache) > _PLAN_CACHE_CAP:
                     self._plan_cache.popitem(last=False)
@@ -505,8 +519,10 @@ class DigitalTwinsSparkClient:
         $dtId = '<id>'`` — is answered from the snapshot's twin index
         (``GraphStore.twin_docs``) with no compile and no Spark job:
         the rows, token (none) and charge of the compiled path.  The
-        shape is checked on the parse of a plan-cache miss, so a hit
-        pays no parse; over the index's bound the query compiles."""
+        shape is checked on the parse of a plan-cache miss and kept
+        with the plan, so a hit pays no parse; with no index to read
+        (the snapshot's first read by key, or over its bound) the
+        query runs its compiled plan."""
         tok: dict[str, Any] = {}
         if continuation_token:
             tok = json.loads(base64.b64decode(continuation_token))
@@ -516,8 +532,15 @@ class DigitalTwinsSparkClient:
         store = self.store
         tree = None
         if not continuation_token:
-            tree = self._parse_on_miss(query, max_items_per_page is not None, store)
-            page = _point_page(tree, query, max_items_per_page, store)
+            hit = self._cached_plan(query, max_items_per_page is not None, store)
+            if hit is not None:
+                point = hit[2]
+            elif self.detect_dialect(query) == "adt":
+                tree = parse(query)
+                point = _point_query_id(tree)
+            else:
+                point = None
+            page = _point_page(point, query, max_items_per_page, store)
             if page is not None:
                 return page
         if max_items_per_page is None:
@@ -548,19 +571,6 @@ class DigitalTwinsSparkClient:
         )
         cartesians = getattr(entry.plan, "_pgage_cartesians", 0)
         return QueryPage(rows, page[1], compute_query_charge(rows, query, cartesians))
-
-    def _parse_on_miss(
-        self, query: str, order_for_paging: bool, store: GraphStore
-    ) -> A.Query | None:
-        """The parse of an ADT ``query`` with no plan cached in
-        ``store``; None on a hit or for Cypher."""
-        with self._cache_lock:
-            hit = self._plan_cache.get((query, order_for_paging))
-        if hit is not None and hit[0] is store:
-            return None
-        if self.detect_dialect(query) != "adt":
-            return None
-        return parse(query)
 
     def _paged_entry(
         self, query: str, store: GraphStore, tree: A.Query | None = None
@@ -665,7 +675,8 @@ class DigitalTwinsSparkClient:
         as a copy-on-write commit rewrites only what the events name."""
         with self._cache_lock:
             self.store = store
-            self._unlogged |= not logged
+            if not logged:
+                self.changes.complete = False
             self._plan_cache = OrderedDict(
                 (k, v) for k, v in self._plan_cache.items() if v[0] is store
             )
@@ -730,13 +741,16 @@ class DigitalTwinsSparkClient:
 
         snap = self.store
         events = list(self.changes.events)
+        complete = self.changes.complete
+        base = CommitLog(root).latest_version()
         # Copy-on-write when the buffered events fully describe what
         # changed since the base version: rewrite O(touched partitions)
-        # instead of the whole table set.  An empty buffer, or a swap
-        # the buffer does not describe, means the mutations were
-        # captured out-of-band (feed mode, jobs, a graph reset), so only
-        # the full snapshot is provably consistent.
-        if events and not self._unlogged and CommitLog(root).latest_version() > 0:
+        # instead of the whole table set.  An empty buffer, a drain or a
+        # swap the buffer does not describe means the mutations were
+        # captured out-of-band (feed mode, the change pipeline, jobs, a
+        # graph reset), so only the full snapshot is provably consistent.
+        cow = bool(events) and complete and base > 0
+        if cow:
             version = commit_cow(
                 snap,
                 root,
@@ -746,13 +760,18 @@ class DigitalTwinsSparkClient:
         else:
             version = commit_snapshot(snap, root, events=events or None)
         # Only drop the buffered events once the commit is durable.
-        self.changes.events.clear()
-        self._unlogged = False
+        self.changes.committed()
         store, loaded = load_latest(snap.spark, root)
+        store._key_reads = snap._key_reads
+        # The reload holds exactly the committed snapshot's twins after
+        # a full snapshot, or after a copy-on-write commit on the
+        # version this client itself committed last; then it gets the
+        # same index.
+        same = not cow or self._committed == (root, base)
         idx = snap.built_twin_index()
-        if loaded == version and idx is not None:
-            # the reload holds the twins this commit wrote: same index
+        if loaded == version and same and idx is not None:
             store._twin_index = dataclasses.replace(idx, twins=store.twins)
+        self._committed = (root, version)
         self._swap(store)
         return version
 

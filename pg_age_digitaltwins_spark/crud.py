@@ -77,12 +77,13 @@ def get_twin(store: GraphStore, dt_id: str) -> dict[str, Any]:
     """D1: point lookup by the unique key (the reference's unique
     ``$dtId`` index, ``DigitalTwins.cs:92-116``).
 
-    Served from the snapshot's twin index (``GraphStore.twin_docs``):
-    the first read by key of a snapshot builds it (one size check, one
-    collect of ``(dt_id, doc)``), later reads run no Spark job.  Over
-    ``graph_store.TWIN_INDEX_BYTES`` of document text it is a Spark
-    filter on the promoted ``dt_id`` column.  Raises ``ValueError`` if
-    two twin rows share ``dt_id``."""
+    Served from the snapshot's twin index (``GraphStore.twin_docs``)
+    with no Spark job.  The first read by key of a new store is a Spark
+    filter on the promoted ``dt_id`` column; the second builds the index
+    (one size check, one collect of ``(dt_id, doc)``).  Over
+    ``graph_store.TWIN_INDEX_BYTES`` of document text every read is that
+    filter.  Building raises ``ValueError`` if two twin rows share
+    ``dt_id``."""
     docs = store.twin_docs()
     if docs is not None:
         doc = docs.get(dt_id)
@@ -193,6 +194,7 @@ def _replace(store: GraphStore, **kw) -> GraphStore:
         _twin_index=kw.get(
             "_twin_index", None if "twins" in kw else store._twin_index
         ),
+        _key_reads=store._key_reads,
     )
 
 
@@ -291,8 +293,7 @@ def create_twins_batch(
         raise ValidationError(f"Batch size {len(docs)} exceeds limit {max_batch}")
     ts = ts or now_iso()
     results: list[dict[str, Any]] = []
-    rows: list[tuple] = []
-    ids: list[str] = []
+    rows: dict[str, tuple] = {}  # dt_id -> its row
     changes: list[tuple[str, dict | None, dict | None]] = []
     olds = _fetch_docs(store, [d.get("$dtId") for d in docs if d.get("$dtId")])
     for d in docs:
@@ -302,13 +303,16 @@ def create_twins_batch(
                 raise ValidationError("Twin document requires $dtId")
             validate_twin(registry, d)
             stamped = stamp_twin(d, dt_id, ts, user_id)
-            rows.append(_twin_row(stamped))
-            ids.append(dt_id)
             changes.append((dt_id, olds.get(dt_id), stamped))
+            # an id the batch repeats is written in order, the last one
+            # wins (as in the import job): its row replaces the earlier
+            # one, whose document is the old one of the next change
+            olds[dt_id] = stamped
+            rows[dt_id] = _twin_row(stamped)
             results.append({"$dtId": dt_id, "status": "ok"})
         except (ValidationError, KeyError) as exc:
             results.append({"$dtId": dt_id, "status": "error", "error": str(exc)})
-    store2 = _merge_twin_rows(store, rows, ids) if rows else store
+    store2 = _merge_twin_rows(store, list(rows.values()), list(rows)) if rows else store
     return store2, results, changes
 
 
@@ -324,23 +328,6 @@ def _fetch_docs(store: GraphStore, ids: list[str]) -> dict[str, dict]:
         d = json.loads(doc)
         out[d["$dtId"]] = d
     return out
-
-
-def _twin_models(store: GraphStore, ids: list[str]) -> dict[str, str | None]:
-    """``dt_id`` -> model id of the twins among ``ids`` that exist."""
-    docs = store.twin_docs()
-    if docs is not None:
-        return {
-            i: (json.loads(docs[i]).get("$metadata") or {}).get("$model")
-            for i in ids
-            if i in docs
-        }
-    return {
-        r[0]: r[1]
-        for r in store.twins.filter(F.col("dt_id").isin(ids))
-        .select("dt_id", "model_id")
-        .collect()
-    }
 
 
 def _fetch_rel_docs(
@@ -457,7 +444,10 @@ def create_or_replace_relationship(
     doc["$sourceId"] = dt_id
     validate_relationship(doc)
     target = doc["$targetId"]
-    models = _twin_models(store, [dt_id, target])
+    models = {
+        i: (d.get("$metadata") or {}).get("$model")
+        for i, d in _fetch_docs(store, [dt_id, target]).items()
+    }
     if dt_id not in models:
         raise NotFoundError(f"Source twin {dt_id} not found")
     if target not in models:
@@ -572,7 +562,7 @@ def create_relationships_batch(
                 {"$relationshipId": d.get("$relationshipId"), "status": "error", "error": str(exc)}
             )
     endpoint_ids = {d["$sourceId"] for d in valid_docs} | {d["$targetId"] for d in valid_docs}
-    present = set(_twin_models(store, list(endpoint_ids)))
+    present = set(_fetch_docs(store, list(endpoint_ids)))
     # Prefetch existing docs so a replace logs Update+old (the twin
     # batch path does the same; CloudEventFactory.cs:35-133 pins the
     # Create-vs-Update+patch contract downstream).

@@ -160,15 +160,20 @@ class GraphStore:
     Reads by key (``crud.get_twin``, the read-before-write of every twin
     mutation, the endpoint checks of relationship writes and the ADT
     ``$dtId`` point query) are answered from the snapshot's twin index,
-    :meth:`twin_docs`: a driver-side ``dt_id`` -> document text map,
-    built on the first read by key with one size check and one collect
-    of ``(dt_id, doc)``, at most once per snapshot.  It is valid while
-    ``twins`` is the frame it was built from.  A twin mutation gives the
-    new snapshot a copy with its own writes, a mutation that keeps
-    ``twins`` shares it, and ``client.commit`` hands it to the store it
-    reloads when that store is the version the commit wrote; every
-    other new store (loads, jobs, ``checkpoint``, ``DELETE``, stores
-    built here) starts without one.  Over :data:`TWIN_INDEX_BYTES` of
+    :meth:`twin_docs`: a driver-side ``dt_id`` -> document text map.
+    The first read by key of a new store runs a Spark filter on
+    ``dt_id``; the second builds the index with one size check and one
+    collect of ``(dt_id, doc)``, at most once per snapshot, so a
+    snapshot read by key only once never pays the build.  The index is
+    valid while ``twins`` is the frame it was built from.  A twin
+    mutation gives the new snapshot a copy with its own writes, a
+    mutation that keeps ``twins`` shares it, and ``client.commit`` hands
+    it to the store it reloads when that store provably holds the same
+    twins; every other new store (loads, jobs, ``checkpoint``,
+    ``DELETE``, stores built here) starts without one.  Stores derived
+    from this one (``crud._replace``, ``client.commit``) keep its count
+    of reads by key, so a chain of mutations each read once still
+    builds on its second read.  Over :data:`TWIN_INDEX_BYTES` of
     document text the index records only that verdict, carried along
     the same paths, and reads by key stay Spark filters on ``dt_id``."""
 
@@ -226,6 +231,9 @@ class GraphStore:
     # the snapshot's TwinIndex, built by twin_docs() or handed over by
     # the mutation that made this snapshot
     _twin_index: TwinIndex | None = field(default=None, repr=False, compare=False)
+    # reads by key of this snapshot and the stores it was derived from
+    # while none had its index built: the second one builds it
+    _key_reads: int = field(default=0, repr=False, compare=False)
     _index_lock: Any = field(
         default_factory=threading.Lock, init=False, repr=False, compare=False
     )
@@ -260,15 +268,20 @@ class GraphStore:
         return idx if idx is not None and idx.twins is self.twins else None
 
     def twin_docs(self) -> dict[str, str] | None:
-        """The twin index: ``dt_id`` -> document text of every twin, or
-        None over :data:`TWIN_INDEX_BYTES` (reads by key stay on Spark).
-        Built on first use (one size check, one collect), at most once
-        however many requests ask at once."""
+        """One read by key's view of the twin index: ``dt_id`` ->
+        document text of every twin, or None when the read runs on
+        Spark — on the first read by key (``_key_reads``) and over
+        :data:`TWIN_INDEX_BYTES`.  The second read builds the index
+        (one size check, one collect), at most once however many
+        requests ask at once."""
         idx = self.built_twin_index()
         if idx is None:
             with self._index_lock:
                 idx = self.built_twin_index()
                 if idx is None:
+                    self._key_reads += 1
+                    if self._key_reads < 2:
+                        return None
                     idx = self._twin_index = TwinIndex.build(self.twins)
         return idx.docs
 

@@ -94,6 +94,10 @@ class ChangeLog:
         self.graph_name = graph_name
         self.events: list[EventData] = []
         self.feed_dir: str | None = None
+        # True while ``events`` hold every change since the last commit:
+        # a drain hands events on uncommitted, and a store swap no event
+        # describes (a job, a reset of the graph) clears it too
+        self.complete = True
         self._txn = 0
         self._seq = 0
 
@@ -181,7 +185,14 @@ class ChangeLog:
 
     def drain(self) -> list[EventData]:
         out, self.events = self.events, []
+        if out:
+            self.complete = False
         return out
+
+    def committed(self) -> None:
+        """Forget the buffered events once they are durably committed."""
+        self.events.clear()
+        self.complete = True
 
     def drain_to_feed(self, feed_dir: str) -> int:
         """Drain the log into an ND-JSON feed directory — the bridge

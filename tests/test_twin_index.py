@@ -2,11 +2,15 @@
 served on the driver.
 
 * a seeded random walk over every kind of store swap keeps the index
-  equal to the twin rows, and gives the answers the Spark path gives
-  (``TWIN_INDEX_BYTES`` forced to 0);
+  equal to the twin rows (one row per ``dt_id``), and gives the answers
+  the Spark path gives (``TWIN_INDEX_BYTES`` forced to 0);
+* the first read by key of a new store is one Spark filter and builds
+  nothing; the second builds the index;
 * on an indexed snapshot a GET and an ADT point query run no Spark job,
-  a PATCH runs no read, a commit hands the index over, and the vertex
-  universe takes |V| from it;
+  a PATCH runs no read, a commit hands the index over (only when the
+  reload holds the same twins), and the vertex universe takes |V| from
+  it;
+* a batch that repeats a ``dt_id`` writes its last document only;
 * over the bound nothing is rebuilt along a chain of mutations;
 * only the two point-query shapes skip the compiler, with the rows,
   token and charge of the compiled path;
@@ -47,7 +51,18 @@ def _twin(i, x=1.0, model="A"):
 
 
 def _rows(store):
-    return dict(store.twins.select("dt_id", "doc").collect())
+    """``dt_id`` -> doc of the twin rows, checking no ``dt_id`` repeats."""
+    rows = store.twins.select("dt_id", "doc").collect()
+    out = dict(rows)
+    assert len(out) == len(rows), "two twin rows share a dt_id"
+    return out
+
+
+def _indexed(store):
+    """``store`` with its twin index built: the second read by key
+    builds it.  Returns the index's documents."""
+    store.twin_docs()
+    return store.twin_docs()
 
 
 def _jobs(spark, group, fn):
@@ -74,7 +89,7 @@ def _page(p):
 
 WALK_OPS = [
     "put", "put", "patch", "patch", "delete", "batch", "rel", "relbatch",
-    "reldel", "commit", "checkpoint", "import", "delete_all",
+    "reldel", "commit", "drain", "checkpoint", "import", "delete_all",
 ]
 
 
@@ -90,6 +105,7 @@ def _walk(spark, tmp_path, seed, steps=20):
             spark, twin_docs=[_twin(i) for i in range(4)], model_docs=MODELS
         )
     )
+    _indexed(c.store)  # later stores carry it, or start fresh
     root = str(tmp_path / "log")
     answers = []
     carried = []
@@ -124,6 +140,7 @@ def _walk(spark, tmp_path, seed, steps=20):
             answers.append(_outcome(lambda: c.delete_digital_twin(POOL[k])))
         elif op == "batch":
             docs = [_twin(rng.randrange(len(POOL)), float(step), model) for _ in range(3)]
+            docs.append(dict(docs[0], x=step + 0.25))  # a repeated id: the last wins
             docs.append({"$dtId": pick(), "$metadata": {"$model": "dtmi:ti:A;1"},
                          "x": "not a number"})
             answers.append(_outcome(lambda: c.create_or_replace_digital_twins(docs, ts=TS)))
@@ -146,6 +163,9 @@ def _walk(spark, tmp_path, seed, steps=20):
             answers.append(_outcome(lambda: c.delete_relationship(src, rid)))
         elif op == "commit":
             answers.append(_outcome(lambda: c.commit(root)))
+        elif op == "drain":
+            # the change pipeline takes the buffered events uncommitted
+            answers.append(len(c.changes.drain()))
         elif op == "checkpoint":
             c.checkpoint()
         elif op == "import":
@@ -205,10 +225,35 @@ def sf_store(spark):
     return load_graph(spark, SF_DIR)
 
 
+def test_first_read_is_a_filter_and_the_second_builds(spark, monkeypatch):
+    builds = _counting_builds(monkeypatch)
+    c = DigitalTwinsSparkClient(
+        GraphStore.from_documents(
+            spark, twin_docs=[_twin(i, float(i)) for i in range(4)], model_docs=MODELS
+        )
+    )
+    patch = [{"op": "replace", "path": "/x", "value": 9.0}]
+    # a snapshot read by key once pays one filter, no build
+    assert c.get_digital_twin("t1")["x"] == 1.0
+    assert not builds and c.store.built_twin_index() is None
+    # a chain of snapshots each read once: the count is passed on, so
+    # the second snapshot's read builds and the rest carry it
+    c = DigitalTwinsSparkClient(
+        GraphStore.from_documents(spark, twin_docs=[_twin(0)], model_docs=MODELS)
+    )
+    c.update_digital_twin("t0", patch, ts=TS)
+    assert not builds and c.store.built_twin_index() is None
+    c.update_digital_twin("t0", patch, ts=TS)
+    assert len(builds) == 1 and c.store.built_twin_index() is not None
+    assert c.get_digital_twin("t0")["x"] == 9.0 and len(builds) == 1
+
+
 def test_indexed_reads_run_no_job(spark, sf_store, tmp_path):
     c = DigitalTwinsSparkClient(crud._replace(sf_store))
     c.registry  # noqa: B018 — the model read, outside the pins
     ids = sorted(_rows(c.store))
+    _, cold = _jobs(spark, "ti-cold-get", lambda: c.get_digital_twin(ids[0]))
+    assert cold >= 1 and c.store.built_twin_index() is None
     _, build = _jobs(spark, "ti-build", lambda: c.get_digital_twin(ids[0]))
     assert build >= 1
     got, n = _jobs(spark, "ti-get", lambda: c.get_digital_twin(ids[1]))
@@ -237,7 +282,7 @@ def test_universe_takes_vertex_count_from_index(spark, sf_store):
     q = "CALL graph.connectedComponents() YIELD node, component RETURN count(*) AS n"
     plain = crud._replace(sf_store)
     indexed = crud._replace(sf_store)
-    indexed.twin_docs()
+    _indexed(indexed)
     ns = []
     for name, snap in (("plain", plain), ("indexed", indexed)):
         c = DigitalTwinsSparkClient(snap)
@@ -260,6 +305,8 @@ def test_over_bound_chain_never_rechecks_size(spark, monkeypatch):
         )
     )
     assert c.get_digital_twin("t0")["x"] == 1.0
+    assert not builds  # the first read is a filter
+    assert c.get_digital_twin("t1")["x"] == 1.0
     assert len(builds) == 1 and c.store._twin_index.docs is None
     c.update_digital_twin("t0", [{"op": "replace", "path": "/x", "value": 2.0}])
     c.create_or_replace_digital_twin("t5", {"$metadata": {"$model": "dtmi:ti:A;1"}, "x": 5.0})
@@ -275,7 +322,7 @@ def test_over_bound_chain_never_rechecks_size(spark, monkeypatch):
 
 def test_carried_index_turns_over_bound_when_it_grows(spark, monkeypatch):
     store = GraphStore.from_documents(spark, twin_docs=[_twin(0)], model_docs=MODELS)
-    size = len(store.twin_docs()["t0"].encode())
+    size = len(_indexed(store)["t0"].encode())
     monkeypatch.setattr(graph_store, "TWIN_INDEX_BYTES", size + 10)
     store2, _, _ = crud.create_twins_batch(
         store, crud.ModelRegistry(MODELS), [_twin(1), _twin(2)], ts=TS
@@ -312,17 +359,20 @@ def test_duplicate_dt_id_fails_loudly(spark):
     store = GraphStore.from_documents(
         spark, twin_docs=[_twin(0), _twin(1), _twin(0, x=2.0)], model_docs=MODELS
     )
+    crud.get_twin(store, "t1")  # the first read is a filter
     with pytest.raises(ValueError, match="t0"):
         crud.get_twin(store, "t1")
 
 
 @pytest.fixture(scope="module")
 def point_client(spark):
-    return DigitalTwinsSparkClient(
+    c = DigitalTwinsSparkClient(
         GraphStore.from_documents(
             spark, twin_docs=[_twin(i, float(i)) for i in range(6)], model_docs=MODELS
         )
     )
+    _indexed(c.store)
+    return c
 
 
 def _compiled(monkeypatch, c, q, n):
@@ -397,3 +447,90 @@ def test_commit_after_unlogged_swap_writes_the_snapshot(spark, tmp_path, swap):
     c.commit(root)
     assert _rows(c.store) == before
     assert c.store.twin_docs() == before
+
+
+def test_batch_repeating_an_id_writes_the_last_doc(spark, tmp_path):
+    c = DigitalTwinsSparkClient(
+        GraphStore.from_documents(spark, twin_docs=[_twin(0)], model_docs=MODELS)
+    )
+    _indexed(c.store)
+    results = c.create_or_replace_digital_twins(
+        [_twin(1, 1.0), _twin(0, 2.0), _twin(1, 3.0)], ts=TS
+    )
+    assert [r["status"] for r in results] == ["ok"] * 3
+    assert c.store.twin_docs() == _rows(c.store)  # one row per dt_id
+    # the events replay the batch in order: the repeat updates the first
+    kinds = [(e.entity_id, e.event_type, (e.old_value or {}).get("x"), e.new_value["x"])
+             for e in c.changes.events]
+    assert kinds == [("t1", "Insert", None, 1.0), ("t0", "Update", 1.0, 2.0),
+                     ("t1", "Update", 1.0, 3.0)]
+    c.checkpoint()  # a fresh store: its index is built from the rows
+    assert c.get_digital_twin("t1")["x"] == 3.0
+    assert c.get_digital_twin("t1")["x"] == 3.0  # the second read builds
+    assert c.store.built_twin_index() is not None
+
+
+def test_commit_after_drain_writes_the_snapshot(spark, tmp_path):
+    """Events the change pipeline drained are not in the next commit's
+    buffer: it writes the full snapshot, so the reload holds them and
+    the index handed to it matches its rows.  (A copy-on-write commit
+    would rewrite only the partition of model B.)"""
+    c = DigitalTwinsSparkClient(
+        GraphStore.from_documents(
+            spark, twin_docs=[_twin(i, model="B") for i in range(3)], model_docs=MODELS
+        )
+    )
+    root = str(tmp_path / "log")
+    c.commit(root)
+    _indexed(c.store)
+    c.create_or_replace_digital_twin("t5", {"$metadata": {"$model": "dtmi:ti:A;1"}, "x": 5.0})
+    assert len(c.changes.drain()) == 1
+    c.update_digital_twin("t0", [{"op": "replace", "path": "/x", "value": 2.0}])
+    before = _rows(c.store)
+    c.commit(root)
+    assert _rows(c.store) == before
+    assert c.store.built_twin_index() is not None
+    assert c.store.twin_docs() == before
+    assert c.get_digital_twin("t5")["x"] == 5.0
+
+
+def test_commit_on_a_version_another_client_wrote_hands_no_index(spark, tmp_path):
+    """A copy-on-write commit on a version this client did not write
+    rewrites only its own events' partitions (model A here), so the
+    reload keeps the other client's model-B twins that this client's
+    index lacks: it gets no index, and reads by key agree with its
+    rows."""
+    root = str(tmp_path / "log")
+    other = DigitalTwinsSparkClient(
+        GraphStore.from_documents(
+            spark, twin_docs=[_twin(i, model="B") for i in range(3)], model_docs=MODELS
+        )
+    )
+    other.commit(root)
+    c = DigitalTwinsSparkClient(
+        GraphStore.from_documents(spark, twin_docs=[_twin(4)], model_docs=MODELS)
+    )
+    _indexed(c.store)
+    c.create_or_replace_digital_twin("t5", {"$metadata": {"$model": "dtmi:ti:A;1"}, "x": 5.0})
+    c.commit(root)
+    assert _indexed(c.store) == _rows(c.store)
+    assert c.get_digital_twin("t0")["x"] == 1.0
+    # the next commit is on this client's own version: handed over
+    c.update_digital_twin("t5", [{"op": "replace", "path": "/x", "value": 6.0}])
+    c.commit(root)
+    assert c.store.built_twin_index() is not None
+    assert c.store.twin_docs() == _rows(c.store)
+
+
+def test_point_query_compiled_on_a_cold_snapshot_reads_the_index_later(spark):
+    c = DigitalTwinsSparkClient(
+        GraphStore.from_documents(
+            spark, twin_docs=[_twin(i, float(i)) for i in range(4)], model_docs=MODELS
+        )
+    )
+    q = "SELECT T FROM DIGITALTWINS T WHERE T.$dtId = 't2'"
+    cold = _page(c.query(q))  # the snapshot's first read by key
+    assert (q, False) in c._plan_cache
+    assert c.get_digital_twin("t1")["x"] == 1.0  # the second builds
+    got, n = _jobs(spark, "ti-point-cached", lambda: _page(c.query(q)))
+    assert n == 0 and got == cold and cold[0][0]["T"]["x"] == 2.0
